@@ -28,6 +28,7 @@ from palletjack_spark.errors import (
     IndexFormatError,
     InvalidSelectionError,
     EncryptedParquetError,
+    ScanCastError,
 )
 from palletjack_spark.session import get_spark, tune_session
 from palletjack_spark.tables import TABLES, load_table, table_path
@@ -52,6 +53,7 @@ __all__ = [
     "IndexFormatError",
     "InvalidSelectionError",
     "EncryptedParquetError",
+    "ScanCastError",
     "get_spark",
     "tune_session",
     "TABLES",

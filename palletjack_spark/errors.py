@@ -26,3 +26,8 @@ class IndexFormatError(PalletJackSparkError):
 class EncryptedParquetError(PalletJackSparkError):
     """Encrypted Parquet metadata is not supported
     (reference palletjack.cc:217-221)."""
+
+
+class ScanCastError(PalletJackSparkError):
+    """A column's values do not fit the Spark type the scan declares for
+    it, e.g. a uint64 past 2**63 read as a Spark LONG."""

@@ -5,7 +5,8 @@ palletjack_cython.pyx:27-67, palletjack.cc:369-616): given a selection of
 row groups and/or columns, produce exactly those rows/columns without
 paying the full-footer cost per read.  Here the "spliced FileMetaData"
 becomes a filtered index DataFrame that drives a pyarrow ``mapInArrow``
-scan (sources/arrow_scan.py).
+scan (sources/arrow_scan.py), or, for a small driver-local selection, a
+pyarrow read on the driver returned as a LocalRelation.
 
 Beyond by-ordinal selection, the index supports *stats-driven* row-group
 pruning (``predicate=``): the same min/max skipping Spark's native source
@@ -124,6 +125,38 @@ def _nan_free(values) -> bool:
     import math
 
     return not any(isinstance(x, float) and math.isnan(x) for x in values)
+
+
+def apply_predicate(df: DataFrame, predicate: Sequence[tuple]) -> DataFrame:
+    """The exact residual filter of a mini-language predicate: pruning
+    only narrows the rows scanned, this makes the result exact."""
+    for col_name, op, *vals in predicate:
+        c = F.col(col_name)
+        if op in ("=", "=="):
+            df = df.where(c == vals[0])
+        elif op == "<":
+            df = df.where(c < vals[0])
+        elif op == "<=":
+            df = df.where(c <= vals[0])
+        elif op == ">":
+            df = df.where(c > vals[0])
+        elif op == ">=":
+            df = df.where(c >= vals[0])
+        elif op == "between":
+            df = df.where(c.between(vals[0], vals[1]))
+        elif op == "in":
+            df = df.where(c.isin(list(vals[0]) if vals else []))
+        elif op in ("!=", "<>"):
+            df = df.where(c != vals[0])
+        elif op == "not_in":
+            df = df.where(~c.isin(list(vals[0]) if vals else []))
+        elif op == "is_null":
+            df = df.where(c.isNull())
+        elif op == "not_null":
+            df = df.where(c.isNotNull())
+        else:
+            raise ValueError(f"Unsupported predicate op: {op}")
+    return df
 
 
 class LocalIndex:
@@ -1055,6 +1088,12 @@ class MetadataIndex:
         (safe-equality path-segment match; everything else via the exact
         residual on the attached column), and data predicates keep using
         row-group stats.
+
+        Transport: a driver-local selection of at most Spark's
+        ``spark.sql.execution.arrow.localRelationThreshold`` bytes (48 MB
+        by default) is read eagerly inside this call (its read errors
+        raise here, not at the action) into a LocalRelation.  Larger
+        selections and catalog-scale indexes scan lazily via mapInArrow.
         """
         schema = self.arrow_schema(files)
         sel = resolve_columns(schema.names, columns, column_indices)
@@ -1200,9 +1239,12 @@ class MetadataIndex:
                     span, span_bytes = [], 0
             if span:
                 tasks.append((cur_file, span))
+            sizes = [nbytes for _f, _rg, nbytes in sel_rows]
             df = scan_tasks(
                 self.spark, tasks, schema, sel, partition_keys=part_keys,
                 row_ranges=row_ranges or None,
+                # an unknown size never counts as small
+                nbytes=None if None in sizes else sum(sizes),
             )
         else:
             # distributed catalog: the pruned plan DataFrame drives the scan
@@ -1237,30 +1279,7 @@ class MetadataIndex:
                     self.spark, plan, schema, sel, partition_keys=part_keys
                 )
         if predicate and apply_residual:
-            for col_name, op, *vals in predicate:
-                c = F.col(col_name)
-                if op in ("=", "=="):
-                    df = df.where(c == vals[0])
-                elif op == "<":
-                    df = df.where(c < vals[0])
-                elif op == "<=":
-                    df = df.where(c <= vals[0])
-                elif op == ">":
-                    df = df.where(c > vals[0])
-                elif op == ">=":
-                    df = df.where(c >= vals[0])
-                elif op == "between":
-                    df = df.where(c.between(vals[0], vals[1]))
-                elif op == "in":
-                    df = df.where(c.isin(list(vals[0]) if vals else []))
-                elif op in ("!=", "<>"):
-                    df = df.where(c != vals[0])
-                elif op == "not_in":
-                    df = df.where(~c.isin(list(vals[0]) if vals else []))
-                elif op == "is_null":
-                    df = df.where(c.isNull())
-                elif op == "not_null":
-                    df = df.where(c.isNotNull())
+            df = apply_predicate(df, predicate)
         if pred_extra:
             df = df.drop(*pred_extra)
         return df

@@ -32,41 +32,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from palletjack_spark.index.builder import build_index
-from palletjack_spark.index.metadata_index import MetadataIndex
+from palletjack_spark.index.metadata_index import MetadataIndex, apply_predicate
 
 #: serializes the session-global partition-inference toggle in the
 #: native-fallback read (see the comment at its use site)
 _INFER_TOGGLE_LOCK = threading.Lock()
-
-
-def _apply_predicate(df: DataFrame, predicate: Sequence[tuple]) -> DataFrame:
-    for col_name, op, *vals in predicate:
-        c = F.col(col_name)
-        if op in ("=", "=="):
-            df = df.where(c == vals[0])
-        elif op == "<":
-            df = df.where(c < vals[0])
-        elif op == "<=":
-            df = df.where(c <= vals[0])
-        elif op == ">":
-            df = df.where(c > vals[0])
-        elif op == ">=":
-            df = df.where(c >= vals[0])
-        elif op == "between":
-            df = df.where(c.between(vals[0], vals[1]))
-        elif op == "in":
-            df = df.where(c.isin(list(vals[0]) if vals else []))
-        elif op in ("!=", "<>"):
-            df = df.where(c != vals[0])
-        elif op == "not_in":
-            df = df.where(~c.isin(list(vals[0]) if vals else []))
-        elif op == "is_null":
-            df = df.where(c.isNull())
-        elif op == "not_null":
-            df = df.where(c.isNotNull())
-        else:
-            raise ValueError(f"Unsupported predicate op: {op}")
-    return df
 
 
 def smart_read(
@@ -260,7 +230,7 @@ def smart_read(
                     ),
                 )
     if predicate:
-        df = _apply_predicate(df, predicate)
+        df = apply_predicate(df, predicate)
     if columns:
         df = df.select(*columns)
     return _decided(df)

@@ -9,9 +9,12 @@ subset to an externally provided session (e.g. the verification driver's).
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
+
+_log = logging.getLogger(__name__)
 
 #: Confs that are safe to set at session-build time only.
 BUILD_CONF = {
@@ -73,8 +76,9 @@ def default_parallelism() -> int:
 
 
 def tune_session(spark: SparkSession, shuffle_partitions: int | None = None) -> SparkSession:
-    """Apply runtime-settable tuning confs; ignore anything the session
-    refuses (e.g. static confs on a running session)."""
+    """Apply runtime-settable tuning confs; a conf the session refuses
+    (e.g. a static conf on a running session) is logged as a warning and
+    skipped."""
     conf = dict(RUNTIME_CONF)
     conf["spark.sql.shuffle.partitions"] = str(
         shuffle_partitions if shuffle_partitions is not None else default_parallelism()
@@ -82,8 +86,8 @@ def tune_session(spark: SparkSession, shuffle_partitions: int | None = None) -> 
     for k, v in conf.items():
         try:
             spark.conf.set(k, v)
-        except Exception:
-            pass
+        except Exception as e:
+            _log.warning("session refused conf %s=%s: %s", k, v, e)
     return spark
 
 

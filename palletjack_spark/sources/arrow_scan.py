@@ -12,9 +12,14 @@ rejects TIMESTAMP(NANOS) columns outright.  This source covers both gaps:
 - one Spark task per (file, row-group span): selection is computed from the
   metadata index (or a single driver-side footer read for ad-hoc paths) and
   shipped to executors as plain task rows — executors never re-parse footers
-  they don't own, and the driver never reads data;
+  they don't own;
 - ``mapInArrow`` streams pyarrow record batches straight into Tungsten with
   zero pandas materialization;
+- a driver-local index selection of at most Spark's
+  ``spark.sql.execution.arrow.localRelationThreshold`` bytes (48 MB by
+  default) skips both: ``scan_tasks`` reads it eagerly on the driver
+  (read errors raise in the call, not at the action) into a
+  LocalRelation, with no Spark job and no Python worker;
 - schema fidelity: timestamp[ns] is cast to Spark-representable
   timestamp[us] (documented truncation, like Spark itself would do if it
   accepted nanos), large_string/large_binary are narrowed, float16 upcast.
@@ -38,7 +43,11 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from palletjack_spark.errors import EncryptedParquetError, InvalidSelectionError
+from palletjack_spark.errors import (
+    EncryptedParquetError,
+    InvalidSelectionError,
+    ScanCastError,
+)
 
 # ---------------------------------------------------------------------------
 # schema conversion
@@ -346,10 +355,16 @@ def _read_span_batches(
             for i, f in enumerate(target):
                 col = rb.column(i)
                 if col.type != f.type:
-                    col = col.cast(
-                        f.type,
-                        safe=pa.types.is_unsigned_integer(col.type),
-                    )
+                    try:
+                        col = col.cast(
+                            f.type,
+                            safe=pa.types.is_unsigned_integer(col.type),
+                        )
+                    except pa.ArrowInvalid as e:
+                        raise ScanCastError(
+                            f"cannot cast column '{f.name}' from {col.type}"
+                            f" to {f.type} in {path}: {e}"
+                        ) from e
                 arrays.append(col)
             rb = pa.RecordBatch.from_arrays(arrays, schema=target)
         if pvals is not None:
@@ -420,13 +435,20 @@ def scan_tasks(
     batch_size: int = 65536,
     partition_keys: list[str] | None = None,
     row_ranges: dict[tuple[str, int], list[tuple[int, int]]] | None = None,
+    nbytes: int | None = None,
 ) -> DataFrame:
     """Run (path, row_groups) scan tasks via mapInArrow.
 
     ``row_ranges`` maps (path, row_group) to surviving [start, end) row
     ranges from the page index (q03h tier, row granularity): those row
     groups are sliced to the ranges before rows enter Spark — a pure
-    superset restriction, identical results with the residual filter."""
+    superset restriction, identical results with the residual filter.
+
+    ``nbytes``: the selection's total row-group bytes, when known.  At
+    most Spark's ``spark.sql.execution.arrow.localRelationThreshold``
+    (48 MB by default), the spans are read eagerly on the driver inside
+    this call (read errors raise here, not at the action) into a
+    LocalRelation: no Spark job, no Python worker."""
     file_schema = schema
     if columns is not None:
         file_schema = pa.schema([schema.field(c) for c in columns])
@@ -445,6 +467,23 @@ def scan_tasks(
     cols = list(columns) if columns is not None else None
 
     row_ranges = row_ranges or {}
+    if nbytes is not None and nbytes <= spark._jconf.arrowLocalRelationThreshold():
+        out_schema = pa.schema(
+            list(target) + [pa.field(k, pa.string()) for k in partition_keys or ()]
+        )
+        batches = [
+            rb
+            for p, rgs in tasks
+            for rb in _read_span_batches(
+                p, rgs, cols, target, batch_size, partition_keys,
+                {rg: row_ranges[(p, rg)] for rg in rgs if (p, rg) in row_ranges},
+            )
+        ]
+        if not batches:  # pyspark cannot build a relation from zero chunks
+            batches = [pa.RecordBatch.from_pylist([], schema=out_schema)]
+        return spark.createDataFrame(
+            pa.Table.from_batches(batches, schema=out_schema), spark_schema
+        )
     task_rows = [
         (
             p,

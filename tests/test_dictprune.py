@@ -290,12 +290,12 @@ def test_smart_read_routes_to_indexed_scan_via_dictionary(spark, tmp_path):
     )
     assert got == [("user_0005", 5)]
     # the routing decision itself: kept/total via dictionaries = 1/4,
-    # under the 0.5 threshold -> indexed (observable as the mapInArrow
-    # scan rather than the native FileScan)
+    # under the 0.5 threshold -> indexed (observable as the driver-read
+    # LocalTableScan rather than the native FileScan)
     plan = smart_read(
         spark, path, predicate=[("tag", "=", "user_0005")], index=idx
     )._jdf.queryExecution().executedPlan().toString()
-    assert "MapInArrow" in plan or "mapInArrow" in plan or "PythonMapInArrow" in plan, plan
+    assert "LocalTableScan" in plan and "Scan parquet" not in plan, plan
 
 
 def test_in_predicate_prunes_stats_and_dictionaries(spark, tmp_path):

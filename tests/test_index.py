@@ -495,9 +495,9 @@ def test_compaction_reduces_file_count(spark):
 
 def test_smart_read_routes_by_selectivity(spark, tmp_path):
     """smart_read: a stats-selective predicate over a sorted multi-row-group
-    file routes to the indexed mapInArrow scan; a keep-everything predicate
-    routes to the native parquet source.  Both return exactly the rows a
-    plain scan+filter would."""
+    file routes to the indexed scan (read on the driver at this size); a
+    keep-everything predicate routes to the native parquet source.  Both
+    return exactly the rows a plain scan+filter would."""
     from palletjack_spark.index import smart_read
     from palletjack_spark.tables import load_table
 
@@ -523,7 +523,7 @@ def test_smart_read_routes_by_selectivity(spark, tmp_path):
     plan_broad = d_broad._sc._jvm.PythonSQLUtils.explainString(
         d_broad._jdf.queryExecution(), "simple"
     )
-    assert "MapInArrow" in plan_tight and "Scan parquet" not in plan_tight
+    assert "LocalTableScan" in plan_tight and "Scan parquet" not in plan_tight
     assert "Scan parquet" in plan_broad and "MapInArrow" not in plan_broad
 
     expect_tight = (

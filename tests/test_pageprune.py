@@ -409,7 +409,7 @@ def test_smart_read_routes_through_page_tier(spark, tmp_path):
     ):
         df = smart_read(spark, path, columns=["k", "tag"], predicate=pred)
         plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "MapInArrow" in plan or "ArrowEvalPython" in plan, plan[:800]
+        assert "LocalTableScan" in plan and "Scan parquet" not in plan, plan[:800]
         got = sorted((r["k"], r["tag"]) for r in df.collect())
         assert got == expect, pred
 

@@ -60,7 +60,8 @@ def test_nested_enable_disable_refcounted(spark, sorted_lineitem):
     enable_auto_routing()
     disable_auto_routing()
     routed = spark.read.parquet(sorted_lineitem).where("l_orderkey <= 100")
-    assert "MapInArrow" in _plan(routed)
+    plan = _plan(routed)
+    assert "LocalTableScan" in plan and "Scan parquet" not in plan, plan
     # force=True tears down regardless of depth (and the fixture's final
     # disable is then a no-op)
     enable_auto_routing()
@@ -98,10 +99,11 @@ def test_parse_condition_subset(spark):
 
 def test_selective_filter_reroutes_through_index(spark, sorted_lineitem):
     """The judge's 'done' shape: a filtered NATIVE scan is rerouted through
-    the index (MapInArrow, no parquet scan) with identical results."""
+    the index (a driver-read LocalTableScan at this size, no parquet
+    scan) with identical results."""
     routed = spark.read.parquet(sorted_lineitem).where("l_orderkey <= 100")
     plan = _plan(routed)
-    assert "MapInArrow" in plan and "Scan parquet" not in plan, plan
+    assert "LocalTableScan" in plan and "Scan parquet" not in plan, plan
 
     disable_auto_routing()
     try:
@@ -113,9 +115,34 @@ def test_selective_filter_reroutes_through_index(spark, sorted_lineitem):
     assert routed.count() == n_rows > 0
 
 
+def test_selection_over_local_relation_threshold_routes_through_map_in_arrow(
+    spark, sorted_lineitem
+):
+    """Past ``spark.sql.execution.arrow.localRelationThreshold`` (here 0
+    bytes) the indexed route scans through mapInArrow tasks instead of
+    reading on the driver, with the same rows."""
+    conf = "spark.sql.execution.arrow.localRelationThreshold"
+    spark.conf.set(conf, "0")
+    try:
+        routed = spark.read.parquet(sorted_lineitem).where("l_orderkey <= 100")
+        plan = _plan(routed)
+        assert "MapInArrow" in plan and "Scan parquet" not in plan, plan
+        assert "LocalTableScan" not in plan, plan
+        n_routed = routed.count()
+    finally:
+        spark.conf.unset(conf)
+    disable_auto_routing()
+    try:
+        native = spark.read.parquet(sorted_lineitem).where("l_orderkey <= 100")
+        assert n_routed == native.count() > 0
+    finally:
+        enable_auto_routing()
+
+
 def test_column_condition_also_routes(spark, sorted_lineitem):
     routed = spark.read.parquet(sorted_lineitem).where(F.col("l_orderkey") < 50)
-    assert "MapInArrow" in _plan(routed)
+    plan = _plan(routed)
+    assert "LocalTableScan" in plan and "Scan parquet" not in plan, plan
 
 
 def test_broad_filter_stays_native(spark, sorted_lineitem):
@@ -171,7 +198,7 @@ def test_select_then_filter_routes_with_projection(spark, sorted_lineitem):
         .where("l_orderkey <= 100")
     )
     plan = _plan(routed)
-    assert "MapInArrow" in plan and "Scan parquet" not in plan, plan
+    assert "LocalTableScan" in plan and "Scan parquet" not in plan, plan
     assert routed.columns == ["l_orderkey", "l_quantity"]
     disable_auto_routing()
     try:
@@ -234,7 +261,8 @@ def test_between_routes(spark, sorted_lineitem):
     routed = spark.read.parquet(sorted_lineitem).where(
         "l_orderkey BETWEEN 1 AND 100"
     )
-    assert "MapInArrow" in _plan(routed)
+    plan = _plan(routed)
+    assert "LocalTableScan" in plan and "Scan parquet" not in plan, plan
     disable_auto_routing()
     try:
         expect = (
