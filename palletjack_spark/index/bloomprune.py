@@ -43,27 +43,35 @@ nor DuckDB 1.0 can write them.  Files stay fully standard: parquet-mr
 Scale shape: probe I/O is one footer (cached) plus one
 ``bloom_filter_length`` read (typically 8-32 KB) per surviving
 (file, chunk) — no data pages; embarrassingly parallel per chunk, and
-the catalog-scale plan variant probes executor-side
-(:func:`bloom_prune_plan`), never materializing the selection on the
-driver.
+the catalog-scale plan probes executor-side (:func:`value_prune_plan`),
+never materializing the selection on the driver.  Each chunk's filter
+offsets and parsed bitset live in its footer's memo
+(``footer_splice.footer_memo``): probe facts last as long as the
+footer's memo entry, so repeated reads of an unchanged file re-read no
+bitset.
 """
 
 from __future__ import annotations
 
 import struct
+import sys
+from array import array
 
 from palletjack_spark.index.dictprune import (
     _IDENTITY_LOGICAL,
     _equality_conjuncts,
+    _need,
 )
 from palletjack_spark.index.footer_splice import (
+    FooterProber,
     _decode_value,
     _encode_field_header,
-    _list_elem_spans,
     _span_get,
     _struct_field_spans,
     _write_zigzag,
+    chunk_fields,
     footer_spans,
+    int_field,
     read_footer_bytes,
 )
 
@@ -71,7 +79,6 @@ __all__ = [
     "BloomProber",
     "add_bloom_filters",
     "add_bloom_filters_dataset",
-    "bloom_prune_plan",
     "bloom_prune_rows",
     "value_prune_plan",
     "xxh64",
@@ -195,56 +202,19 @@ def _insert(words, h: int) -> None:
 # --------------------------------------------------------------------------
 
 
-def _column_meta_spans(footer: bytes, rg_idx: int, col_idx: int):
-    """(ColumnMetaData field spans, struct start, struct end) for one
-    (row group, column), or None on any layout surprise."""
-    try:
-        _fields, rg_elems = footer_spans(footer)
-        if not (0 <= rg_idx < len(rg_elems)):
-            return None
-        cols_span = _span_get(rg_elems[rg_idx], 1)  # RowGroup.columns
-        if cols_span is None:
-            return None
-        _etype, spans, _ = _list_elem_spans(footer, cols_span[1])
-        if not (0 <= col_idx < len(spans)):
-            return None
-        cc_fields, _ = _struct_field_spans(footer, spans[col_idx][0])
-        md_span = _span_get(cc_fields, 3)  # ColumnChunk.meta_data
-        if md_span is None:
-            return None
-        start = md_span[1]
-        md_fields, end = _struct_field_spans(footer, start)
-        return md_fields, start, end
-    except Exception:
-        return None
-
-
 def bloom_offsets(
     footer: bytes, rg_idx: int, col_idx: int
 ) -> tuple[int, int | None] | None:
     """(bloom_filter_offset, bloom_filter_length|None) of a column chunk,
     or None when the chunk carries no bloom filter (the common case —
     absence must KEEP the row group)."""
-    got = _column_meta_spans(footer, rg_idx, col_idx)
-    if got is None:
+    got = chunk_fields(footer, rg_idx, col_idx)
+    if got is None or got[1] is None:
         return None
-    md_fields, _s, _e = got
-    off = _span_get(md_fields, 14)  # ColumnMetaData.bloom_filter_offset
-    if off is None:
+    offset = int_field(footer, got[1], 14)  # bloom_filter_offset
+    if offset is None:
         return None
-    try:
-        offset = _decode_value(footer, off[1], off[0])[0]
-        ln_span = _span_get(md_fields, 15)  # bloom_filter_length
-        length = (
-            _decode_value(footer, ln_span[1], ln_span[0])[0]
-            if ln_span is not None
-            else None
-        )
-        if not isinstance(offset, int) or offset < 0:
-            return None
-        return offset, length if isinstance(length, int) and length > 0 else None
-    except Exception:
-        return None
+    return offset, int_field(footer, got[1], 15) or None  # bloom_filter_length
 
 
 #: sanity cap on a single bitset read (the spec's own maximum)
@@ -252,7 +222,8 @@ _MAX_BITSET = 128 * 1024 * 1024
 
 
 def read_bloom(path: str, offset: int, length: int | None):
-    """Parse one split-block bloom filter into its word tuple, or None
+    """Parse one split-block bloom filter into its 32-bit words as an
+    ``array("I")`` (so a cached filter costs its on-disk size), or None
     when the header is missing/foreign (non-BLOCK algorithm, non-XXHASH,
     compressed — nothing standard writes those today) or anything fails:
     unknown always keeps."""
@@ -293,16 +264,12 @@ def read_bloom(path: str, offset: int, length: int | None):
                 bits = raw[payload : payload + num_bytes]
         if len(bits) != num_bytes:
             return None
-        return struct.unpack(f"<{num_bytes >> 2}I", bits)
+        words = array("I", bits)
+        if sys.byteorder == "big":
+            words.byteswap()  # the bitset's words are little-endian
+        return words
     except Exception:
         return None
-
-
-def _need(fields, fid):
-    span = _span_get(fields, fid)
-    if span is None:
-        raise KeyError(fid)
-    return span[1], span[0]
 
 
 # --------------------------------------------------------------------------
@@ -358,41 +325,20 @@ def _probe_bytes(value, physical_type: str, logical_type: str | None):
 # --------------------------------------------------------------------------
 
 
-class BloomProber:
-    """Memoizing prober for one planning pass: footers and parsed
-    bitsets are each read at most once per (file, offset) — a
-    multi-row-group file costs one footer read plus one small bitset
-    read per probed chunk."""
-
-    def __init__(self) -> None:
-        self._footers: dict[str, bytes | None] = {}
-        self._blooms: dict[tuple, object] = {}
-        self._offsets: dict[tuple, tuple | None] = {}
-
-    def _footer(self, path: str) -> bytes | None:
-        if path not in self._footers:
-            try:
-                self._footers[path] = read_footer_bytes(path)
-            except Exception:
-                self._footers[path] = None
-        return self._footers[path]
+class BloomProber(FooterProber):
+    """Bloom prober: each chunk's filter offsets and parsed bitset are
+    read at most once per (footer, chunk), in the footer's memo — later
+    passes over an unchanged file reuse them."""
 
     def _bloom(self, path: str, rg_idx: int, col_idx: int):
-        okey = (path, rg_idx, col_idx)
-        if okey not in self._offsets:
-            footer = self._footer(path)
-            self._offsets[okey] = (
-                bloom_offsets(footer, rg_idx, col_idx)
-                if footer is not None
-                else None
-            )
-        off = self._offsets[okey]
-        if off is None:
+        footer, memo = self._memo(path, "bloom")
+        if memo is None:
             return None
-        bkey = (path, off[0])
-        if bkey not in self._blooms:
-            self._blooms[bkey] = read_bloom(path, off[0], off[1])
-        return self._blooms[bkey]
+        key = (rg_idx, col_idx)
+        if key not in memo:
+            off = bloom_offsets(footer, rg_idx, col_idx)
+            memo[key] = read_bloom(path, *off) if off is not None else None
+        return memo[key]
 
     def can_match(
         self, path: str, rg_idx: int, col_idx: int, col_meta: dict, value
@@ -456,66 +402,6 @@ def bloom_prune_rows(
     return out
 
 
-def bloom_prune_plan(plan, predicate):
-    """Catalog-scale variant: filter a pruned PLAN DataFrame (file,
-    row_group, total_byte_size, columns) by probing bloom filters
-    EXECUTOR-side — same contract as ``dictprune.dict_prune_plan``: the
-    selection never touches the driver, each task's prober memoizes
-    footers/bitsets, and the scan that follows re-opens the same files.
-    Without equality conjuncts the input returns untouched."""
-    conj = _equality_conjuncts(predicate)
-    if not conj:
-        return plan
-
-    import pyarrow as pa
-
-    from palletjack_spark.index.dictprune import (
-        _VALUE_META_FIELDS,
-        meta_from_row,
-        plan_meta_columns,
-    )
-
-    meta_cols = plan_meta_columns(
-        plan, [c for c, _v in conj], "pj", _VALUE_META_FIELDS
-    )
-    sel = plan.select("file", "row_group", "total_byte_size", *meta_cols)
-    out_schema = "file string, row_group int, total_byte_size long"
-    out_arrow = pa.schema(
-        [("file", pa.string()), ("row_group", pa.int32()),
-         ("total_byte_size", pa.int64())]
-    )
-    values = [vs for _c, vs in conj]
-
-    def probe(batches):
-        prober = BloomProber()
-        for b in batches:
-            kept = []
-            for r in b.to_pylist():
-                keep = True
-                for i, cand in enumerate(values):
-                    cix = r[f"pj_cix_{i}"]
-                    if cix is None or cix < 0:
-                        continue
-                    meta = meta_from_row(r, "pj", i, _VALUE_META_FIELDS)
-                    if _conjunct_prunes(
-                        prober, r["file"], r["row_group"], int(cix),
-                        meta, cand,
-                    ):
-                        keep = False
-                        break
-                if keep:
-                    kept.append(
-                        {
-                            "file": r["file"],
-                            "row_group": r["row_group"],
-                            "total_byte_size": r["total_byte_size"],
-                        }
-                    )
-            yield pa.RecordBatch.from_pylist(kept, schema=out_arrow)
-
-    return sel.mapInArrow(probe, out_schema)
-
-
 def value_prune_plan(plan, predicate, explain: bool = False):
     """Combined executor-side value-level pruning in ONE mapInArrow pass:
     the dictionary tier (equality + exclusion —
@@ -526,7 +412,7 @@ def value_prune_plan(plan, predicate, explain: bool = False):
     conjuncts the first two tiers can't).  One pass instead of three
     keeps the catalog plan a single pipelined stage, and the probers
     share the per-task footer reads through the footer cache.  Same
-    contract as the single-tier variants: unknown keeps, the selection
+    contract as the driver-side tiers: unknown keeps, the selection
     never touches the driver, output columns are (file, row_group,
     total_byte_size, pj_ranges).
 
@@ -538,8 +424,6 @@ def value_prune_plan(plan, predicate, explain: bool = False):
     from pyspark.sql import functions as F
 
     from palletjack_spark.index.dictprune import (
-        _DICT_META_FIELDS,
-        _VALUE_META_FIELDS,
         DictionaryProber,
         _conjunct_prunes as _dict_conjunct_prunes,
         _dict_conjuncts,
@@ -571,8 +455,8 @@ def value_prune_plan(plan, predicate, explain: bool = False):
     import pyarrow as pa
 
     meta_cols = plan_meta_columns(
-        plan, [c for c, _v, _m in conj], "pj", _DICT_META_FIELDS
-    ) + plan_meta_columns(plan, page_cols, "pg", _VALUE_META_FIELDS)
+        plan, [c for c, _v, _m in conj], "pj"
+    ) + plan_meta_columns(plan, page_cols, "pg")
     has_nrows = "num_rows" in plan.columns
     nrows_col = (
         [F.col("num_rows").alias("pg_nrows")]
@@ -617,7 +501,7 @@ def value_prune_plan(plan, predicate, explain: bool = False):
                     cix = r[f"pj_cix_{i}"]
                     if cix is None or cix < 0:
                         continue
-                    meta = meta_from_row(r, "pj", i, _DICT_META_FIELDS)
+                    meta = meta_from_row(r, "pj", i)
                     if _dict_conjunct_prunes(
                         dict_prober, r["file"], r["row_group"], int(cix),
                         meta, cand, mode,
@@ -637,7 +521,7 @@ def value_prune_plan(plan, predicate, explain: bool = False):
                     page_meta = {
                         c: (
                             r[f"pg_cix_{j}"],
-                            meta_from_row(r, "pg", j, _VALUE_META_FIELDS),
+                            meta_from_row(r, "pg", j),
                         )
                         for j, c in enumerate(page_cols)
                     }
@@ -861,10 +745,10 @@ def add_bloom_filters(
     # everything else — compact-thrift values are position-independent)
     edits = []  # (start, end, replacement) over the footer bytes
     for (rg_idx, col_idx), (rel, ln) in placed.items():
-        got = _column_meta_spans(footer, rg_idx, col_idx)
-        if got is None:
+        got = chunk_fields(footer, rg_idx, col_idx)
+        if got is None or got[1] is None:
             raise _ISE("unparseable ColumnMetaData during bloom splice")
-        md_fields, start, end = got
+        _cc, md_fields, start, end = got
         new = bytearray()
         prev = 0
         emitted = False

@@ -31,9 +31,12 @@ applies downstream.
 Scale shape: the probe I/O is bounded by (surviving row groups ×
 dictionary page size), reads no data pages, and is embarrassingly
 parallel per chunk.  The driver-local read path (≤ 32 files) probes on
-the driver with per-(file, offset) memoization; catalog-scale plans can
-ship the same probe into the scan tasks — the plan rows already carry
-every offset it needs.
+the driver; catalog-scale plans run the same probe in the scan tasks
+(``bloomprune.value_prune_plan``).  The page offsets and codec come from
+the file's own footer, and each chunk's encoding verdict and decoded
+dictionary live in that footer's memo (``footer_splice.footer_memo``):
+probe facts last as long as the footer's memo entry, so repeated reads
+of an unchanged file re-read no dictionary page.
 """
 
 from __future__ import annotations
@@ -41,12 +44,13 @@ from __future__ import annotations
 import struct
 
 from palletjack_spark.index.footer_splice import (
+    FooterProber,
     _decode_value,
     _list_elem_spans,
     _span_get,
     _struct_field_spans,
-    footer_spans,
-    read_footer_bytes,
+    chunk_fields,
+    int_field,
 )
 
 #: parquet PageType enum
@@ -55,32 +59,11 @@ _PAGE_DATA, _PAGE_INDEX, _PAGE_DICT, _PAGE_DATA_V2 = 0, 1, 2, 3
 _ENC_PLAIN = 0
 _ENC_PLAIN_DICT = 2
 _ENC_RLE_DICT = 8
-#: parquet CompressionCodec enum -> pyarrow codec name (None = uncompressed;
-#: LZO (3) has no pyarrow codec and maps to unsupported)
-_CODEC_NAMES = {1: "snappy", 2: "gzip", 4: "brotli", 5: "lz4", 6: "zstd", 7: "lz4_raw"}
-
-
-def _column_meta_fields(footer: bytes, rg_idx: int, col_idx: int):
-    """Span list of ColumnMetaData fields for (row group, column), or
-    None when the ordinals are out of range or the layout is unexpected."""
-    try:
-        _fields, rg_elems = footer_spans(footer)
-        if not (0 <= rg_idx < len(rg_elems)):
-            return None
-        cols_span = _span_get(rg_elems[rg_idx], 1)  # RowGroup.columns
-        if cols_span is None:
-            return None
-        _etype, spans, _ = _list_elem_spans(footer, cols_span[1])
-        if not (0 <= col_idx < len(spans)):
-            return None
-        cc_fields, _ = _struct_field_spans(footer, spans[col_idx][0])
-        md_span = _span_get(cc_fields, 3)  # ColumnChunk.meta_data
-        if md_span is None:
-            return None
-        md_fields, _ = _struct_field_spans(footer, md_span[1])
-        return md_fields
-    except Exception:
-        return None
+#: parquet CompressionCodec enum, by value
+_CODECS = ("UNCOMPRESSED", "SNAPPY", "GZIP", "LZO", "BROTLI", "LZ4", "ZSTD", "LZ4_RAW")
+#: codec name -> pyarrow codec name (LZO has no pyarrow codec: unsupported)
+_CODEC_NAMES = {"SNAPPY": "snappy", "GZIP": "gzip", "BROTLI": "brotli",
+                "LZ4": "lz4", "ZSTD": "zstd", "LZ4_RAW": "lz4_raw"}
 
 
 def fully_dict_encoded(footer: bytes, rg_idx: int, col_idx: int) -> bool | None:
@@ -88,7 +71,8 @@ def fully_dict_encoded(footer: bytes, rg_idx: int, col_idx: int) -> bool | None:
     dictionary-encoded; False when a data page provably is not; None when
     the writer omitted encoding_stats (or the footer doesn't parse) —
     callers must treat None as "cannot prune"."""
-    md_fields = _column_meta_fields(footer, rg_idx, col_idx)
+    got = chunk_fields(footer, rg_idx, col_idx)
+    md_fields = got[1] if got is not None else None
     if md_fields is None:
         return None
     es_span = _span_get(md_fields, 13)  # ColumnMetaData.encoding_stats
@@ -163,10 +147,7 @@ def read_dictionary(
         else:
             import pyarrow as pa
 
-            name = _CODEC_NAMES.get(
-                {"SNAPPY": 1, "GZIP": 2, "BROTLI": 4, "LZ4": 5, "ZSTD": 6,
-                 "LZ4_RAW": 7}.get(codec, -1)
-            )
+            name = _CODEC_NAMES.get(codec)
             if name is None:
                 return None
             buf = pa.Codec(name).decompress(page, uncompressed)
@@ -249,24 +230,11 @@ def _probe_value(value, physical_type: str, logical_type: str | None):
     return None
 
 
-class DictionaryProber:
-    """Memoizing prober for one planning pass: footers, encoding
-    verdicts, and decoded dictionaries are each read at most once per
-    (file, chunk), so a multi-row-group file costs one footer read plus
-    one tiny page read per surviving chunk."""
-
-    def __init__(self) -> None:
-        self._footers: dict[str, bytes | None] = {}
-        self._dicts: dict[tuple, object] = {}
-        self._complete: dict[tuple, bool | None] = {}
-
-    def _footer(self, path: str) -> bytes | None:
-        if path not in self._footers:
-            try:
-                self._footers[path] = read_footer_bytes(path)
-            except Exception:
-                self._footers[path] = None
-        return self._footers[path]
+class DictionaryProber(FooterProber):
+    """Dictionary prober: encoding verdicts and decoded dictionaries are
+    read at most once per (footer, chunk), in the footer's memo — later
+    passes over an unchanged file reuse them, so a warm probe reads no
+    file bytes at all."""
 
     def can_match(
         self, path: str, rg_idx: int, col_idx: int, col_meta: dict, value
@@ -284,30 +252,17 @@ class DictionaryProber:
         return probe in d
 
     def _dictionary(self, path: str, rg_idx: int, col_idx: int, col_meta: dict):
-        """The chunk's decoded dictionary as a set, or None when the chunk
-        isn't provably fully dictionary-encoded or the page can't be read."""
-        ckey = (path, rg_idx, col_idx)
-        if ckey not in self._complete:
-            footer = self._footer(path)
-            self._complete[ckey] = (
-                fully_dict_encoded(footer, rg_idx, col_idx)
-                if footer is not None
-                else None
-            )
-        if self._complete[ckey] is not True:
+        """The chunk's decoded dictionary as a frozenset, or None when the
+        chunk isn't provably fully dictionary-encoded or the page can't be
+        read."""
+        footer, memo = self._memo(path, "dictionary")
+        if memo is None:
             return None
-        dkey = (path, col_meta.get("dictionary_page_offset"))
-        if dkey not in self._dicts:
-            self._dicts[dkey] = read_dictionary(
-                path,
-                col_meta.get("dictionary_page_offset"),
-                col_meta.get("data_page_offset"),
-                col_meta.get("codec"),
-                col_meta.get("physical_type"),
-            )
-            if self._dicts[dkey] is not None:
-                self._dicts[dkey] = set(self._dicts[dkey])
-        return self._dicts[dkey]
+        ptype = col_meta.get("physical_type")
+        key = (rg_idx, col_idx, ptype)
+        if key not in memo:
+            memo[key] = _chunk_dictionary(path, footer, rg_idx, col_idx, ptype)
+        return memo[key]
 
     def all_excluded(
         self, path: str, rg_idx: int, col_idx: int, col_meta: dict, values
@@ -331,6 +286,24 @@ class DictionaryProber:
         if d is None:
             return None
         return d.issubset(set(probes))
+
+
+def _chunk_dictionary(path, footer, rg_idx, col_idx, physical_type):
+    """One chunk's dictionary values as a frozenset, or None.  The page
+    offsets and the codec come from the footer's own ColumnMetaData, so
+    the result is a function of the footer and the file bytes alone."""
+    if fully_dict_encoded(footer, rg_idx, col_idx) is not True:
+        return None
+    md = chunk_fields(footer, rg_idx, col_idx)[1]
+    codec = int_field(footer, md, 4)  # ColumnMetaData.codec
+    values = read_dictionary(
+        path,
+        int_field(footer, md, 11),  # dictionary_page_offset
+        int_field(footer, md, 9),  # data_page_offset
+        _CODECS[codec] if codec is not None and codec < len(_CODECS) else "?",
+        physical_type,
+    )
+    return frozenset(values) if values is not None else None
 
 
 def _equality_conjuncts(predicate) -> list[tuple[str, list]]:
@@ -416,31 +389,16 @@ def dict_prune_rows(
     return out
 
 
-#: column-chunk metadata the DICTIONARY tier's executor probe needs
-_DICT_META_FIELDS = (
-    "dictionary_page_offset",
-    "data_page_offset",
-    "codec",
-    "physical_type",
-    "logical_type",
-)
-#: the subset the bloom/page tiers need (offsets come from the footer)
-_VALUE_META_FIELDS = ("physical_type", "logical_type")
-_FIELD_SHORT = {
-    "dictionary_page_offset": "dpo",
-    "data_page_offset": "dao",
-    "codec": "codec",
-    "physical_type": "ptype",
-    "logical_type": "ltype",
-}
+#: column-chunk metadata the executor-side value probes need, with its
+#: plan-column short names (offsets and codecs come from the footer)
+_META_SHORT = {"physical_type": "ptype", "logical_type": "ltype"}
 
 
-def plan_meta_columns(plan, col_names, prefix: str, fields) -> list:
+def plan_meta_columns(plan, col_names, prefix: str) -> list:
     """Per-conjunct column-chunk metadata as FLAT plan columns — the
-    shared builder behind every executor-side value-pruning plan
-    (dict_prune_plan, bloom_prune_plan, value_prune_plan; previously
-    triplicated, round-13 deferral).  For each probed column name the
-    requested ``fields`` surface as ``{prefix}_{short}_{i}`` plus the
+    builder behind the executor-side value-pruning plan
+    (``bloomprune.value_prune_plan``).  For each probed column name the
+    ``_META_SHORT`` fields surface as ``{prefix}_{short}_{i}`` plus the
     chunk ordinal ``{prefix}_cix_{i}``;
     :func:`meta_from_row` reassembles the probe-side dict.
 
@@ -462,13 +420,13 @@ def plan_meta_columns(plan, col_names, prefix: str, fields) -> list:
         match = F.get(
             F.filter("columns", lambda c: c["name"] == F.lit(col_name)), 0
         )
-        for f in fields:
+        for f, short in _META_SHORT.items():
             col = (
                 F.lit(None).cast("string")
                 if f == "logical_type" and not has_ltype
                 else match[f]
             )
-            out.append(col.alias(f"{prefix}_{_FIELD_SHORT[f]}_{i}"))
+            out.append(col.alias(f"{prefix}_{short}_{i}"))
         out.append(
             (
                 F.array_position(
@@ -480,66 +438,7 @@ def plan_meta_columns(plan, col_names, prefix: str, fields) -> list:
     return out
 
 
-def meta_from_row(r: dict, prefix: str, i: int, fields) -> dict:
+def meta_from_row(r: dict, prefix: str, i: int) -> dict:
     """Probe-side inverse of :func:`plan_meta_columns`: the flat row's
     ``{prefix}_*_{i}`` values as the chunk-meta dict the probers take."""
-    return {f: r[f"{prefix}_{_FIELD_SHORT[f]}_{i}"] for f in fields}
-
-
-def dict_prune_plan(plan, predicate):
-    """Catalog-scale variant: filter a pruned PLAN DataFrame (file,
-    row_group, total_byte_size, columns) by probing dictionaries
-    EXECUTOR-side — the selection never touches the driver, matching
-    ``scan_plan``'s contract.  Each task's prober memoizes footers and
-    dictionary pages, and the scan that follows re-opens the same files,
-    so the probe's footer read is amortized against work the scan pays
-    anyway; the page reads are the tiny price for skipping whole row
-    groups.  Returns a plan with the same (file, row_group,
-    total_byte_size) columns; without equality conjuncts it is the
-    input, untouched."""
-    conj = _dict_conjuncts(predicate)
-    if not conj:
-        return plan
-
-    import pyarrow as pa
-
-    meta_cols = plan_meta_columns(
-        plan, [c for c, _v, _m in conj], "pj", _DICT_META_FIELDS
-    )
-    sel = plan.select("file", "row_group", "total_byte_size", *meta_cols)
-    out_schema = "file string, row_group int, total_byte_size long"
-    out_arrow = pa.schema(
-        [("file", pa.string()), ("row_group", pa.int32()),
-         ("total_byte_size", pa.int64())]
-    )
-    values = [(vs, mode) for _c, vs, mode in conj]
-
-    def probe(batches):
-        prober = DictionaryProber()
-        for b in batches:
-            rows = b.to_pylist()
-            kept = []
-            for r in rows:
-                keep = True
-                for i, (cand, mode) in enumerate(values):
-                    cix = r[f"pj_cix_{i}"]
-                    if cix is None or cix < 0:
-                        continue
-                    meta = meta_from_row(r, "pj", i, _DICT_META_FIELDS)
-                    if _conjunct_prunes(
-                        prober, r["file"], r["row_group"], int(cix),
-                        meta, cand, mode,
-                    ):
-                        keep = False
-                        break
-                if keep:
-                    kept.append(
-                        {
-                            "file": r["file"],
-                            "row_group": r["row_group"],
-                            "total_byte_size": r["total_byte_size"],
-                        }
-                    )
-            yield pa.RecordBatch.from_pylist(kept, schema=out_arrow)
-
-    return sel.mapInArrow(probe, out_schema)
+    return {f: r[f"{prefix}_{short}_{i}"] for f, short in _META_SHORT.items()}

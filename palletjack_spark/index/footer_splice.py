@@ -398,6 +398,99 @@ def footer_spans(footer: bytes) -> tuple[list, list]:
     return fields, rg_elems
 
 
+def footer_memo(footer: bytes, name: str) -> dict:
+    """The dict called ``name`` in the footer's extras memo.  Entries must
+    be pure functions of the footer and of the file bytes behind it: the
+    footer object is unique per (path, mtime, size) (``read_footer_bytes``),
+    so a rewritten file gets a fresh memo, and the entries are evicted
+    with the footer's span-memo entry."""
+    return _footer_state(footer)[2].setdefault(name, {})
+
+
+def _chunk_spans(footer: bytes, rg_idx: int):
+    """[(start, end)] of every ColumnChunk struct in one row group's
+    ``columns`` list, memoized per footer."""
+    _fields, rg_elems, extras = _footer_state(footer)
+    memo = extras.setdefault("chunk_spans", {})
+    spans = memo.get(rg_idx)
+    if spans is None:
+        cols_span = _span_get(rg_elems[rg_idx], 1)  # RowGroup.columns
+        _, spans, _ = _list_elem_spans(footer, cols_span[1])
+        memo[rg_idx] = spans
+    return spans
+
+
+def chunk_fields(footer: bytes, rg_idx: int, col_idx: int):
+    """(ColumnChunk field spans, ColumnMetaData field spans, ColumnMetaData
+    start, end) of one column chunk — the last three None when the chunk
+    carries no ``meta_data`` — or None when the ordinals are out of range
+    or the layout surprises.  Memoized per footer: the value tiers probe
+    the same chunks on every read."""
+    try:
+        memo = footer_memo(footer, "chunk_fields")
+    except Exception:
+        return None
+    key = (rg_idx, col_idx)
+    if key not in memo:
+        got = None
+        try:
+            if rg_idx >= 0 and col_idx >= 0:
+                cc, _ = _struct_field_spans(
+                    footer, _chunk_spans(footer, rg_idx)[col_idx][0]
+                )
+                md = _span_get(cc, 3)  # ColumnChunk.meta_data
+                got = (cc, None, None, None)
+                if md is not None:
+                    md_fields, end = _struct_field_spans(footer, md[1])
+                    got = (cc, md_fields, md[1], end)
+        except Exception:  # ordinals out of range, or a layout surprise
+            got = None
+        memo[key] = got
+    return memo[key]
+
+
+def int_field(buf: bytes, fields, fid: int) -> int | None:
+    """A non-negative integer field's value from a span list, or None when
+    the field is absent, not an integer, negative or undecodable."""
+    span = _span_get(fields, fid)
+    if span is None:
+        return None
+    try:
+        v = _decode_value(buf, span[1], span[0])[0]
+        return v if isinstance(v, int) and v >= 0 else None
+    except Exception:
+        return None
+
+
+class FooterProber:
+    """Base of the value-tier probers: a per-pass snapshot of each probed
+    file's footer, so one planning pass sees one footer per path.  The
+    probers' facts live in the footer's own memo (:func:`footer_memo`)
+    and so outlast the pass."""
+
+    def __init__(self) -> None:
+        self._footers: dict[str, bytes | None] = {}
+
+    def _footer(self, path: str) -> bytes | None:
+        if path not in self._footers:
+            try:
+                self._footers[path] = read_footer_bytes(path)
+            except Exception:
+                self._footers[path] = None
+        return self._footers[path]
+
+    def _memo(self, path: str, name: str):
+        """(footer, its ``name`` memo), or (None, None) when the footer
+        can't be read or parsed."""
+        footer = self._footer(path)
+        if footer is None:
+            return None, None
+        try:
+            return footer, footer_memo(footer, name)
+        except Exception:
+            return None, None
+
+
 # --------------------------------------------------------------------------
 # full decode / encode for the few structs we must edit
 # --------------------------------------------------------------------------
@@ -959,12 +1052,7 @@ def splice_footer(
             total_rows += _unzigzag(zz)
         overrides: dict[int, tuple[int, object]] = {}
         if keep_order is not None:
-            chunk_memo = extras.setdefault("chunk_spans", {})
-            chunk_spans = chunk_memo.get(r)
-            if chunk_spans is None:
-                cols_span = _span_get(rgf, 1)
-                _, chunk_spans, _ = _list_elem_spans(footer, cols_span[1])
-                chunk_memo[r] = chunk_spans
+            chunk_spans = _chunk_spans(footer, r)
             if max(keep_order) >= len(chunk_spans):
                 raise InvalidSelectionError(
                     f"Column index {max(keep_order)} out of range for "
@@ -977,8 +1065,8 @@ def splice_footer(
             for ci in keep_order:
                 cs, ce = chunk_spans[ci]
                 payload += footer[cs:ce]
-                chunk_fields, _ = _struct_field_spans(footer, cs)
-                md_span = _span_get(chunk_fields, 3)
+                cc_fields, _ = _struct_field_spans(footer, cs)
+                md_span = _span_get(cc_fields, 3)
                 if md_span is None:
                     have_sizes = False
                     continue

@@ -311,18 +311,18 @@ def _per_file_blooms(
     refuses: dict-OVERFLOW high-cardinality columns.
 
     Scale shape: one footer + one bitset read per (file, chunk) on the
-    driver — the same ≤32-file registration shape as the stats push."""
+    driver, shared with the bloom tier through the footer's memo — the
+    same ≤32-file registration shape as the stats push."""
     import struct
 
-    from palletjack_spark.index.bloomprune import bloom_offsets, read_bloom
-    from palletjack_spark.index.footer_splice import read_footer_bytes
+    from palletjack_spark.index.bloomprune import BloomProber
 
     want = set(columns)
     local = index.local()
+    prober = BloomProber()
     chunks: dict[tuple[str, str], list[bytes]] = {}
     tags: dict[tuple[str, str], int] = {}
     complete: dict[tuple[str, str], bool] = {}
-    footers: dict[str, bytes | None] = {}
     for (file, rg_idx), rg in sorted(local.row_groups.items()):
         for col_idx, col in enumerate(rg["columns"]):
             name = col["name"]
@@ -338,14 +338,7 @@ def _per_file_blooms(
             ):
                 complete[key] = False
                 continue
-            if file not in footers:
-                try:
-                    footers[file] = read_footer_bytes(file)
-                except Exception:
-                    footers[file] = None
-            footer = footers[file]
-            off = bloom_offsets(footer, rg_idx, col_idx) if footer else None
-            words = read_bloom(file, off[0], off[1]) if off else None
+            words = prober._bloom(file, rg_idx, col_idx)
             if words is None:
                 complete[key] = False
                 continue
@@ -399,21 +392,18 @@ def _per_file_intervals(
     smallest inter-interval gaps — still a superset, never unsound.
     Anything else is simply absent → the rule keeps the file.
 
-    Scale shape: one footer + one ColumnIndex read per (file, chunk) on
-    the driver — the same ≤32-file registration shape as the stats push."""
+    Scale shape: one footer + one page-index read per (file, chunk) on
+    the driver, shared with the page tier through the footer's memo — the
+    same ≤32-file registration shape as the stats push."""
     import struct
 
-    from palletjack_spark.index.footer_splice import read_footer_bytes
-    from palletjack_spark.index.pageprune import (
-        page_index_offsets,
-        read_column_index,
-    )
+    from palletjack_spark.index.pageprune import PageProber
 
     want = set(columns)
     local = index.local()
+    prober = PageProber()
     spans: dict[tuple[str, str], list] = {}
     complete: dict[tuple[str, str], bool] = {}
-    footers: dict[str, bytes | None] = {}
     for (file, rg_idx), rg in sorted(local.row_groups.items()):
         for col_idx, col in enumerate(rg["columns"]):
             name = col["name"]
@@ -426,22 +416,7 @@ def _per_file_intervals(
             if col.get("logical_type") not in _INTERVAL_LOGICAL.get(pt, ()):
                 complete[key] = False
                 continue
-            if file not in footers:
-                try:
-                    footers[file] = read_footer_bytes(file)
-                except Exception:
-                    footers[file] = None
-            footer = footers[file]
-            offs = (
-                page_index_offsets(footer, rg_idx, col_idx)
-                if footer is not None
-                else None
-            )
-            ci = (
-                read_column_index(file, offs[0], offs[1], pt)
-                if offs is not None
-                else None
-            )
+            ci, _oi = prober._index(file, rg_idx, col_idx, pt)
             if ci is None:
                 complete[key] = False
                 continue

@@ -69,7 +69,11 @@ Granularities served:
 Probe I/O is the footer (cached) plus one ``column_index_length`` (+
 optionally ``offset_index_length``) read per (chunk, conjunct column)
 — typically a few hundred bytes, adjacent in the file since writers
-emit the page index as one contiguous block before the footer.
+emit the page index as one contiguous block before the footer.  The
+parsed ColumnIndex/OffsetIndex pair of each chunk lives in its footer's
+memo (``footer_splice.footer_memo``): probe facts last as long as the
+footer's memo entry, so repeated reads of an unchanged file re-read no
+page index.
 """
 
 from __future__ import annotations
@@ -79,11 +83,14 @@ import struct
 
 from palletjack_spark.index.dictprune import _IDENTITY_LOGICAL
 from palletjack_spark.index.footer_splice import (
+    FooterProber,
+    _chunk_spans,
     _decode_value,
     _list_elem_spans,
     _span_get,
     _struct_field_spans,
-    footer_spans,
+    chunk_fields,
+    int_field,
     read_footer_bytes,
 )
 
@@ -104,58 +111,23 @@ _EXCLUDE_OPS = {"!=", "<>", "not_in"}
 _NULL_OPS = {"is_null", "not_null"}
 
 
-def _column_chunk_fields(
-    footer: bytes, rg_idx: int, col_idx: int, rg_elems=None
-):
-    """Span list of ColumnChunk fields (NOT ColumnMetaData — the page
-    index offsets live one level up) for (row group, column), or None
-    on any layout surprise.  ``rg_elems`` may carry a pre-parsed
-    ``footer_spans`` result: the prober parses each footer once and
-    reuses it across every (row group, column) probe."""
-    try:
-        if rg_elems is None:
-            _fields, rg_elems = footer_spans(footer)
-        if not (0 <= rg_idx < len(rg_elems)):
-            return None
-        cols_span = _span_get(rg_elems[rg_idx], 1)  # RowGroup.columns
-        if cols_span is None:
-            return None
-        _etype, spans, _ = _list_elem_spans(footer, cols_span[1])
-        if not (0 <= col_idx < len(spans)):
-            return None
-        cc_fields, _ = _struct_field_spans(footer, spans[col_idx][0])
-        return cc_fields
-    except Exception:
-        return None
-
-
-def _int_field(footer: bytes, fields, fid: int) -> int | None:
-    span = _span_get(fields, fid)
-    if span is None:
-        return None
-    try:
-        v = _decode_value(footer, span[1], span[0])[0]
-        return v if isinstance(v, int) and v >= 0 else None
-    except Exception:
-        return None
-
-
 def page_index_offsets(
-    footer: bytes, rg_idx: int, col_idx: int, rg_elems=None
+    footer: bytes, rg_idx: int, col_idx: int
 ) -> tuple[int, int, int | None, int | None] | None:
     """(column_index_offset, column_index_length, offset_index_offset,
     offset_index_length) of one column chunk — the last two None when
     the writer omitted the OffsetIndex — or None when there is no
     ColumnIndex at all (absence must KEEP)."""
-    cc = _column_chunk_fields(footer, rg_idx, col_idx, rg_elems)
-    if cc is None:
+    got = chunk_fields(footer, rg_idx, col_idx)
+    if got is None:
         return None
-    ci_off = _int_field(footer, cc, 6)
-    ci_len = _int_field(footer, cc, 7)
+    cc = got[0]  # the page index offsets live in ColumnChunk itself
+    ci_off = int_field(footer, cc, 6)
+    ci_len = int_field(footer, cc, 7)
     if ci_off is None or ci_len is None or ci_len <= 0:
         return None
-    oi_off = _int_field(footer, cc, 4)
-    oi_len = _int_field(footer, cc, 5)
+    oi_off = int_field(footer, cc, 4)
+    oi_len = int_field(footer, cc, 5)
     if oi_len is not None and oi_len <= 0:
         oi_off = oi_len = None
     return ci_off, ci_len, oi_off, oi_len
@@ -411,70 +383,25 @@ def _conjunct_page_mask(ci: dict, op, raw_vals, physical_type) -> list | None:
 # --------------------------------------------------------------------------
 
 
-class PageProber:
-    """Memoizing prober for one planning pass: footers, ColumnIndexes
-    and OffsetIndexes are each read at most once per (file, chunk)."""
+class PageProber(FooterProber):
+    """Page-index prober: each chunk's ColumnIndex/OffsetIndex pair is
+    read at most once per (footer, chunk), in the footer's memo — later
+    passes over an unchanged file reuse it.  The per-page masks are
+    memoized per pass, keyed by predicate."""
 
     def __init__(self) -> None:
-        self._footers: dict[str, bytes | None] = {}
-        self._spans: dict[str, object] = {}
-        self._cis: dict[tuple, dict | None] = {}
-        self._ois: dict[tuple, list | None] = {}
+        super().__init__()
         self._mask_cache: dict[tuple, list] = {}
-
-    def _footer(self, path: str) -> bytes | None:
-        if path not in self._footers:
-            try:
-                self._footers[path] = read_footer_bytes(path)
-            except Exception:
-                self._footers[path] = None
-        return self._footers[path]
-
-    def _rg_elems(self, path: str, footer: bytes):
-        """Pre-parsed footer_spans row-group elements, once per file —
-        a many-row-group footer would otherwise re-parse per (row
-        group, column) probe."""
-        if path not in self._spans:
-            try:
-                _fields, rg_elems = footer_spans(footer)
-                self._spans[path] = rg_elems
-            except Exception:
-                self._spans[path] = None
-        return self._spans[path]
 
     def _index(self, path: str, rg_idx: int, col_idx: int, ptype: str):
         """(ColumnIndex dict | None, first_row_index list | None)."""
-        key = (path, rg_idx, col_idx)
-        if key not in self._cis:
-            footer = self._footer(path)
-            rg_elems = (
-                self._rg_elems(path, footer) if footer is not None else None
-            )
-            offs = (
-                page_index_offsets(footer, rg_idx, col_idx, rg_elems)
-                if footer is not None and rg_elems is not None
-                else None
-            )
-            if offs is None:
-                self._cis[key] = None
-                self._ois[key] = None
-            else:
-                ci_off, ci_len, oi_off, oi_len = offs
-                ci = read_column_index(path, ci_off, ci_len, ptype)
-                oi = (
-                    read_offset_index(path, oi_off, oi_len)
-                    if oi_off is not None and oi_len is not None
-                    else None
-                )
-                if (
-                    ci is not None
-                    and oi is not None
-                    and len(oi) != len(ci["null_pages"])
-                ):
-                    oi = None  # inconsistent writer output: ranges unusable
-                self._cis[key] = ci
-                self._ois[key] = oi
-        return self._cis[key], self._ois[key]
+        footer, memo = self._memo(path, "page")
+        if memo is None:
+            return None, None
+        key = (rg_idx, col_idx, ptype)
+        if key not in memo:
+            memo[key] = _page_index(path, footer, rg_idx, col_idx, ptype)
+        return memo[key]
 
     @staticmethod
     def _pred_key(predicate):
@@ -575,6 +502,24 @@ class PageProber:
         return survive
 
 
+def _page_index(path, footer, rg_idx, col_idx, ptype):
+    """One chunk's (ColumnIndex dict | None, first_row_index list | None),
+    bounds decoded as ``ptype``."""
+    offs = page_index_offsets(footer, rg_idx, col_idx)
+    if offs is None:
+        return None, None
+    ci_off, ci_len, oi_off, oi_len = offs
+    ci = read_column_index(path, ci_off, ci_len, ptype)
+    oi = (
+        read_offset_index(path, oi_off, oi_len)
+        if oi_off is not None and oi_len is not None
+        else None
+    )
+    if ci is not None and oi is not None and len(oi) != len(ci["null_pages"]):
+        oi = None  # inconsistent writer output: ranges unusable
+    return ci, oi
+
+
 def _mask_ranges(mask, firsts, num_rows: int) -> list:
     """Surviving-page row ranges [(start, end)), coalescing adjacent
     survivors."""
@@ -643,12 +588,6 @@ def page_prune_rows(
 # --------------------------------------------------------------------------
 # writer: enrich an existing file with a standard page index
 # --------------------------------------------------------------------------
-
-#: parquet Type enum -> physical type name (format spec)
-_TYPE_NAMES = {
-    0: "BOOLEAN", 1: "INT32", 2: "INT64", 3: "INT96",
-    4: "FLOAT", 5: "DOUBLE", 6: "BYTE_ARRAY", 7: "FIXED_LEN_BYTE_ARRAY",
-}
 
 #: byte-array bound truncation window (parquet-cpp's default)
 _TRUNCATE = 64
@@ -812,8 +751,6 @@ def add_page_index(path: str, columns: list[str] | None = None) -> int:
     footer = read_footer_bytes(path)
     file_size = os.path.getsize(path)
     footer_start = file_size - 8 - len(footer)
-    _fields, rg_elems = footer_spans(footer)
-
     pf = pq.ParquetFile(path)
     md = pf.metadata
     if md.num_row_groups == 0:
@@ -927,10 +864,8 @@ def add_page_index(path: str, columns: list[str] | None = None) -> int:
     # splice offsets into each enriched ColumnChunk (fields 4-7)
     edits = []
     for (rg_idx, col_idx), (ci_rel, ci_len, oi_rel, oi_len) in placed.items():
-        cols_span = _span_get(rg_elems[rg_idx], 1)
-        _etype, spans, _ = _list_elem_spans(footer, cols_span[1])
-        cc_start = spans[col_idx][0]
-        cc_fields, cc_end = _struct_field_spans(footer, cc_start)
+        cc_start, cc_end = _chunk_spans(footer, rg_idx)[col_idx]
+        cc_fields = chunk_fields(footer, rg_idx, col_idx)[0]
         new = bytearray()
         prev = 0
         emitted = False

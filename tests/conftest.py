@@ -21,7 +21,7 @@ SF_DIR_ORACLE = os.environ.get("PJ_ORACLE_SF_DIR", SF_DIR)
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="pj-tests", cpus=8, shuffle_partitions=8)
+    s = get_spark(app_name="pj-tests", cpus=None, shuffle_partitions=8)
     yield s
     s.stop()
 

@@ -57,10 +57,11 @@ def test_xxh64_reference_vectors():
         xxh64(bytes(range(n % 256)) * (n // 256 + 1))
 
 
-def test_writer_roundtrip_and_pinned_skip_counts(tmp_path):
+def test_writer_roundtrip_and_pinned_skip_counts(tmp_path, monkeypatch):
     """The q03g contract, pinned: N row groups survive stats (values
     interleave), the bloom tier keeps EXACTLY the owning one; absent
     keys prune everything; pyarrow still reads the enriched file."""
+    from palletjack_spark.index import bloomprune
     from palletjack_spark.index.bloomprune import (
         BloomProber,
         bloom_prune_rows,
@@ -93,12 +94,19 @@ def test_writer_roundtrip_and_pinned_skip_counts(tmp_path):
     # conjunct on an unknown column keeps everything
     assert len(bloom_prune_rows(rgs, [("nope", "=", 1)])) == 4
 
-    # prober memoizes: one filter parse per (file, offset)
-    prober = BloomProber()
+    # one filter parse per (footer, chunk), shared by later probers: a
+    # second prober over the unchanged file parses nothing
+    fresh = _overflow_fixture(tmp_path, name="fresh.parquet")
+    parses = []
+    real = bloomprune.read_bloom
+    monkeypatch.setattr(
+        bloomprune, "read_bloom", lambda *a: parses.append(a) or real(*a)
+    )
     meta = {"physical_type": "INT64", "logical_type": "NONE"}
-    assert prober.can_match(path, 3, 0, meta, 123) is True
-    assert prober.can_match(path, 0, 0, meta, 123) is False
-    assert len(prober._blooms) == 2
+    for prober in (BloomProber(), BloomProber()):
+        assert prober.can_match(fresh, 3, 0, meta, 123) is True
+        assert prober.can_match(fresh, 0, 0, meta, 123) is False
+        assert len(parses) == 2
 
 
 def test_end_to_end_read_equals_pruning_off(spark, tmp_path):

@@ -219,13 +219,13 @@ def test_dict_prune_memoizes_footer_and_dictionary_reads(tmp_path):
 
 
 def test_dict_prune_plan_executor_side(spark, tmp_path):
-    """Catalog-scale path: the probe rides the PLAN DataFrame via
-    mapInArrow — 4 plan rows in, exactly the matching row group out,
-    with (file, row_group, total_byte_size) preserved for scan_plan —
-    and the full read through the persisted (non-local) index equals
-    the pruning-off read."""
+    """Catalog-scale path: the dictionary probe rides the PLAN DataFrame
+    via value_prune_plan's mapInArrow — 4 plan rows in, exactly the
+    matching row group out, with (file, row_group, total_byte_size)
+    preserved for scan_plan — and the full read through the persisted
+    (non-local) index equals the pruning-off read."""
+    from palletjack_spark.index.bloomprune import value_prune_plan
     from palletjack_spark.index.builder import build_index
-    from palletjack_spark.index.dictprune import dict_prune_plan
 
     path = _interleaved(tmp_path)
     idx = build_index(spark, path, index_dir=str(tmp_path / "idx"))
@@ -233,11 +233,12 @@ def test_dict_prune_plan_executor_side(spark, tmp_path):
     pred = [("tag", "=", "user_0005")]
     plan = idx.prune(predicate=pred)
     assert plan.count() == 4  # stats can't prune the interleaved layout
-    pruned = dict_prune_plan(plan, pred)
+    pruned = value_prune_plan(plan, pred)
     rows = pruned.collect()
     assert [r["row_group"] for r in rows] == [1]
     assert dict(pruned.dtypes) == {
         "file": "string", "row_group": "int", "total_byte_size": "bigint",
+        "pj_ranges": "array<array<bigint>>",
     }
     got = sorted(
         (r["tag"], r["n"])
@@ -250,9 +251,9 @@ def test_dict_prune_plan_executor_side(spark, tmp_path):
         ).collect()
     )
     assert got == off == [("user_0005", 5)]
-    # no equality conjuncts -> the plan is returned untouched
+    # no equality conjuncts -> no dictionary verdict, every row kept
     rng = [("tag", ">=", "user_0000")]
-    assert dict_prune_plan(idx.prune(predicate=rng), rng).count() == 4
+    assert value_prune_plan(idx.prune(predicate=rng), rng).count() == 4
 
 
 def test_dict_prune_plan_tolerates_absent_columns(spark, tmp_path):
@@ -260,14 +261,14 @@ def test_dict_prune_plan_tolerates_absent_columns(spark, tmp_path):
     hive partition key) filters to an empty match — the plan probe must
     treat it as unknown and keep every row group, not throw ANSI
     element_at errors (the q03c partitioned-read regression)."""
+    from palletjack_spark.index.bloomprune import value_prune_plan
     from palletjack_spark.index.builder import build_index
-    from palletjack_spark.index.dictprune import dict_prune_plan
 
     path = _interleaved(tmp_path)
     idx = build_index(spark, path, index_dir=str(tmp_path / "idx"))
     pred = [("not_a_column", "=", "x"), ("tag", "=", "user_0005")]
     plan = idx.prune(predicate=pred)
-    rows = dict_prune_plan(plan, pred).collect()
+    rows = value_prune_plan(plan, pred).collect()
     # unknown conjunct keeps; the tag conjunct still prunes to rg1
     assert [r["row_group"] for r in rows] == [1]
 
@@ -304,8 +305,9 @@ def test_in_predicate_prunes_stats_and_dictionaries(spark, tmp_path):
     prunes a row group only when EVERY member is provably absent; the
     residual keeps exactly the member rows; and the distributed plan
     path agrees."""
+    from palletjack_spark.index.bloomprune import value_prune_plan
     from palletjack_spark.index.builder import build_index
-    from palletjack_spark.index.dictprune import dict_prune_plan, dict_prune_rows
+    from palletjack_spark.index.dictprune import dict_prune_rows
 
     path = _interleaved(tmp_path)
     idx = build_index(spark, path)
@@ -351,7 +353,7 @@ def test_in_predicate_prunes_stats_and_dictionaries(spark, tmp_path):
     plan = didx.prune(predicate=pred)
     assert plan.count() == 4
     assert sorted(
-        r["row_group"] for r in dict_prune_plan(plan, pred).collect()
+        r["row_group"] for r in value_prune_plan(plan, pred).collect()
     ) == [1, 2]
     dgot = sorted(
         (r["tag"], r["n"])
@@ -443,8 +445,9 @@ def test_exclusion_ops_prune_stats_and_dictionaries(spark, tmp_path):
     tier prunes when the WHOLE dictionary is excluded (single-/few-value
     dictionary chunks — constant columns in log data); results equal the
     pruning-off read."""
+    from palletjack_spark.index.bloomprune import value_prune_plan
     from palletjack_spark.index.builder import build_index
-    from palletjack_spark.index.dictprune import dict_prune_plan, dict_prune_rows
+    from palletjack_spark.index.dictprune import dict_prune_rows
 
     path = str(tmp_path / "ex.parquet")
     ks = ["a", "b"] * 50 + ["b", "c"] * 50  # rg0 dict {a,b}, rg1 {b,c}
@@ -487,7 +490,7 @@ def test_exclusion_ops_prune_stats_and_dictionaries(spark, tmp_path):
     # distributed plan path agrees
     pidx = build_index(spark, path, index_dir=str(tmp_path / "idx"))
     plan = pidx.prune(predicate=pred)
-    assert [r["row_group"] for r in dict_prune_plan(plan, pred).collect()] == [1]
+    assert [r["row_group"] for r in value_prune_plan(plan, pred).collect()] == [1]
 
 
 def test_exclusion_never_prunes_float_chunks_with_nan(spark, tmp_path):
