@@ -57,11 +57,7 @@ import struct
 import sys
 from array import array
 
-from palletjack_spark.index.dictprune import (
-    _IDENTITY_LOGICAL,
-    _equality_conjuncts,
-    _need,
-)
+from palletjack_spark.index.dictprune import _IDENTITY_LOGICAL, _need
 from palletjack_spark.index.footer_splice import (
     FooterProber,
     _decode_value,
@@ -357,14 +353,6 @@ class BloomProber(FooterProber):
         return _might_contain(words, xxh64(probe))
 
 
-def _conjunct_prunes(prober, path, rg_idx, col_idx, col_meta, values) -> bool:
-    """True when EVERY candidate of one =/IN conjunct is provably absent."""
-    return all(
-        prober.can_match(path, rg_idx, col_idx, col_meta, v) is False
-        for v in values
-    )
-
-
 def bloom_prune_rows(
     rg_rows: list[dict], predicate, prober: BloomProber | None = None
 ) -> list[dict]:
@@ -373,33 +361,9 @@ def bloom_prune_rows(
     never prove its column holds ONLY excluded values) — the dictionary
     tier owns those.  Unknown verdicts keep the row; results are
     identical either way."""
-    conj = _equality_conjuncts(predicate)
-    if not conj:
-        return rg_rows
-    prober = prober or BloomProber()
-    out = []
-    for r in rg_rows:
-        keep = True
-        for col_name, values in conj:
-            col_idx = next(
-                (
-                    i
-                    for i, c in enumerate(r["columns"])
-                    if c["name"] == col_name
-                ),
-                None,
-            )
-            if col_idx is None:
-                continue
-            if _conjunct_prunes(
-                prober, r["file"], r["row_group"], col_idx,
-                r["columns"][col_idx], values,
-            ):
-                keep = False
-                break
-        if keep:
-            out.append(r)
-    return out
+    from palletjack_spark.index.tiers import tier_filter
+
+    return tier_filter("bloom", rg_rows, predicate, prober or BloomProber())
 
 
 def value_prune_plan(plan, predicate, explain: bool = False):
@@ -409,7 +373,8 @@ def value_prune_plan(plan, predicate, explain: bool = False):
     on dict-overflow chunks, this module), and the page-index tier
     (per-page min/max envelope gaps —
     :mod:`palletjack_spark.index.pageprune`, which also probes RANGE
-    conjuncts the first two tiers can't).  One pass instead of three
+    conjuncts the first two tiers can't), in the order and with the
+    verdicts of ``tiers.value_verdict``, which each row runs.  One pass
     keeps the catalog plan a single pipelined stage, and the probers
     share the per-task footer reads through the footer cache.  Same
     contract as the driver-side tiers: unknown keeps, the selection
@@ -423,155 +388,88 @@ def value_prune_plan(plan, predicate, explain: bool = False):
     have dropped, "kept" otherwise."""
     from pyspark.sql import functions as F
 
-    from palletjack_spark.index.dictprune import (
-        DictionaryProber,
-        _conjunct_prunes as _dict_conjunct_prunes,
-        _dict_conjuncts,
-        meta_from_row,
-        plan_meta_columns,
-    )
+    from palletjack_spark.index.dictprune import meta_from_row, plan_meta_columns
     from palletjack_spark.index.pageprune import (
         _EXCLUDE_OPS,
         _NULL_OPS,
         _VALUE_OPS,
-        PageProber,
+    )
+    from palletjack_spark.index.tiers import (
+        new_probers,
+        value_predicate,
+        value_verdict,
     )
 
-    conj = _dict_conjuncts(predicate or ())
+    # every column a value tier can probe (the page tier's ops cover the
+    # dictionary's and the bloom's)
     page_ops = _VALUE_OPS | _EXCLUDE_OPS | _NULL_OPS
-    page_cols: list[str] = []
-    for col_name, op, *_vals in predicate or ():
-        if op in page_ops and col_name not in page_cols:
-            page_cols.append(col_name)
-    if not conj and not page_cols:
+    cols = list(
+        dict.fromkeys(c for c, op, *_v in predicate or () if op in page_ops)
+    )
+    if not cols:
         if explain:
-            from pyspark.sql import functions as _F
-
             return plan.select(
                 "file", "row_group", "total_byte_size"
-            ).withColumn("pj_tier", _F.lit("kept"))
+            ).withColumn("pj_tier", F.lit("kept"))
         return plan
 
     import pyarrow as pa
 
-    meta_cols = plan_meta_columns(
-        plan, [c for c, _v, _m in conj], "pj"
-    ) + plan_meta_columns(plan, page_cols, "pg")
-    has_nrows = "num_rows" in plan.columns
     nrows_col = (
-        [F.col("num_rows").alias("pg_nrows")]
-        if has_nrows
-        else [F.lit(None).cast("long").alias("pg_nrows")]
+        F.col("num_rows")
+        if "num_rows" in plan.columns
+        else F.lit(None).cast("long")
     )
     sel = plan.select(
-        "file", "row_group", "total_byte_size", *nrows_col, *meta_cols
+        "file", "row_group", "total_byte_size", nrows_col.alias("pj_nrows"),
+        *plan_meta_columns(plan, cols, "pj"),
     )
-    if explain:
-        out_schema = (
-            "file string, row_group int, total_byte_size long,"
-            " pj_tier string"
-        )
-        out_arrow = pa.schema(
-            [("file", pa.string()), ("row_group", pa.int32()),
-             ("total_byte_size", pa.int64()), ("pj_tier", pa.string())]
-        )
-    else:
-        out_schema = (
-            "file string, row_group int, total_byte_size long,"
-            " pj_ranges array<array<bigint>>"
-        )
-        out_arrow = pa.schema(
-            [("file", pa.string()), ("row_group", pa.int32()),
-             ("total_byte_size", pa.int64()),
-             ("pj_ranges", pa.list_(pa.list_(pa.int64())))]
-        )
-    values = [(vs, mode) for _c, vs, mode in conj]
-    pred_list = [tuple(p) for p in predicate]
+    extra = ("pj_tier", pa.string()) if explain else (
+        "pj_ranges", pa.list_(pa.list_(pa.int64()))
+    )
+    out_arrow = pa.schema(
+        [("file", pa.string()), ("row_group", pa.int32()),
+         ("total_byte_size", pa.int64()), extra]
+    )
+    out_schema = "file string, row_group int, total_byte_size long, " + (
+        "pj_tier string" if explain else "pj_ranges array<array<bigint>>"
+    )
+    vpred = value_predicate([tuple(p) for p in predicate])
 
     def probe(batches):
-        dict_prober = DictionaryProber()
-        bloom_prober = BloomProber()
-        page_prober = PageProber()
+        probers = new_probers()
         for b in batches:
-            kept = []
+            out = []
             for r in b.to_pylist():
-                keep = True
-                tier = None
-                for i, (cand, mode) in enumerate(values):
-                    cix = r[f"pj_cix_{i}"]
-                    if cix is None or cix < 0:
-                        continue
-                    meta = meta_from_row(r, "pj", i)
-                    if _dict_conjunct_prunes(
-                        dict_prober, r["file"], r["row_group"], int(cix),
-                        meta, cand, mode,
-                    ):
-                        keep = False
-                        tier = "dictionary"
-                        break
-                    if mode == "eq" and _conjunct_prunes(
-                        bloom_prober, r["file"], r["row_group"], int(cix),
-                        meta, cand,
-                    ):
-                        keep = False
-                        tier = "bloom"
-                        break
-                ranges = None
-                if keep and page_cols:
-                    page_meta = {
-                        c: (
-                            r[f"pg_cix_{j}"],
-                            meta_from_row(r, "pg", j),
-                        )
-                        for j, c in enumerate(page_cols)
-                    }
+                metas = {
+                    c: (r[f"pj_cix_{j}"], meta_from_row(r, "pj", j))
+                    for j, c in enumerate(cols)
+                }
 
-                    def look(col_name):
-                        got = page_meta.get(col_name)
-                        if got is None or got[0] is None or got[0] < 0:
-                            return None
-                        return int(got[0]), got[1]
+                def look(col_name):
+                    cix, meta = metas.get(col_name, (None, None))
+                    return None if cix is None or cix < 0 else (int(cix), meta)
 
-                    if not page_prober.rg_can_match(
-                        r["file"], r["row_group"], r["pg_nrows"],
-                        pred_list, look,
-                    ):
-                        keep = False
-                        tier = "page"
-                    elif r["pg_nrows"]:
-                        # round-12: surviving page ROW RANGES ride the
-                        # plan (same prober — the footer/index caches
-                        # make this a re-read-free second pass), so the
-                        # executor-side scan slices row groups exactly
-                        # like the driver-local path.  None = no row
-                        # granularity / no restriction; [] can't happen
-                        # here (rg_can_match was True on the same masks).
-                        nrows = int(r["pg_nrows"])
-                        rngs = page_prober.surviving_ranges(
-                            r["file"], r["row_group"], nrows,
-                            pred_list, look,
-                        )
-                        if rngs and sum(e - s for s, e in rngs) < nrows:
-                            ranges = [[int(s), int(e)] for s, e in rngs]
+                # the surviving page ROW RANGES ride the plan, so the
+                # executor-side scan slices row groups exactly like the
+                # driver-local path
+                tier, _conj, ranges = value_verdict(
+                    probers, r["file"], r["row_group"], r["pj_nrows"],
+                    vpred, look, not explain,
+                )
+                row = {
+                    "file": r["file"],
+                    "row_group": r["row_group"],
+                    "total_byte_size": r["total_byte_size"],
+                }
                 if explain:
-                    kept.append(
-                        {
-                            "file": r["file"],
-                            "row_group": r["row_group"],
-                            "total_byte_size": r["total_byte_size"],
-                            "pj_tier": tier or "kept",
-                        }
-                    )
-                elif keep:
-                    kept.append(
-                        {
-                            "file": r["file"],
-                            "row_group": r["row_group"],
-                            "total_byte_size": r["total_byte_size"],
-                            "pj_ranges": ranges,
-                        }
-                    )
-            yield pa.RecordBatch.from_pylist(kept, schema=out_arrow)
+                    row["pj_tier"] = tier or "kept"
+                elif tier:
+                    continue
+                else:
+                    row["pj_ranges"] = ranges
+                out.append(row)
+            yield pa.RecordBatch.from_pylist(out, schema=out_arrow)
 
     return sel.mapInArrow(probe, out_schema)
 

@@ -306,53 +306,6 @@ def _chunk_dictionary(path, footer, rg_idx, col_idx, physical_type):
     return frozenset(values) if values is not None else None
 
 
-def _equality_conjuncts(predicate) -> list[tuple[str, list]]:
-    """(column, candidate values) per conjunct the dictionary can decide:
-    ``=`` has one candidate; ``in`` has its member list — the row group
-    prunes only when EVERY candidate is provably absent."""
-    eq: list[tuple[str, list]] = []
-    for col, op, *vals in predicate:
-        if op in ("=", "==") and vals:
-            eq.append((col, [vals[0]]))
-        elif op == "in" and vals and list(vals[0]):
-            eq.append((col, list(vals[0])))
-    return eq
-
-
-def _exclusion_conjuncts(predicate) -> list[tuple[str, list]]:
-    """(column, excluded values) per ``!=``/``<>``/``not_in`` conjunct —
-    the row group prunes when the dictionary is provably a SUBSET of the
-    excluded values (single-value dictionary chunks are common in log
-    data, where a whole file carries one constant)."""
-    ex: list[tuple[str, list]] = []
-    for col, op, *vals in predicate:
-        if op in ("!=", "<>") and vals:
-            ex.append((col, [vals[0]]))
-        elif op == "not_in" and vals and list(vals[0]):
-            ex.append((col, list(vals[0])))
-    return ex
-
-
-def _dict_conjuncts(predicate) -> list[tuple[str, list, str]]:
-    """All conjuncts the dictionary can decide, as (column, values, mode):
-    mode ``'eq'`` prunes when EVERY candidate is provably absent; mode
-    ``'ex'`` prunes when the dictionary is provably a subset of the
-    excluded values."""
-    return [(c, v, "eq") for c, v in _equality_conjuncts(predicate)] + [
-        (c, v, "ex") for c, v in _exclusion_conjuncts(predicate)
-    ]
-
-
-def _conjunct_prunes(prober, path, rg_idx, col_idx, col_meta, values, mode):
-    """True when this single conjunct PROVES the row group matchless."""
-    if mode == "eq":
-        return all(
-            prober.can_match(path, rg_idx, col_idx, col_meta, v) is False
-            for v in values
-        )
-    return prober.all_excluded(path, rg_idx, col_idx, col_meta, values) is True
-
-
 def dict_prune_rows(
     rg_rows: list[dict], predicate, prober: DictionaryProber | None = None
 ) -> list[dict]:
@@ -360,33 +313,11 @@ def dict_prune_rows(
     conjunct can't match, or an exclusion (!=/NOT IN) conjunct excludes
     the whole dictionary.  Other conjuncts, unknown columns, and every
     "unknown" verdict keep the row — identical results either way."""
-    conj = _dict_conjuncts(predicate)
-    if not conj:
-        return rg_rows
-    prober = prober or DictionaryProber()
-    out = []
-    for r in rg_rows:
-        keep = True
-        for col_name, values, mode in conj:
-            col_idx = next(
-                (
-                    i
-                    for i, c in enumerate(r["columns"])
-                    if c["name"] == col_name
-                ),
-                None,
-            )
-            if col_idx is None:
-                continue
-            if _conjunct_prunes(
-                prober, r["file"], r["row_group"], col_idx,
-                r["columns"][col_idx], values, mode,
-            ):
-                keep = False
-                break
-        if keep:
-            out.append(r)
-    return out
+    from palletjack_spark.index.tiers import tier_filter
+
+    return tier_filter(
+        "dictionary", rg_rows, predicate, prober or DictionaryProber()
+    )
 
 
 #: column-chunk metadata the executor-side value probes need, with its

@@ -11,13 +11,19 @@ row group empty.  This module answers it (round-12 VERDICT item 3):
 - :func:`prune_explain` — per-(file, row group) verdicts for
   driver-local indexes: the DECIDING tier, a human-readable evidence
   string, and any surviving page row-ranges.  Pure Python, zero Spark
-  jobs, same probe order as :meth:`MetadataIndex.read`.
+  jobs.
 - :func:`prune_explain_counts` — per-tier prune counts for BOTH index
   shapes; catalog-scale indexes aggregate executor-side (the verdicts
   never touch the driver — only ≤6 tier-count rows do).
 - ``smart_read(..., explain=True)`` — the router's decision with the
   per-tier survivor counts that produced it
   (:mod:`palletjack_spark.index.smart`).
+
+Explain and the plan share one kernel (:mod:`palletjack_spark.index.tiers`):
+``prune_explain`` runs the same ``prune_verdicts`` pass as
+:meth:`MetadataIndex.read`'s driver-local plan, and the catalog counts
+run the same ``value_verdict`` as ``value_prune_plan``, so explain
+matches the plan by construction.  This module only formats evidence.
 
 The reference exposes no such surface (its pruning is the caller's
 explicit row-group selection, palletjack.cc:383-393); this is the
@@ -26,14 +32,13 @@ operational layer a 100 TB catalog needs on day one.
 
 from __future__ import annotations
 
+from collections import Counter
 from typing import Sequence
 
 from palletjack_spark.errors import InvalidSelectionError
 from palletjack_spark.index.metadata_index import MetadataIndex
-
-#: probe order — identical to MetadataIndex.read()'s planning order; the
-#: reported tier is the FIRST one that proves the row group matchless
-TIERS = ("stats", "partition", "dictionary", "bloom", "page")
+from palletjack_spark.index.tiers import TIERS, prune_verdicts, value_conjuncts
+from palletjack_spark.sources.arrow_scan import partition_values
 
 
 def _fmt_vals(op: str, vals) -> str:
@@ -72,29 +77,57 @@ def _stats_evidence(rg: dict, predicate) -> str:
     return "row-group stats disprove the predicate"
 
 
-def _partition_miss(rg: dict, predicate, part_keys) -> str | None:
-    """Mirror of read()'s safe-equality partition gate: the evidence
-    string when a partition value mismatch prunes this row's file."""
-    import re
+def _evidence(r: dict, tier, conj, row_ranges, predicate) -> str:
+    """The human-readable proof behind one verdict."""
+    if tier == "stats":
+        return _stats_evidence(r, predicate)
+    if tier == "partition":
+        col_name, _op, v, *_ = conj
+        actual = partition_values(r["file"]).get(col_name)
+        return f"partition {col_name}={actual!r} != {v!r}"
+    if tier == "page":
+        return "page envelopes leave no surviving page for the predicate"
+    if tier is not None:
+        _c, col_name, values, mode = value_conjuncts([conj])[0]
+        if tier == "bloom":
+            return f"bloom filter proves {col_name} holds none of {values!r}"
+        if mode == "eq":
+            return f"dictionary proves {col_name} holds none of {values!r}"
+        return (
+            f"dictionary of {col_name} lies wholly inside the excluded "
+            f"set {values!r}"
+        )
+    if row_ranges:
+        kept_n = sum(e - s for s, e in row_ranges)
+        return f"page index keeps {kept_n} of {r['num_rows']} rows"
+    return ""
 
-    from palletjack_spark.sources.arrow_scan import partition_values
 
-    if not part_keys:
-        return None
-    for col_name, op, *vals in predicate:
-        if (
-            col_name in part_keys
-            and op in ("=", "==")
-            and vals
-            and isinstance(vals[0], str)
-            and re.fullmatch(r"[A-Za-z0-9._\-]+", vals[0])
-        ):
-            actual = partition_values(rg["file"]).get(col_name)
-            if actual != vals[0]:
-                return (
-                    f"partition {col_name}={actual!r} != {vals[0]!r}"
-                )
-    return None
+def _local_verdicts(index, predicate, files, row_groups) -> list[tuple]:
+    """``tiers.prune_verdicts`` over a driver-local index's candidate
+    rows, in (file, row_group) order, with the partition keys and data
+    columns ``read()`` plans with."""
+    if index._local is None:
+        raise InvalidSelectionError(
+            "prune_explain needs a driver-local index; use "
+            "prune_explain_counts for catalog-scale indexes"
+        )
+    if not predicate:
+        raise InvalidSelectionError("prune_explain needs a predicate")
+    rg_rows = index._local[0]
+    if files is not None:
+        want_f = set(files)
+        rg_rows = [r for r in rg_rows if r["file"] in want_f]
+    if row_groups is not None:
+        want_rg = {int(r) for r in row_groups}
+        rg_rows = [r for r in rg_rows if r["row_group"] in want_rg]
+    part_keys = index.partition_keys()
+    return prune_verdicts(
+        sorted(rg_rows, key=lambda x: (x["file"], x["row_group"])),
+        predicate,
+        part_keys,
+        index.arrow_schema(files).names if part_keys else (),
+    )
 
 
 def prune_explain(
@@ -112,129 +145,30 @@ def prune_explain(
          "tier": "bloom", "evidence": "bloom filter proves k holds "
          "none of [123]", "row_ranges": None}
 
-    ``tier`` is the FIRST tier (probe order: stats, partition,
-    dictionary, bloom, page — the same order ``read()`` plans in) that
-    PROVED the row group matchless; kept rows have ``tier=None`` and,
-    when the page index restricts them to a row subset, the surviving
-    ``row_ranges`` with evidence.  Explaining is pure observation: it
-    runs the same probes ``read()`` would, so the verdicts are the plan.
+    ``tier`` is the FIRST tier (in :data:`TIERS` order) that PROVED the
+    row group matchless; kept rows have ``tier=None`` and, when the page
+    index restricts them to a row subset, the surviving ``row_ranges``
+    with evidence.  The verdicts come from the pipeline ``read()`` plans
+    with (``tiers.prune_verdicts``), so they are the plan.
 
     Catalog-scale indexes (no driver-resident rows) must use
     :func:`prune_explain_counts` — per-row verdicts over a 100 TB
     catalog are exactly the driver collect the engine refuses
     elsewhere.
     """
-    if index._local is None:
-        raise InvalidSelectionError(
-            "prune_explain needs a driver-local index; use "
-            "prune_explain_counts for catalog-scale indexes"
+    return [
+        {
+            "file": r["file"],
+            "row_group": int(r["row_group"]),
+            "verdict": "pruned" if tier else "kept",
+            "tier": tier,
+            "evidence": _evidence(r, tier, conj, rngs, predicate),
+            "row_ranges": rngs,
+        }
+        for r, tier, conj, rngs in _local_verdicts(
+            index, predicate, files, row_groups
         )
-    if not predicate:
-        raise InvalidSelectionError("prune_explain needs a predicate")
-
-    from palletjack_spark.index.bloomprune import (
-        BloomProber,
-        _conjunct_prunes as _bloom_prunes,
-    )
-    from palletjack_spark.index.dictprune import (
-        DictionaryProber,
-        _conjunct_prunes as _dict_prunes,
-        _dict_conjuncts,
-    )
-    from palletjack_spark.index.pageprune import (
-        PageProber,
-        _row_lookup,
-    )
-
-    rg_rows = index._local[0]
-    if files is not None:
-        want_f = set(files)
-        rg_rows = [r for r in rg_rows if r["file"] in want_f]
-    if row_groups is not None:
-        want_rg = {int(r) for r in row_groups}
-        rg_rows = [r for r in rg_rows if r["row_group"] in want_rg]
-
-    part_keys = index.partition_keys()
-    conj = _dict_conjuncts(predicate)
-    dict_prober = DictionaryProber()
-    bloom_prober = BloomProber()
-    page_prober = PageProber()
-
-    out = []
-    for r in sorted(rg_rows, key=lambda x: (x["file"], x["row_group"])):
-        tier = None
-        evidence = ""
-        row_ranges = None
-
-        if not MetadataIndex._keep_local(r, predicate):
-            tier, evidence = "stats", _stats_evidence(r, predicate)
-        if tier is None:
-            miss = _partition_miss(r, predicate, part_keys)
-            if miss is not None:
-                tier, evidence = "partition", miss
-        if tier is None:
-            look = _row_lookup(r)
-            for col_name, values, mode in conj:
-                got = look(col_name)
-                if got is None:
-                    continue
-                cix, meta = got
-                if _dict_prunes(
-                    dict_prober, r["file"], r["row_group"], cix, meta,
-                    values, mode,
-                ):
-                    tier = "dictionary"
-                    evidence = (
-                        f"dictionary proves {col_name} holds none of "
-                        f"{values!r}"
-                        if mode == "eq"
-                        else f"dictionary of {col_name} lies wholly "
-                        f"inside the excluded set {values!r}"
-                    )
-                    break
-                if mode == "eq" and _bloom_prunes(
-                    bloom_prober, r["file"], r["row_group"], cix, meta,
-                    values,
-                ):
-                    tier = "bloom"
-                    evidence = (
-                        f"bloom filter proves {col_name} holds none of "
-                        f"{values!r}"
-                    )
-                    break
-        if tier is None:
-            look = _row_lookup(r)
-            nrows = r.get("num_rows")
-            if not page_prober.rg_can_match(
-                r["file"], r["row_group"], nrows, predicate, look
-            ):
-                tier = "page"
-                evidence = (
-                    "page envelopes leave no surviving page for the "
-                    "predicate"
-                )
-            elif nrows:
-                rngs = page_prober.surviving_ranges(
-                    r["file"], r["row_group"], nrows, predicate, look
-                )
-                if rngs and sum(e - s for s, e in rngs) < nrows:
-                    row_ranges = [[int(s), int(e)] for s, e in rngs]
-                    kept_n = sum(e - s for s, e in rngs)
-                    evidence = (
-                        f"page index keeps {kept_n} of {nrows} rows"
-                    )
-
-        out.append(
-            {
-                "file": r["file"],
-                "row_group": int(r["row_group"]),
-                "verdict": "pruned" if tier else "kept",
-                "tier": tier,
-                "evidence": evidence,
-                "row_ranges": row_ranges,
-            }
-        )
-    return out
+    ]
 
 
 def prune_explain_counts(
@@ -258,17 +192,14 @@ def prune_explain_counts(
     is untouched.
     """
     if index._local is not None:
-        verdicts = prune_explain(
-            index, predicate, files=files, row_groups=row_groups
+        n = Counter(
+            tier
+            for _r, tier, _c, _rr in _local_verdicts(
+                index, predicate, files, row_groups
+            )
         )
-        pruned = {t: 0 for t in TIERS}
-        kept = 0
-        for v in verdicts:
-            if v["tier"]:
-                pruned[v["tier"]] += 1
-            else:
-                kept += 1
-        return {"total": len(verdicts), "kept": kept, "pruned": pruned}
+        return {"total": sum(n.values()), "kept": n[None],
+                "pruned": {t: n[t] for t in TIERS}}
 
     from pyspark.sql import functions as F
 
@@ -283,10 +214,16 @@ def prune_explain_counts(
     part_plan = stats_kept_plan
     n_part = n_stats
     if index.partition_keys():
-        part_plan = index._partition_plan_filter(stats_kept_plan, predicate)
+        part_plan = index._partition_plan_filter(
+            stats_kept_plan, predicate,
+            data_columns=index.arrow_schema(files).names,
+        )
         n_part = part_plan.count()
     tier_rows = (
-        value_prune_plan(part_plan, predicate, explain=True)
+        value_prune_plan(
+            part_plan, MetadataIndex._normalize_predicate(predicate),
+            explain=True,
+        )
         .groupBy("pj_tier")
         .agg(F.count("*").alias("cnt"))
         .collect()

@@ -25,10 +25,10 @@ from pyspark.sql import types as T
 
 from palletjack_spark.errors import IndexFormatError, InvalidSelectionError
 from palletjack_spark.sources.arrow_scan import (
-    _TARGET_TASK_BYTES,
     arrow_to_spark_schema,
     partition_values,
     resolve_columns,
+    row_group_spans,
     scan_plan,
     scan_tasks,
 )
@@ -532,15 +532,12 @@ class MetadataIndex:
         column, and path-segment pruning could disagree with it."""
         import re
 
-        keys = set(self.partition_keys()) - set(data_columns or ())
-        for col_name, op, *vals in preds:
-            if col_name not in keys or op not in ("=", "==") or not vals:
-                continue
-            v = vals[0]
-            if not (
-                isinstance(v, str) and re.fullmatch(r"[A-Za-z0-9._\-]+", v)
-            ):
-                continue
+        from palletjack_spark.index.tiers import partition_gates
+
+        gates = partition_gates(
+            preds, self.partition_keys(), data_columns or ()
+        )
+        for col_name, _op, v, *_ in gates:
             if not re.fullmatch(r"[A-Za-z0-9._\- ]+", col_name):
                 continue  # exotic key name: leave it to the residual
             n = len(col_name)
@@ -1145,7 +1142,7 @@ class MetadataIndex:
         if self._local is not None:
             # small driver-resident index: plan in plain Python — no Spark
             # job before the scan itself — and chunk each file's selection
-            # into ~128 MB spans (parity with arrow_scan._plan_tasks)
+            # into ~128 MB spans (the span chunker _plan_tasks uses)
             rg_rows = self._local[0]
             row_ranges: dict = {}
             if files is not None:
@@ -1155,90 +1152,26 @@ class MetadataIndex:
                 want_rg = {int(r) for r in row_groups}
                 rg_rows = [r for r in rg_rows if r["row_group"] in want_rg]
             if predicate:
-                # datetime/date literals -> numeric projection for every
-                # PRUNING tier (the residual keeps the original literals)
-                norm_pred = self._normalize_predicate(predicate)
-                rg_rows = [r for r in rg_rows if self._keep_local(r, predicate)]
-                if part_keys:
-                    import re as _re
+                # every tier in order (tiers.prune_verdicts); the page
+                # tier also restricts surviving row groups to their page
+                # ROW RANGES — a pure superset restriction, the residual
+                # filter still applies
+                from palletjack_spark.index.tiers import prune_verdicts
 
-                    for col_name, op, *vals in predicate:
-                        # same safe-equality gate as the distributed plan
-                        # filter — exactness guaranteed by the residual
-                        if (
-                            col_name in part_keys
-                            and col_name not in schema.names
-                            and op in ("=", "==")
-                            and vals
-                            and isinstance(vals[0], str)
-                            and _re.fullmatch(r"[A-Za-z0-9._\-]+", vals[0])
-                        ):
-                            rg_rows = [
-                                r
-                                for r in rg_rows
-                                if partition_values(r["file"]).get(col_name)
-                                == vals[0]
-                            ]
-                if dictionary_prune:
-                    from palletjack_spark.index.bloomprune import (
-                        bloom_prune_rows,
-                    )
-                    from palletjack_spark.index.dictprune import dict_prune_rows
-                    from palletjack_spark.index.pageprune import (
-                        PageProber,
-                        _row_lookup,
-                        page_prune_rows,
-                    )
-
-                    rg_rows = dict_prune_rows(rg_rows, norm_pred)
-                    # bloom tier (q03g): equality point lookups on
-                    # dict-OVERFLOW high-cardinality chunks, where the
-                    # encoding_stats gate above correctly refused
-                    rg_rows = bloom_prune_rows(rg_rows, norm_pred)
-                    # page-index tier (q03h): per-page min/max envelopes
-                    # prove ENVELOPE-GAP row groups empty — values the
-                    # row-group envelope covers but no page does
-                    prober = PageProber()
-                    rg_rows = page_prune_rows(rg_rows, norm_pred, prober)
-                    # ...and, within surviving row groups, restrict the
-                    # scan to the surviving page ROW RANGES (OffsetIndex
-                    # granularity): rows the page index proves
-                    # non-matching never enter Spark.  Pure superset
-                    # restriction — the residual filter still applies,
-                    # results identical; the prober's footer/index
-                    # caches make this a re-read-free second pass.
-                    row_ranges = {}
-                    for r in rg_rows:
-                        nrows = r.get("num_rows")
-                        if not nrows:
-                            continue
-                        rngs = prober.surviving_ranges(
-                            r["file"], r["row_group"], nrows,
-                            norm_pred, _row_lookup(r),
-                        )
-                        if rngs is not None and (
-                            sum(e - s for s, e in rngs) < nrows
-                        ):
+                kept = []
+                for r, tier, _c, rngs in prune_verdicts(
+                    rg_rows, predicate, part_keys, schema.names,
+                    values=dictionary_prune,
+                ):
+                    if tier is None:
+                        kept.append(r)
+                        if rngs:
                             row_ranges[(r["file"], r["row_group"])] = rngs
+                rg_rows = kept
             sel_rows = sorted(
                 (r["file"], r["row_group"], r["total_byte_size"]) for r in rg_rows
             )
-            tasks: list[tuple[str, list[int]]] = []
-            cur_file: str | None = None
-            span: list[int] = []
-            span_bytes = 0
-            for f, rg, nbytes in sel_rows:
-                if f != cur_file and span:
-                    tasks.append((cur_file, span))
-                    span, span_bytes = [], 0
-                cur_file = f
-                span.append(rg)
-                span_bytes += nbytes or 0
-                if span_bytes >= _TARGET_TASK_BYTES:
-                    tasks.append((cur_file, span))
-                    span, span_bytes = [], 0
-            if span:
-                tasks.append((cur_file, span))
+            tasks = row_group_spans(sel_rows)
             sizes = [nbytes for _f, _rg, nbytes in sel_rows]
             df = scan_tasks(
                 self.spark, tasks, schema, sel, partition_keys=part_keys,

@@ -569,20 +569,9 @@ def page_prune_rows(
     """Drop row-group rows whose page index PROVES the predicate can't
     match — the envelope-gap tier.  Unknown verdicts keep the row;
     results are identical either way (residual filter downstream)."""
-    if not predicate:
-        return rg_rows
-    prober = prober or PageProber()
-    out = []
-    for r in rg_rows:
-        if prober.rg_can_match(
-            r["file"],
-            r["row_group"],
-            r.get("num_rows"),
-            predicate,
-            _row_lookup(r),
-        ):
-            out.append(r)
-    return out
+    from palletjack_spark.index.tiers import tier_filter
+
+    return tier_filter("page", rg_rows, predicate, prober or PageProber())
 
 
 # --------------------------------------------------------------------------

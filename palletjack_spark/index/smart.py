@@ -26,6 +26,7 @@ from __future__ import annotations
 
 import os
 import threading
+from collections import Counter
 from typing import Iterable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -33,6 +34,7 @@ from pyspark.sql import functions as F
 
 from palletjack_spark.index.builder import build_index
 from palletjack_spark.index.metadata_index import MetadataIndex, apply_predicate
+from palletjack_spark.index.tiers import TIERS, prune_verdicts
 
 #: serializes the session-global partition-inference toggle in the
 #: native-fallback read (see the comment at its use site)
@@ -76,7 +78,11 @@ def smart_read(
             rg_rows = idx._local[0]
             total = len(rg_rows)
             stats_kept = [
-                r for r in rg_rows if MetadataIndex._keep_local(r, predicate)
+                r
+                for r, tier, _c, _rr in prune_verdicts(
+                    rg_rows, predicate, values=False
+                )
+                if tier is None
             ]
             kept = len(stats_kept)
             tier_kept["stats"] = kept
@@ -98,23 +104,18 @@ def smart_read(
                 # the row-group envelope hides).  The probes cost one
                 # footer + one tiny page/bitset/index per surviving
                 # chunk, driver-local only — exactly the scale where they
-                # are cheapest.
-                from palletjack_spark.index.bloomprune import bloom_prune_rows
-                from palletjack_spark.index.dictprune import dict_prune_rows
-                from palletjack_spark.index.pageprune import page_prune_rows
-
-                # same literal normalization as the read the estimate
-                # gates (round-13 review: raw datetime literals made the
-                # probes keep everything, routing native even when the
-                # indexed read would have page-pruned most row groups)
-                est_pred = MetadataIndex._normalize_predicate(predicate)
-                after_dict = dict_prune_rows(stats_kept, est_pred)
-                after_bloom = bloom_prune_rows(after_dict, est_pred)
-                after_page = page_prune_rows(after_bloom, est_pred)
-                kept = len(after_page)
-                tier_kept["dictionary"] = len(after_dict)
-                tier_kept["bloom"] = len(after_bloom)
-                tier_kept["page"] = len(after_page)
+                # are cheapest.  Same pipeline as the read the estimate
+                # gates, but with no partition keys: tier_kept reports
+                # the value tiers only.
+                pruned = Counter(
+                    tier
+                    for _r, tier, _c, _rr in prune_verdicts(
+                        stats_kept, predicate, ranges=False
+                    )
+                )
+                for tier in TIERS[2:]:
+                    kept -= pruned[tier]
+                    tier_kept[tier] = kept
         else:
             # catalog-scale index: the routing decision is ONE one-row
             # aggregate job over the index DataFrame — never a per-file or

@@ -300,19 +300,36 @@ def _plan_tasks(
             )
         else:
             selected = validate_row_groups(row_groups, md.num_row_groups, path)
-        # chunk contiguous row groups into ~_TARGET_TASK_BYTES spans
-        span: list[int] = []
-        span_bytes = 0
-        for rg in selected:
-            span.append(rg)
-            span_bytes += md.row_group(rg).total_byte_size
-            if span_bytes >= _TARGET_TASK_BYTES:
-                tasks.append((path, span))
-                span, span_bytes = [], 0
-        if span:
-            tasks.append((path, span))
+        tasks += row_group_spans(
+            (path, rg, md.row_group(rg).total_byte_size) for rg in selected
+        )
     assert schema is not None
     return tasks, schema
+
+
+def row_group_spans(
+    selection: Iterable[tuple[str, int, int | None]],
+) -> list[tuple[str, list[int]]]:
+    """Split ``(file, row_group, bytes)`` triples, in scan order, into
+    ``(file, [row_group, ...])`` spans of about ``_TARGET_TASK_BYTES``
+    each.  A span never crosses a file; an unknown size counts as 0."""
+    tasks: list[tuple[str, list[int]]] = []
+    cur_file: str | None = None
+    span: list[int] = []
+    span_bytes = 0
+    for f, rg, nbytes in selection:
+        if f != cur_file and span:
+            tasks.append((cur_file, span))
+            span, span_bytes = [], 0
+        cur_file = f
+        span.append(rg)
+        span_bytes += nbytes or 0
+        if span_bytes >= _TARGET_TASK_BYTES:
+            tasks.append((cur_file, span))
+            span, span_bytes = [], 0
+    if span:
+        tasks.append((cur_file, span))
+    return tasks
 
 
 def _read_span_batches(

@@ -15,10 +15,10 @@ has never imported this package — plans its scan from the metadata index:
   returns EVERY filter as residual — row-group pruning is approximate,
   so Spark must keep evaluating the originals; identical results with
   or without the source, as everywhere else in the index stack.
-- ``partitions`` plans DRIVER-side from the index: stats pruning +
-  dictionary-page probing (q03e) + ~128 MB span chunking — the same plan
-  `MetadataIndex.read` produces, delivered through Spark's partition
-  planning instead of a mapInArrow stage.
+- ``partitions`` plans DRIVER-side from the index: the same tier
+  pipeline (``tiers.prune_verdicts``) and ~128 MB span chunker
+  (``arrow_scan.row_group_spans``) as `MetadataIndex.read`, delivered
+  through Spark's partition planning instead of a mapInArrow stage.
 - ``read`` runs executor-side and yields Arrow record batches for one
   (file, row-group span), the ``arrow_scan`` fast path.
 
@@ -50,10 +50,6 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import StructType
 
 FORMAT_NAME = "palletjack"
-
-#: mirror of arrow_scan's span sizing (import-free so the reader object
-#: stays trivially picklable)
-_TARGET_TASK_BYTES = 128 * 1024 * 1024
 
 
 def _translate(f: Filter):
@@ -233,76 +229,47 @@ class PalletJackReader(DataSourceReader):
         # Driver-side plan: a fresh local SparkSession handle is not
         # available here, but the driver-local index path never needs
         # one past the build — parse footers directly.
-        import re
-
         from palletjack_spark.index.builder import _extract_file_rows
-        from palletjack_spark.index.dictprune import dict_prune_rows
-        from palletjack_spark.index.metadata_index import MetadataIndex
+        from palletjack_spark.index.tiers import (
+            partition_gates,
+            partition_miss,
+            prune_verdicts,
+        )
         from palletjack_spark.sources.arrow_scan import (
             expand_paths,
-            partition_values,
+            row_group_spans,
         )
 
-        files = expand_paths(self._paths)
-        # file-level partition pruning for SAFE equality conjuncts on a
-        # partition key (same conservative charset gate as
-        # MetadataIndex._partition_plan_filter; everything else stays
-        # exact via Spark's residual evaluation of the original filters)
-        pk = set(self._part_keys)
-        for col_name, op, *vals in self._predicate:
-            if (
-                col_name in pk
-                and op in ("=", "==")
-                and vals
-                and isinstance(vals[0], str)
-                and re.fullmatch(r"[A-Za-z0-9._\-]+", vals[0])
-            ):
-                files = [
-                    f
-                    for f in files
-                    if partition_values(f).get(col_name) == vals[0]
-                ]
+        # the partition tier filters FILES before any footer is parsed;
+        # everything it leaves stays exact via Spark's residual
+        # evaluation of the original filters
+        gates = partition_gates(self._predicate, self._part_keys)
+        files = [
+            f for f in expand_paths(self._paths)
+            if partition_miss(f, gates) is None
+        ]
         rg_rows = []
         for p in files:
             _frow, rgs = _extract_file_rows(p)
-            for r in rgs:
-                r.pop("file_size", None)
-                r.pop("mtime_ns", None)
             rg_rows.extend(rgs)
         if self._predicate:
-            from palletjack_spark.index.bloomprune import bloom_prune_rows
-            from palletjack_spark.index.pageprune import page_prune_rows
-
             rg_rows = [
                 r
-                for r in rg_rows
-                if MetadataIndex._keep_local(r, self._predicate)
+                for r, tier, _c, _rr in prune_verdicts(
+                    rg_rows, self._predicate, ranges=False
+                )
+                if tier is None
             ]
-            rg_rows = dict_prune_rows(rg_rows, self._predicate)
-            # bloom tier (q03g): point lookups on dict-overflow chunks
-            rg_rows = bloom_prune_rows(rg_rows, self._predicate)
-            # page-index tier (q03h): per-page envelope gaps, incl. the
-            # range conjuncts the first two tiers can't probe
-            rg_rows = page_prune_rows(rg_rows, self._predicate)
-        sel = sorted(
-            (r["file"], r["row_group"], r["total_byte_size"]) for r in rg_rows
+        tasks = row_group_spans(
+            sorted(
+                (r["file"], r["row_group"], r["total_byte_size"])
+                for r in rg_rows
+            )
         )
-        parts: list[InputPartition] = []
-        cur_file, span, span_bytes = None, [], 0
-        for f, rg, nbytes in sel:
-            if f != cur_file and span:
-                parts.append(InputPartition((cur_file, span)))
-                span, span_bytes = [], 0
-            cur_file = f
-            span.append(rg)
-            span_bytes += nbytes or 0
-            if span_bytes >= _TARGET_TASK_BYTES:
-                parts.append(InputPartition((cur_file, span)))
-                span, span_bytes = [], 0
-        if span:
-            parts.append(InputPartition((cur_file, span)))
         # Spark requires >= 1 partition; an empty selection reads nothing
-        return parts or [InputPartition((None, []))]
+        return [InputPartition(t) for t in tasks] or [
+            InputPartition((None, []))
+        ]
 
     def read(self, partition: InputPartition) -> Iterator:
         from palletjack_spark.sources.arrow_scan import (
