@@ -389,23 +389,16 @@ def value_prune_plan(plan, predicate, explain: bool = False):
     from pyspark.sql import functions as F
 
     from palletjack_spark.index.dictprune import meta_from_row, plan_meta_columns
-    from palletjack_spark.index.pageprune import (
-        _EXCLUDE_OPS,
-        _NULL_OPS,
-        _VALUE_OPS,
-    )
+    from palletjack_spark.index.predicate import canonical
     from palletjack_spark.index.tiers import (
         new_probers,
         value_predicate,
         value_verdict,
     )
 
-    # every column a value tier can probe (the page tier's ops cover the
-    # dictionary's and the bloom's)
-    page_ops = _VALUE_OPS | _EXCLUDE_OPS | _NULL_OPS
-    cols = list(
-        dict.fromkeys(c for c, op, *_v in predicate or () if op in page_ops)
-    )
+    # every column a value tier can probe: the page tier probes every op
+    pred = canonical(predicate or ())
+    cols = list(dict.fromkeys(c[0] for c in pred))
     if not cols:
         if explain:
             return plan.select(
@@ -434,7 +427,7 @@ def value_prune_plan(plan, predicate, explain: bool = False):
     out_schema = "file string, row_group int, total_byte_size long, " + (
         "pj_tier string" if explain else "pj_ranges array<array<bigint>>"
     )
-    vpred = value_predicate([tuple(p) for p in predicate])
+    vpred = value_predicate(pred)
 
     def probe(batches):
         probers = new_probers()

@@ -41,6 +41,7 @@ from palletjack_spark.index.metadata_index import (
     ROW_GROUPS_SCHEMA,
     MetadataIndex,
 )
+from palletjack_spark.index.predicate import ceil_double, floor_double
 from palletjack_spark.sources.arrow_scan import expand_paths
 
 
@@ -99,25 +100,15 @@ def _stat_num_floor(v) -> float | None:
     Rounding mins DOWN and maxes UP keeps every stored [min_num, max_num]
     a SUPERSET of the true range: pruning stays sound, at worst one extra
     row group survives to the residual filter."""
-    import math
-
     b = _stat_num_base(v)
-    if b is None:
-        return None
-    f = float(b)
-    return math.nextafter(f, -math.inf) if f > b else f
+    return None if b is None else floor_double(b)
 
 
 def _stat_num_ceil(v) -> float | None:
     """Smallest double >= the exact statistic value (see
     :func:`_stat_num_floor`)."""
-    import math
-
     b = _stat_num_base(v)
-    if b is None:
-        return None
-    f = float(b)
-    return math.nextafter(f, math.inf) if f < b else f
+    return None if b is None else ceil_double(b)
 
 
 def _logical_tag(column_schema) -> str | None:

@@ -51,36 +51,27 @@ def _fmt_vals(op: str, vals) -> str:
     return f"{op} {vals[0]!r}"
 
 
-def _stats_evidence(rg: dict, predicate) -> str:
-    """The first conjunct the row-group stats disprove, with the stored
-    span — re-tested one conjunct at a time against the SAME gate the
-    planner used (``_keep_local``), so the attribution can't drift from
-    the decision."""
-    for conj in predicate:
-        if MetadataIndex._keep_local(rg, [conj]):
-            continue
-        col_name, op, *vals = conj
-        st = next(
-            (c for c in rg["columns"] if c["name"] == col_name), None
-        )
-        if st is None:
-            break
-        if st.get("stats_kind") == "text":
-            lo, hi = st.get("min_repr"), st.get("max_repr")
-        else:
-            lo, hi = st.get("min_num"), st.get("max_num")
-        return (
-            f"{col_name} {_fmt_vals(op, vals)} cannot match stats "
-            f"[{lo!r}, {hi!r}] (nulls={st.get('null_count')!r} of "
-            f"{rg.get('num_rows')!r})"
-        )
-    return "row-group stats disprove the predicate"
+def _stats_evidence(rg: dict, conj) -> str:
+    """The conjunct the stats tier disproved, with the stored span."""
+    col_name, op, *vals = conj
+    st = next((c for c in rg["columns"] if c["name"] == col_name), None)
+    if st is None:
+        return "row-group stats disprove the predicate"
+    if st.get("stats_kind") == "text":
+        lo, hi = st.get("min_repr"), st.get("max_repr")
+    else:
+        lo, hi = st.get("min_num"), st.get("max_num")
+    return (
+        f"{col_name} {_fmt_vals(op, vals)} cannot match stats "
+        f"[{lo!r}, {hi!r}] (nulls={st.get('null_count')!r} of "
+        f"{rg.get('num_rows')!r})"
+    )
 
 
-def _evidence(r: dict, tier, conj, row_ranges, predicate) -> str:
+def _evidence(r: dict, tier, conj, row_ranges) -> str:
     """The human-readable proof behind one verdict."""
     if tier == "stats":
-        return _stats_evidence(r, predicate)
+        return _stats_evidence(r, conj)
     if tier == "partition":
         col_name, _op, v, *_ = conj
         actual = partition_values(r["file"]).get(col_name)
@@ -162,7 +153,7 @@ def prune_explain(
             "row_group": int(r["row_group"]),
             "verdict": "pruned" if tier else "kept",
             "tier": tier,
-            "evidence": _evidence(r, tier, conj, rngs, predicate),
+            "evidence": _evidence(r, tier, conj, rngs),
             "row_ranges": rngs,
         }
         for r, tier, conj, rngs in _local_verdicts(
@@ -220,10 +211,7 @@ def prune_explain_counts(
         )
         n_part = part_plan.count()
     tier_rows = (
-        value_prune_plan(
-            part_plan, MetadataIndex._normalize_predicate(predicate),
-            explain=True,
-        )
+        value_prune_plan(part_plan, predicate, explain=True)
         .groupBy("pj_tier")
         .agg(F.count("*").alias("cnt"))
         .collect()

@@ -35,7 +35,6 @@ the Java rule compares doubles directly.
 from __future__ import annotations
 
 import glob
-import math
 import os
 import shutil
 import subprocess
@@ -45,6 +44,7 @@ from pyspark.sql import SparkSession, functions as F
 from palletjack_spark.errors import PalletJackSparkError
 from palletjack_spark.index.builder import build_index
 from palletjack_spark.index.metadata_index import MetadataIndex
+from palletjack_spark.index.predicate import ceil_double, floor_double
 
 EXTENSION_CLASS = "io.palletjack.spark.PalletJackSparkSessionExtensions"
 
@@ -173,29 +173,12 @@ def _per_file_stats(index: MetadataIndex) -> dict[str, dict[str, list[float]]]:
         if not range_ok and not nulls_ok:
             continue
         out.setdefault(r["file"], {})[r["name"]] = [
-            _double_floor(r["mn"]) if range_ok else nan,
-            _double_ceil(r["mx"]) if range_ok else nan,
+            floor_double(r["mn"]) if range_ok else nan,
+            ceil_double(r["mx"]) if range_ok else nan,
             float(r["nulls"]) if nulls_ok else nan,
             float(r["rows"]) if nulls_ok and r["rows"] is not None else nan,
         ]
     return out
-
-
-def _double_floor(v) -> float:
-    """Largest double <= v.  ``float(int)`` rounds to NEAREST, so an
-    int64 min above 2^53 can round UP past a literal that sits between
-    the true and rounded bound — the JVM rule would then wrongly prune
-    the file (round-9 ADVICE).  Rounding the min DOWN (and max UP) keeps
-    the pushed [min, max] a superset of the true range: pruning stays
-    sound, at worst one extra file survives."""
-    f = float(v)
-    return math.nextafter(f, -math.inf) if f > v else f
-
-
-def _double_ceil(v) -> float:
-    """Smallest double >= v (see :func:`_double_floor`)."""
-    f = float(v)
-    return math.nextafter(f, math.inf) if f < v else f
 
 
 def _digest_hash64(canon: str) -> int:
@@ -387,8 +370,8 @@ def _per_file_intervals(
     ColumnIndex whose every non-NULL page decodes; all-NULL pages add no
     interval (value conjuncts can't match them), so an all-NULL column
     pushes a valid EMPTY set.  Bounds round min-down/max-up into doubles
-    (``_double_floor``/``_double_ceil``) so int64 beyond 2^53 stays a
-    superset.  Sets larger than ``max_intervals`` coarsen by merging the
+    (``predicate.floor_double``/``ceil_double``) so int64 beyond 2^53
+    stays a superset.  Sets larger than ``max_intervals`` coarsen by merging the
     smallest inter-interval gaps — still a superset, never unsound.
     Anything else is simply absent → the rule keeps the file.
 
@@ -429,7 +412,7 @@ def _per_file_intervals(
                 if lo is None or hi is None:
                     ok = False  # undecodable bound: no evidence at all
                     break
-                got.append((_double_floor(lo), _double_ceil(hi)))
+                got.append((floor_double(lo), ceil_double(hi)))
             complete[key] = ok
     out: dict[str, dict[str, bytes]] = {}
     for (file, name), pairs in sorted(spans.items()):

@@ -24,6 +24,12 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from palletjack_spark.errors import IndexFormatError, InvalidSelectionError
+from palletjack_spark.index.predicate import (
+    canonical,
+    canonical_op,
+    normalize,
+    stats_condition,
+)
 from palletjack_spark.sources.arrow_scan import (
     arrow_to_spark_schema,
     partition_values,
@@ -95,44 +101,14 @@ FILES_SCHEMA = T.StructType(
     ]
 )
 
-#: predicate ops supported by stats pruning.  The exclusion ops
-#: (``!=``/``<>``/``not_in``) prune a row group only when its stats prove
-#: it SINGLE-VALUED on an excluded value (common in log data: a constant
-#: column per file); the dictionary tier additionally prunes when the
-#: whole dictionary is excluded (dictprune).
-_PRUNE_OPS = {
-    "<", "<=", ">", ">=", "=", "==", "between", "in", "is_null", "not_null",
-    "!=", "<>", "not_in",
-}
-
-
-def _keep_unknown(clause: Column) -> Column:
-    """Force a prune conjunct to the "unknown KEEPS" contract at the SQL
-    level: a clause that evaluates to NULL (round-16 sweep — e.g.
-    ``not_null`` against a corrupt sidecar whose ``num_rows`` is NULL,
-    or a mixed-type ``between`` whose string-vs-numeric coercion nulls
-    out) would otherwise null the whole condition, and a ``where``
-    treats NULL as false — pruning a row group nothing PROVED empty."""
-    return F.coalesce(clause, F.lit(True))
-
-
-def _nan_free(values) -> bool:
-    """A NaN literal must never drive pruning: Spark/DuckDB treat
-    ``NaN = NaN`` as TRUE (NaN sorts greatest), but parquet min/max stats
-    omit NaN and a Python set-membership probe says ``nan != nan`` — both
-    would prune groups whose NaN rows DO match.  Conjuncts carrying a NaN
-    keep every group; the residual filter stays exact."""
-    import math
-
-    return not any(isinstance(x, float) and math.isnan(x) for x in values)
-
 
 def apply_predicate(df: DataFrame, predicate: Sequence[tuple]) -> DataFrame:
     """The exact residual filter of a mini-language predicate: pruning
     only narrows the rows scanned, this makes the result exact."""
     for col_name, op, *vals in predicate:
         c = F.col(col_name)
-        if op in ("=", "=="):
+        op = canonical_op(op)
+        if op == "=":
             df = df.where(c == vals[0])
         elif op == "<":
             df = df.where(c < vals[0])
@@ -146,7 +122,7 @@ def apply_predicate(df: DataFrame, predicate: Sequence[tuple]) -> DataFrame:
             df = df.where(c.between(vals[0], vals[1]))
         elif op == "in":
             df = df.where(c.isin(list(vals[0]) if vals else []))
-        elif op in ("!=", "<>"):
+        elif op == "!=":
             df = df.where(c != vals[0])
         elif op == "not_in":
             df = df.where(~c.isin(list(vals[0]) if vals else []))
@@ -535,7 +511,7 @@ class MetadataIndex:
         from palletjack_spark.index.tiers import partition_gates
 
         gates = partition_gates(
-            preds, self.partition_keys(), data_columns or ()
+            canonical(preds), self.partition_keys(), data_columns or ()
         )
         for col_name, _op, v, *_ in gates:
             if not re.fullmatch(r"[A-Za-z0-9._\- ]+", col_name):
@@ -562,410 +538,10 @@ class MetadataIndex:
         except Exception:
             return False
 
-    @staticmethod
-    def _norm_lit(x):
-        """datetime/date predicate literals -> the index's numeric stat
-        projection (epoch micros / days — builder._stat_num_base's
-        convention), so range pruning on timestamp/date columns is
-        reachable from the predicate DSL (round-13 review: the builder
-        indexes those stats as numbers precisely for this, but a
-        datetime literal previously crashed ``float()`` with a raw
-        TypeError).  Everything else passes through; the RESIDUAL
-        filter keeps the original literal, so the final comparison is
-        Spark's own timestamp/date semantics."""
-        import datetime
-
-        if isinstance(x, (datetime.datetime, datetime.date)):
-            from palletjack_spark.index.builder import _stat_num_base
-
-            return _stat_num_base(x)
-        return x
-
-    @staticmethod
-    def _normalize_predicate(predicate: Sequence[tuple]) -> list[tuple]:
-        from palletjack_spark.errors import InvalidSelectionError
-
-        out = []
-        for col_name, op, *vals in predicate:
-            # arity validation (round-16 sweep): a malformed conjunct
-            # previously surfaced as a bare IndexError/TypeError deep in
-            # a prune tier — reject it here, once, with a clear message
-            if op == "between" and len(vals) != 2:
-                raise InvalidSelectionError(
-                    f"'between' needs exactly 2 values, got {len(vals)} "
-                    f"(column {col_name!r})"
-                )
-            if op in ("in", "not_in") and (
-                len(vals) != 1
-                or not isinstance(vals[0], (list, tuple, set, frozenset))
-            ):
-                raise InvalidSelectionError(
-                    f"{op!r} needs one list/set of values (column "
-                    f"{col_name!r})"
-                )
-            if op in ("<", "<=", ">", ">=", "=", "==", "!=", "<>") and not vals:
-                raise InvalidSelectionError(
-                    f"{op!r} needs a comparison value (column {col_name!r})"
-                )
-            nv = []
-            for v in vals:
-                if isinstance(v, (list, tuple, set)):
-                    nv.append([MetadataIndex._norm_lit(x) for x in v])
-                else:
-                    nv.append(MetadataIndex._norm_lit(v))
-            out.append((col_name, op, *nv))
-        return out
-
-    @staticmethod
-    def _lit_floor(x) -> float:
-        """Largest double <= the (possibly int64) predicate literal.
-        ``float(x)`` rounds to NEAREST, so a literal above 2^53 can round
-        UP past a row group's true max and a ``hi > lit`` test would
-        wrongly prune a matching group (round-10 ADVICE: the same hazard
-        as the stats side, on the literal side).  Lower-bound tests use
-        the floored literal, upper-bound tests the ceiled one — the
-        comparison is always at-least-as-permissive as the exact one, and
-        the residual filter stays exact."""
-        import math
-
-        f = float(x)
-        return math.nextafter(f, -math.inf) if f > x else f
-
-    @staticmethod
-    def _lit_ceil(x) -> float:
-        """Smallest double >= the predicate literal (see
-        :meth:`_lit_floor`)."""
-        import math
-
-        f = float(x)
-        return math.nextafter(f, math.inf) if f < x else f
-
-    @staticmethod
-    def _text_prunable(v) -> bool:
-        """String values prune only when ASCII: parquet string min/max
-        order is unsigned-byte lexicographic, which matches Spark/Python
-        string comparison for ASCII but not for all of Unicode (UTF-16
-        code-unit order diverges above the BMP) — non-ASCII conservatively
-        keeps every group."""
-        return isinstance(v, str) and v.isascii()
-
     def _prune_condition(self, predicate: Sequence[tuple]) -> Column:
-        """Build a row-group *overlap* condition from simple predicates
-        [(col, op, value)] evaluated against per-column min/max stats —
-        numeric values against min_num/max_num, ASCII string values
-        against the lexicographic min_repr/max_repr (guarded by the
-        ``stats_kind == 'text'`` tag so hex-of-binary reprs never
-        mis-compare), and NULL predicates against the per-chunk
-        ``null_count`` (``is_null`` prunes groups whose chunk holds zero
-        nulls; ``not_null`` prunes all-null chunks via
-        ``null_count == num_rows``).  A row group survives unless its
-        stats prove no row can match — missing stats keep the group
-        (conservative, like ParquetFilters)."""
-        text_ok = self._has_stats_kind()
-        cond = F.lit(True)
-        for col_name, op, *vals in self._normalize_predicate(predicate):
-            if op not in _PRUNE_OPS:
-                raise InvalidSelectionError(f"Unsupported prune op: {op}")
-            # F.get → NULL when the file lacks the column (heterogeneous
-            # index); missing stats conservatively keep the row group.
-            st = F.get(
-                F.filter(F.col("columns"), lambda c: c["name"] == F.lit(col_name)), 0
-            )
-            if op in ("is_null", "not_null"):
-                # a file that lacks the column reads as all-NULL, so a
-                # missing stat struct must KEEP for is_null and would be
-                # prunable for not_null — but distinguishing "column
-                # absent" from "pre-null_count sidecar" isn't possible
-                # here, so both stay conservative (keep).
-                nc = st["null_count"]
-                keep = (
-                    (nc > 0)
-                    if op == "is_null"
-                    else (nc < F.col("num_rows"))
-                )
-                cond = cond & _keep_unknown(
-                    F.when(st.isNotNull() & nc.isNotNull(), keep)
-                )
-                continue
-            if op == "in":
-                in_vals = list(vals[0]) if vals else []
-                if not in_vals:
-                    # empty IN list matches nothing anywhere
-                    cond = cond & F.lit(False)
-                    continue
-                if all(isinstance(x, str) for x in in_vals):
-                    if not text_ok or not all(
-                        self._text_prunable(x) for x in in_vals
-                    ):
-                        continue
-                    lo, hi = st["min_repr"], st["max_repr"]
-                    has = (
-                        lo.isNotNull()
-                        & hi.isNotNull()
-                        & (st["stats_kind"] == F.lit("text"))
-                    )
-                elif all(
-                    isinstance(x, (int, float)) and not isinstance(x, bool)
-                    for x in in_vals
-                ):
-                    if not _nan_free(in_vals):
-                        continue  # NaN member: keep (Spark NaN = NaN is true)
-                    lo, hi = st["min_num"], st["max_num"]
-                    has = lo.isNotNull() & hi.isNotNull()
-                    # lower-bound tests use the ceiled literal, upper-bound
-                    # the floored one: superset semantics for int64 members
-                    # above 2^53 (_lit_floor docstring)
-                    in_vals = [
-                        (self._lit_floor(x), self._lit_ceil(x)) for x in in_vals
-                    ]
-                else:
-                    continue  # mixed/unsupported member types: keep
-                keep = F.lit(False)
-                for x in in_vals:
-                    x_dn, x_up = x if isinstance(x, tuple) else (x, x)
-                    keep = keep | ((lo <= F.lit(x_up)) & (hi >= F.lit(x_dn)))
-                cond = cond & _keep_unknown(F.when(has, keep))
-                continue
-            if op in ("!=", "<>", "not_in"):
-                ex_vals = (
-                    list(vals[0])
-                    if op == "not_in" and vals
-                    else [vals[0]] if vals else []
-                )
-                if not ex_vals:
-                    continue  # excluding nothing prunes nothing
-                if all(isinstance(x, str) for x in ex_vals):
-                    if not text_ok or not all(
-                        self._text_prunable(x) for x in ex_vals
-                    ):
-                        continue
-                    lo, hi = st["min_repr"], st["max_repr"]
-                    has = (
-                        lo.isNotNull()
-                        & hi.isNotNull()
-                        & (st["stats_kind"] == F.lit("text"))
-                    )
-                elif all(
-                    isinstance(x, (int, float)) and not isinstance(x, bool)
-                    for x in ex_vals
-                ):
-                    if not _nan_free(ex_vals):
-                        continue
-                    # only exactly-representable literals can equal a
-                    # single-valued chunk's double stat: lo == hi implies
-                    # (by the floor/ceil superset rounding) the true value
-                    # IS that double, so a non-representable int64 literal
-                    # never excludes it
-                    ex_vals = [float(x) for x in ex_vals if float(x) == x]
-                    if not ex_vals:
-                        continue
-                    lo, hi = st["min_num"], st["max_num"]
-                    # FLOAT/DOUBLE chunks never exclusion-prune: parquet
-                    # writers compute min/max IGNORING NaN, so a chunk
-                    # holding {5.0, NaN} reports lo == hi == 5.0 while its
-                    # NaN rows DO satisfy ``col != 5.0`` (Spark/DuckDB
-                    # treat NaN as ordered-largest; NaN != x is TRUE) —
-                    # pruning would silently drop them (round-10 ADVICE).
-                    # NULL physical_type (pre-field sidecar) keeps too.
-                    has = (
-                        lo.isNotNull()
-                        & hi.isNotNull()
-                        & ~st["physical_type"].isin("FLOAT", "DOUBLE")
-                    )
-                else:
-                    continue  # mixed/unsupported member types: keep
-                # prune only a provably SINGLE-VALUED chunk whose one value
-                # is excluded — then no row satisfies != / NOT IN (NULL
-                # rows don't satisfy them either, so nulls don't matter)
-                keep = ~((lo == hi) & lo.isin(ex_vals))
-                cond = cond & _keep_unknown(F.when(has, keep))
-                continue
-            is_str = bool(vals) and isinstance(vals[0], str)
-            if is_str and (
-                not all(self._text_prunable(x) for x in vals) or not text_ok
-            ):
-                continue  # non-ASCII value or pre-round-5 sidecar: keep all
-            if is_str:
-                lo, hi = st["min_repr"], st["max_repr"]
-                has = (
-                    lo.isNotNull()
-                    & hi.isNotNull()
-                    & (st["stats_kind"] == F.lit("text"))
-                )
-                v = F.lit(vals[0])
-                v2 = F.lit(vals[1]) if op == "between" else None
-            else:
-                if not _nan_free(vals[:2] if op == "between" else vals[:1]):
-                    continue  # NaN literal: keep (Spark NaN = NaN is true)
-                lo, hi = st["min_num"], st["max_num"]
-                has = lo.isNotNull() & hi.isNotNull()
-                # direction-aware literal rounding (_lit_floor docstring):
-                # v_up feeds lower-bound tests, v_dn upper-bound tests
-                v = v2 = v_dn = v_up = None
-                if vals:
-                    v_dn = F.lit(self._lit_floor(vals[0]))
-                    v_up = F.lit(self._lit_ceil(vals[0]))
-                if op == "between":
-                    v2 = F.lit(self._lit_ceil(vals[1]))
-            if v is not None:  # string branch: exact literals
-                v_dn = v_up = v
-            if op in ("=", "=="):
-                keep = (lo <= v_up) & (hi >= v_dn)
-            elif op == "<":
-                keep = lo < v_up
-            elif op == "<=":
-                keep = lo <= v_up
-            elif op == ">":
-                keep = hi > v_dn
-            elif op == ">=":
-                keep = hi >= v_dn
-            elif op == "between":
-                keep = (hi >= v_dn) & (lo <= v2)
-            cond = cond & _keep_unknown(F.when(has, keep))
-        return cond
-
-    @staticmethod
-    def _keep_local(rg: dict, predicate: Sequence[tuple]) -> bool:
-        """Python mirror of ``_prune_condition`` for driver-local planning —
-        identical keep semantics: missing column, missing stats, or a
-        non-ASCII/untagged string value keep the row group (conservative)."""
-        for col_name, op, *vals in MetadataIndex._normalize_predicate(
-            predicate
-        ):
-            if op not in _PRUNE_OPS:
-                raise InvalidSelectionError(f"Unsupported prune op: {op}")
-            st = next((c for c in rg["columns"] if c["name"] == col_name), None)
-            if st is None:
-                continue
-            if op in ("is_null", "not_null"):
-                nc = st.get("null_count")
-                if nc is None:
-                    continue  # pre-null_count sidecar: keep
-                if op == "is_null" and nc == 0:
-                    return False
-                if (
-                    op == "not_null"
-                    and rg.get("num_rows") is not None
-                    and nc >= rg["num_rows"]
-                ):
-                    return False
-                continue
-            if op == "in":
-                in_vals = list(vals[0]) if vals else []
-                if not in_vals:
-                    return False  # empty IN matches nothing
-                if all(isinstance(x, str) for x in in_vals):
-                    if not all(
-                        MetadataIndex._text_prunable(x) for x in in_vals
-                    ):
-                        continue
-                    if st.get("stats_kind") != "text":
-                        continue
-                    lo, hi = st["min_repr"], st["max_repr"]
-                elif all(
-                    isinstance(x, (int, float)) and not isinstance(x, bool)
-                    for x in in_vals
-                ):
-                    if not _nan_free(in_vals):
-                        continue  # NaN member: keep (Spark NaN = NaN true)
-                    lo, hi = st["min_num"], st["max_num"]
-                    # superset literal rounding (_lit_floor docstring)
-                    in_vals = [
-                        (MetadataIndex._lit_floor(x), MetadataIndex._lit_ceil(x))
-                        for x in in_vals
-                    ]
-                else:
-                    continue
-                if lo is None or hi is None:
-                    continue
-                if not any(
-                    lo <= (x[1] if isinstance(x, tuple) else x)
-                    and (x[0] if isinstance(x, tuple) else x) <= hi
-                    for x in in_vals
-                ):
-                    return False
-                continue
-            if op in ("!=", "<>", "not_in"):
-                ex_vals = (
-                    list(vals[0])
-                    if op == "not_in" and vals
-                    else [vals[0]] if vals else []
-                )
-                if not ex_vals:
-                    continue  # excluding nothing prunes nothing
-                if all(isinstance(x, str) for x in ex_vals):
-                    if not all(
-                        MetadataIndex._text_prunable(x) for x in ex_vals
-                    ):
-                        continue
-                    if st.get("stats_kind") != "text":
-                        continue
-                    lo, hi = st["min_repr"], st["max_repr"]
-                elif all(
-                    isinstance(x, (int, float)) and not isinstance(x, bool)
-                    for x in ex_vals
-                ):
-                    if not _nan_free(ex_vals):
-                        continue
-                    # FLOAT/DOUBLE chunks never exclusion-prune: stats
-                    # ignore NaN, and NaN rows satisfy != / NOT IN
-                    # (_prune_condition's NaN-data gate, round-10 ADVICE)
-                    if st.get("physical_type") in (None, "FLOAT", "DOUBLE"):
-                        continue
-                    # only exactly-representable literals can equal a
-                    # single-valued chunk's double stat (_prune_condition)
-                    ex_vals = [float(x) for x in ex_vals if float(x) == x]
-                    if not ex_vals:
-                        continue
-                    lo, hi = st["min_num"], st["max_num"]
-                else:
-                    continue
-                if lo is None or hi is None:
-                    continue
-                # prune only a provably single-valued chunk on an excluded
-                # value (NULL rows don't satisfy != / NOT IN either)
-                if lo == hi and lo in ex_vals:
-                    return False
-                continue
-            if vals and isinstance(vals[0], str):
-                if not all(MetadataIndex._text_prunable(x) for x in vals):
-                    continue
-                if st.get("stats_kind") != "text":
-                    continue
-                lo, hi = st["min_repr"], st["max_repr"]
-                if lo is None or hi is None:
-                    continue
-                v = vals[0]
-                v2 = vals[1] if op == "between" else None
-            else:
-                if not _nan_free(vals[:2] if op == "between" else vals[:1]):
-                    continue  # NaN literal: keep (Spark NaN = NaN is true)
-                lo, hi = st["min_num"], st["max_num"]
-                if lo is None or hi is None:
-                    continue
-                # direction-aware literal rounding (_lit_floor docstring)
-                v = v2 = None
-                v_dn = MetadataIndex._lit_floor(vals[0]) if vals else None
-                v_up = MetadataIndex._lit_ceil(vals[0]) if vals else None
-                if op == "between":
-                    v2 = MetadataIndex._lit_ceil(vals[1])
-            if v is not None:  # string branch: exact literals
-                v_dn = v_up = v
-            if op in ("=", "=="):
-                keep = lo <= v_up and v_dn <= hi
-            elif op == "<":
-                keep = lo < v_up
-            elif op == "<=":
-                keep = lo <= v_up
-            elif op == ">":
-                keep = hi > v_dn
-            elif op == ">=":
-                keep = hi >= v_dn
-            else:  # between
-                keep = hi >= v_dn and lo <= v2
-            if not keep:
-                return False
-        return True
+        """The stats rule (:mod:`palletjack_spark.index.predicate`) as a
+        keep condition over ``row_groups``."""
+        return stats_condition(normalize(predicate), self._has_stats_kind())
 
     def _check_row_group_bounds(
         self, files: Sequence[str] | None, row_groups: Sequence[int]
@@ -1200,9 +776,7 @@ class MetadataIndex:
                 from palletjack_spark.index.bloomprune import value_prune_plan
 
                 sizing = plan  # pre-probe: index-only lineage, cheap agg
-                plan = value_prune_plan(
-                    plan, self._normalize_predicate(predicate)
-                )
+                plan = value_prune_plan(plan, predicate)
                 df = scan_plan(
                     self.spark, plan, schema, sel,
                     partition_keys=part_keys, sizing_plan=sizing,

@@ -93,6 +93,13 @@ from palletjack_spark.index.footer_splice import (
     int_field,
     read_footer_bytes,
 )
+from palletjack_spark.index.predicate import (
+    EXCLUDE_OPS,
+    LIST_OPS,
+    NULL_OPS,
+    OPS,
+    interval_keep,
+)
 
 __all__ = [
     "PageProber",
@@ -103,12 +110,6 @@ __all__ = [
     "read_column_index",
     "read_offset_index",
 ]
-
-#: predicate ops the page tier understands (mirror of the stats tier's
-#: mini-language; unsupported ops simply keep)
-_VALUE_OPS = {"=", "==", "in", "<", "<=", ">", ">=", "between"}
-_EXCLUDE_OPS = {"!=", "<>", "not_in"}
-_NULL_OPS = {"is_null", "not_null"}
 
 
 def page_index_offsets(
@@ -297,8 +298,9 @@ def _coerce_literal(value, physical_type: str):
 def _page_passes(op, vals, lo, hi, null_page: bool, null_count) -> bool:
     """True when page MAY hold a matching row (conservative); False is a
     proof it can't.  ``lo``/``hi`` are decoded bounds (None = unknown),
-    ``vals`` already coerced to the comparison space."""
-    if op in _NULL_OPS:
+    ``vals`` already coerced to the comparison space.  Value and
+    exclusion ops run the stats rule's interval test."""
+    if op in NULL_OPS:
         if op == "is_null":
             if null_page:
                 return True
@@ -308,40 +310,20 @@ def _page_passes(op, vals, lo, hi, null_page: bool, null_count) -> bool:
         return not null_page  # not_null: only an all-NULL page fails
     if null_page:
         return False  # no non-NULL value: fails =/in/ranges/exclusions
-    if op in _EXCLUDE_OPS:
-        # prune only a provably single-valued page whose value is
-        # excluded (float pages never reach here — gated by caller)
-        if lo is None or hi is None:
-            return True
-        return not (lo == hi and lo in vals)
     if lo is None or hi is None:
         return True
-    if op == "in":
-        return any(lo <= v <= hi for v in vals)
-    v = vals[0]
-    if op in ("=", "=="):
-        return lo <= v <= hi
-    if op == "<":
-        return lo < v
-    if op == "<=":
-        return lo <= v
-    if op == ">":
-        return hi > v
-    if op == ">=":
-        return hi >= v
-    if op == "between":
-        return hi >= v and lo <= vals[1]
-    return True
+    # float pages never reach an exclusion op here (gated by the caller)
+    return interval_keep(op, lo, hi, vals)
 
 
 def _conjunct_page_mask(ci: dict, op, raw_vals, physical_type) -> list | None:
     """Per-page pass/fail for one conjunct, or None when the conjunct
     can't probe this column (keep everything)."""
     t = (physical_type or "").upper()
-    if op in _NULL_OPS:
+    if op in NULL_OPS:
         vals = []
     else:
-        if op in ("in", "not_in"):
+        if op in LIST_OPS:
             if not raw_vals or not isinstance(
                 raw_vals[0], (list, tuple, set, frozenset)
             ):
@@ -359,7 +341,7 @@ def _conjunct_page_mask(ci: dict, op, raw_vals, physical_type) -> list | None:
                     return None  # malformed between: keep, never crash
             if not cand:
                 return None
-        if op in _EXCLUDE_OPS and t in ("FLOAT", "DOUBLE"):
+        if op in EXCLUDE_OPS and t in ("FLOAT", "DOUBLE"):
             return None  # NaN-data hazard: float pages never exclude
         vals = [_coerce_literal(v, t) for v in cand]
         if any(v is None for v in vals):
@@ -415,9 +397,9 @@ class PageProber(FooterProber):
         )
 
     def _masks(self, path, rg_idx, predicate, col_lookup):
-        """[(mask, first_rows | None)] per probeable conjunct, or None
-        entries skipped.  ``col_lookup(col_name)`` -> (col_idx, meta)
-        or None.  Memoized per (path, rg, predicate): every kept row
+        """[(mask, first_rows | None)] per probeable conjunct of a
+        canonical predicate (``predicate.canonical``), or None entries
+        skipped.  ``col_lookup(col_name)`` -> (col_idx, meta) or None.  Memoized per (path, rg, predicate): every kept row
         group pays this via rg_can_match AND again via surviving_ranges
         (round-13 review — the masks are pure functions of the cached
         ColumnIndex, so the second pass is free now)."""
@@ -431,7 +413,7 @@ class PageProber(FooterProber):
                 return hit
         out = []
         for col_name, op, *vals in predicate:
-            if op not in _VALUE_OPS | _EXCLUDE_OPS | _NULL_OPS:
+            if op not in OPS:
                 continue
             got = col_lookup(col_name)
             if got is None:
@@ -440,7 +422,7 @@ class PageProber(FooterProber):
             ptype = meta.get("physical_type")
             ltype = meta.get("logical_type")
             t = (ptype or "").upper()
-            if op not in _NULL_OPS and ltype not in _IDENTITY_LOGICAL.get(
+            if op not in NULL_OPS and ltype not in _IDENTITY_LOGICAL.get(
                 t, ()
             ):
                 continue  # non-identity logical re-encoding: never probe

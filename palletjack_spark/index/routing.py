@@ -57,6 +57,7 @@ from pyspark.sql.readwriter import DataFrameReader
 
 from palletjack_spark.index.builder import build_index
 from palletjack_spark.index.metadata_index import MetadataIndex
+from palletjack_spark.index.predicate import canonical_op
 
 #: canonical path -> MetadataIndex for routed reads
 _INDEXES: dict[str, MetadataIndex] = {}
@@ -116,7 +117,7 @@ _TERM = re.compile(
     r"(?P<col2>[A-Za-z_][A-Za-z0-9_]*))\s*\)*$"
 )
 
-_FLIP = {">": "<", "<": ">", ">=": "<=", "<=": ">=", "=": "=", "==": "="}
+_FLIP = {">": "<", "<": ">", ">=": "<=", "<=": ">=", "=": "="}
 
 _NULL_TERM = re.compile(
     r"^\(*\s*(?P<col>[A-Za-z_][A-Za-z0-9_]*)\s+IS\s+(?P<not>NOT\s+)?NULL\s*\)*$",
@@ -204,7 +205,7 @@ def _parse_prefix(text: str) -> list[tuple] | None:
     m = re.match(r"^([A-Za-z_]+|>=|<=|==?|>|<)\((.*)\)$", text, re.DOTALL)
     if not m:
         return None
-    op, inner = m.group(1), m.group(2)
+    op, inner = canonical_op(m.group(1)), m.group(2)
     args = _split_args(inner)
     if op == "and":
         terms: list[tuple] = []
@@ -230,7 +231,6 @@ def _parse_prefix(text: str) -> list[tuple] | None:
         col, lit, op = b, a, _FLIP[op]
     else:
         return None
-    op = "=" if op in ("=", "==") else op
     return [(col, op, float(lit) if "." in lit else int(lit))]
 
 
@@ -268,11 +268,11 @@ def parse_condition(condition) -> list[tuple] | None:
         if not m:
             return None
         if m.group("col"):
-            col, op, lit = m.group("col"), m.group("op"), m.group("lit")
+            col, lit = m.group("col"), m.group("lit")
+            op = canonical_op(m.group("op"))
         else:
             col, lit = m.group("col2"), m.group("lit2")
-            op = _FLIP[m.group("op2")]
-        op = "=" if op in ("=", "==") else op
+            op = _FLIP[canonical_op(m.group("op2"))]
         val = float(lit) if "." in lit else int(lit)
         out.append((col, op, val))
     return out or None
@@ -318,7 +318,7 @@ class RoutedDataFrame(ClassicDataFrame):
                 pred = None
         if pred is not None:
             # columns without stats are conservatively kept by the index
-            # (MetadataIndex._keep_local), so any parsed predicate is safe
+            # (predicate.stats_verdict), so any parsed predicate is safe
             _IN_ROUTE.on = True
             try:
                 return smart_read(

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from palletjack_spark.index.builder import build_index
 from palletjack_spark.index.metadata_index import MetadataIndex, apply_predicate
+from palletjack_spark.index.predicate import NULL_OPS, canonical_op
 from palletjack_spark.index.tiers import TIERS, prune_verdicts
 
 #: serializes the session-global partition-inference toggle in the
@@ -87,12 +88,7 @@ def smart_read(
             kept = len(stats_kept)
             tier_kept["stats"] = kept
             if total > 0 and kept / total > keep_fraction_threshold and any(
-                op
-                in (
-                    "=", "==", "in", "!=", "<>", "not_in",
-                    "<", "<=", ">", ">=", "between",
-                )
-                for _c, op, *_v in predicate
+                canonical_op(op) not in NULL_OPS for _c, op, *_v in predicate
             ):
                 # stats alone say "scan everything" — but an equality
                 # predicate may still prune via dictionary pages (q03e:

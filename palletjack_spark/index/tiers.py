@@ -4,7 +4,7 @@ A predicate prunes a row group when the first of five tiers proves it
 holds no match; every unknown verdict keeps it.  In order:
 
 1. **stats** — the row group's min/max/null counts
-   (``MetadataIndex._keep_local``);
+   (``predicate.stats_verdict``);
 2. **partition** — a safe equality on a hive ``key=value`` path segment
    whose key is not also a data column;
 3. **dictionary** — over every conjunct the dictionary can decide
@@ -28,8 +28,15 @@ from typing import Sequence
 
 from palletjack_spark.index.bloomprune import BloomProber
 from palletjack_spark.index.dictprune import DictionaryProber
-from palletjack_spark.index.metadata_index import MetadataIndex
 from palletjack_spark.index.pageprune import PageProber, _row_lookup
+from palletjack_spark.index.predicate import (
+    EQ_OPS,
+    EXCLUDE_OPS,
+    LIST_OPS,
+    canonical,
+    normalize,
+    stats_verdict,
+)
 from palletjack_spark.sources.arrow_scan import partition_values
 
 #: tier order; a pruned row group is attributed to the FIRST tier that
@@ -47,15 +54,15 @@ def partition_gates(
     part_keys: Sequence[str],
     data_columns: Sequence[str] = (),
 ) -> list[tuple]:
-    """The conjuncts the partition tier decides: safe equalities on a
-    partition key.  A key that is also a data column is skipped: the
+    """The conjuncts of a canonical predicate the partition tier decides:
+    safe equalities on a partition key.  A key that is also a data column is skipped: the
     attached column is then the data, which the path may contradict."""
     keys = set(part_keys) - set(data_columns)
     return [
         c
         for c in predicate
         if c[0] in keys
-        and c[1] in ("=", "==")
+        and c[1] == "="
         and len(c) > 2
         and isinstance(c[2], str)
         and _SAFE_VALUE.fullmatch(c[2])
@@ -71,29 +78,25 @@ def partition_miss(file: str, gates: Sequence[tuple]) -> tuple | None:
 
 
 def value_conjuncts(predicate: Sequence[tuple]) -> list[tuple]:
-    """``(conjunct, column, values, mode)`` per conjunct the dictionary
-    can decide.  Mode ``'eq'`` (=, IN) prunes when every value is
-    provably absent, and the bloom tier decides it too; mode ``'ex'``
-    (!=, <>, NOT IN) prunes when the dictionary lies wholly inside the
-    excluded values."""
+    """``(conjunct, column, values, mode)`` per conjunct of a canonical
+    predicate the dictionary can decide.  Mode ``'eq'`` (=, IN) prunes
+    when every value is provably absent, and the bloom tier decides it
+    too; mode ``'ex'`` (!=, NOT IN) prunes when the dictionary lies
+    wholly inside the excluded values."""
     out = []
     for c in predicate:
         col, op, *vals = c
-        if not vals:
+        if op not in EQ_OPS + EXCLUDE_OPS or not vals:
             continue
-        if op in ("=", "==", "!=", "<>"):
-            values = [vals[0]]
-        elif op in ("in", "not_in") and list(vals[0]):
-            values = list(vals[0])
-        else:
-            continue
-        out.append((c, col, values, "eq" if op in ("=", "==", "in") else "ex"))
+        values = list(vals[0]) if op in LIST_OPS else [vals[0]]
+        if values:
+            out.append((c, col, values, "eq" if op in EQ_OPS else "ex"))
     return out
 
 
 def value_predicate(predicate: Sequence[tuple]) -> tuple:
-    """The value tiers' prepared form of a predicate, built once per
-    pass: ``(conjunct list, value_conjuncts)``."""
+    """The value tiers' prepared form of a canonical predicate, built
+    once per pass: ``(conjunct list, value_conjuncts)``."""
     pred = list(predicate)
     return pred, value_conjuncts(pred)
 
@@ -164,15 +167,18 @@ def prune_verdicts(
     row, in input order: the stats tier, the partition tier over
     ``part_keys`` minus ``data_columns``, then (with ``values``)
     :func:`value_verdict`.  The predicate is normalized and validated
-    once.  The stats tier names no conjunct."""
-    pred = MetadataIndex._normalize_predicate(predicate)
+    once.  The stats tier names the conjunct it disproved as the caller
+    wrote it; the other tiers name its canonical form."""
+    conjuncts = normalize(predicate)
+    pred = [c.canon for c in conjuncts]
     gates = partition_gates(pred, part_keys, data_columns)
     vpred = value_predicate(pred)
     probers = new_probers()
     out = []
     for r in rows:
-        if not MetadataIndex._keep_local(r, pred):
-            out.append((r, "stats", None, None))
+        disproved = stats_verdict(r, conjuncts)
+        if disproved is not None:
+            out.append((r, "stats", disproved.source, None))
             continue
         miss = partition_miss(r["file"], gates)
         if miss is not None:
@@ -192,8 +198,8 @@ def prune_verdicts(
 def tier_filter(tier: str, rows: list[dict], predicate, prober) -> list[dict]:
     """``rows`` minus those ``tier`` alone proves matchless — the per-tier
     unit behind ``dict_prune_rows``, ``bloom_prune_rows`` and
-    ``page_prune_rows`` (the predicate is taken as given)."""
-    vpred = value_predicate(predicate)
+    ``page_prune_rows``, which accept either op spelling."""
+    vpred = value_predicate(canonical(predicate))
     return [
         r
         for r in rows

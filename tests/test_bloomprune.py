@@ -15,6 +15,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+from palletjack_spark.index.predicate import normalize, stats_verdict
 from tests.conftest import SF_DIR  # noqa: F401  (session fixture import)
 
 
@@ -67,7 +68,6 @@ def test_writer_roundtrip_and_pinned_skip_counts(tmp_path, monkeypatch):
         bloom_prune_rows,
     )
     from palletjack_spark.index.builder import _extract_file_rows
-    from palletjack_spark.index.metadata_index import MetadataIndex
 
     path = _overflow_fixture(tmp_path)
     t = pq.read_table(path)
@@ -77,7 +77,7 @@ def test_writer_roundtrip_and_pinned_skip_counts(tmp_path, monkeypatch):
     _f, rgs = _extract_file_rows(path)
     # stats keep all 4 (interleaved layout defeats min/max)
     stats_kept = [
-        r for r in rgs if MetadataIndex._keep_local(r, [("k", "=", 123)])
+        r for r in rgs if stats_verdict(r, normalize([("k", "=", 123)])) is None
     ]
     assert len(stats_kept) == 4
     # bloom keeps exactly rg 3 (123 % 4)

@@ -13,6 +13,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+from palletjack_spark.index.predicate import normalize, stats_verdict
 from tests.conftest import SF_DIR  # noqa: F401  (session fixture import)
 
 
@@ -103,7 +104,7 @@ def test_dict_prune_skips_provably_absent_row_groups(spark, tmp_path):
     idx = build_index(spark, path)
     pred = [("tag", "=", "user_0005")]  # 5 % 4 == 1 -> rg1 only
     rows = idx._local[0]
-    stats_kept = [r for r in rows if idx._keep_local(r, pred)]
+    stats_kept = [r for r in rows if stats_verdict(r, normalize(pred)) is None]
     assert len(stats_kept) == 4  # min/max can't prune interleaved values
     dict_kept = dict_prune_rows(stats_kept, pred)
     assert [r["row_group"] for r in dict_kept] == [1]
@@ -155,7 +156,7 @@ def test_dict_prune_conservative_on_unprobeable_chunks(spark, tmp_path):
     idx = build_index(spark, nd)
     rows = idx._local[0]
     pred = [("tag", "=", "user_0199")]
-    kept = [r for r in rows if idx._keep_local(r, pred)]
+    kept = [r for r in rows if stats_verdict(r, normalize(pred)) is None]
     # plain-encoded chunks: nothing prunable beyond stats, nothing lost
     assert dict_prune_rows(kept, pred) == kept
     got = idx.read(columns=["tag"], predicate=pred).collect()
@@ -313,7 +314,7 @@ def test_in_predicate_prunes_stats_and_dictionaries(spark, tmp_path):
     idx = build_index(spark, path)
     pred = [("tag", "in", ["user_0005", "user_0006"])]  # rgs 1 and 2
     rows = idx._local[0]
-    stats_kept = [r for r in rows if idx._keep_local(r, pred)]
+    stats_kept = [r for r in rows if stats_verdict(r, normalize(pred)) is None]
     assert len(stats_kept) == 4  # interleaving defeats min/max
     dict_kept = dict_prune_rows(stats_kept, pred)
     assert sorted(r["row_group"] for r in dict_kept) == [1, 2]
@@ -340,7 +341,7 @@ def test_in_predicate_prunes_stats_and_dictionaries(spark, tmp_path):
     skept = [
         r
         for r in sidx._local[0]
-        if sidx._keep_local(r, [("n", "in", [5, 7])])
+        if stats_verdict(r, normalize([("n", "in", [5, 7])])) is None
     ]
     assert [r["row_group"] for r in skept] == [0]
     # empty IN matches nothing
@@ -407,7 +408,7 @@ def test_unsigned_column_not_wrongly_pruned(spark, tmp_path):
     col = rg["columns"][0]
     assert col["logical_type"] == "INT(32,false)"
     pred = [("u", "=", 3_000_000_000)]
-    assert idx._keep_local(rg, pred)  # stats keep (value in range)
+    assert stats_verdict(rg, normalize(pred)) is None  # stats keep (value in range)
     # the gate refuses the probe -> the row group SURVIVES
     assert [r["row_group"] for r in dict_prune_rows([rg], pred)] == [0]
 
@@ -459,7 +460,7 @@ def test_exclusion_ops_prune_stats_and_dictionaries(spark, tmp_path):
     idx = build_index(spark, path)
     rows = idx._local[0]
     pred = [("k", "not_in", ["a", "b"])]
-    stats_kept = [r for r in rows if idx._keep_local(r, pred)]
+    stats_kept = [r for r in rows if stats_verdict(r, normalize(pred)) is None]
     assert len(stats_kept) == 2  # neither rg is single-valued
     dict_kept = dict_prune_rows(stats_kept, pred)
     assert [r["row_group"] for r in dict_kept] == [1]  # {a,b} excluded
@@ -482,7 +483,9 @@ def test_exclusion_ops_prune_stats_and_dictionaries(spark, tmp_path):
     )
     cidx = build_index(spark, cpath)
     ckept = [
-        r for r in cidx._local[0] if cidx._keep_local(r, [("k", "!=", "a")])
+        r
+        for r in cidx._local[0]
+        if stats_verdict(r, normalize([("k", "!=", "a")])) is None
     ]
     assert [r["row_group"] for r in ckept] == [1]
     assert [r["k"] for r in cidx.read(predicate=[("k", "!=", "a")]).collect()] == ["b"] * 100
@@ -501,7 +504,6 @@ def test_exclusion_never_prunes_float_chunks_with_nan(spark, tmp_path):
     exclusion prune must therefore never fire on FLOAT/DOUBLE chunks;
     integer chunks keep pruning."""
     from palletjack_spark.index.builder import build_index
-    from palletjack_spark.index.metadata_index import MetadataIndex
 
     path = str(tmp_path / "nan.parquet")
     pq.write_table(
@@ -518,7 +520,7 @@ def test_exclusion_never_prunes_float_chunks_with_nan(spark, tmp_path):
     st = next(c for c in rows[0]["columns"] if c["name"] == "x")
     assert st["min_num"] == st["max_num"] == 5.0
     for pred in ([("x", "!=", 5.0)], [("x", "not_in", [5.0, 9.0])]):
-        assert MetadataIndex._keep_local(rows[0], pred)
+        assert stats_verdict(rows[0], normalize(pred)) is None
         assert idx.prune(predicate=pred).count() == 2
         got = [r["x"] for r in idx.read(predicate=pred).collect()]
         import math
@@ -536,7 +538,7 @@ def test_exclusion_never_prunes_float_chunks_with_nan(spark, tmp_path):
     iidx = build_index(spark, ipath)
     ikept = [
         r for r in iidx._local[0]
-        if MetadataIndex._keep_local(r, [("x", "!=", 5)])
+        if stats_verdict(r, normalize([("x", "!=", 5)])) is None
     ]
     assert [r["row_group"] for r in ikept] == [1]
     assert iidx.prune(predicate=[("x", "!=", 5)]).count() == 1

@@ -16,6 +16,7 @@ import pytest
 from palletjack_spark import build_index, load_index, read_parquet_arrow
 from palletjack_spark.errors import IndexFormatError, InvalidSelectionError
 from palletjack_spark.sources.arrow_scan import read_schema_arrow
+from palletjack_spark.index.predicate import normalize, stats_verdict
 from tests.conftest import SF_DIR
 
 N_ROW_GROUPS = 5
@@ -1117,7 +1118,6 @@ def test_stat_superset_rounding_above_2_53(spark, tmp_path):
     strict </> pruning stays a superset of the true range (round-10
     ADVICE, medium).  Both hazards below wrongly pruned before the fix."""
     from palletjack_spark.index.builder import build_index
-    from palletjack_spark.index.metadata_index import MetadataIndex
 
     big = 2**53
     # hazard 1: true max big+1 used to STORE as big -> ('x','>',big) pruned
@@ -1126,7 +1126,7 @@ def test_stat_superset_rounding_above_2_53(spark, tmp_path):
     idx1 = build_index(spark, p1)
     col = idx1._local[0][0]["columns"][0]
     assert col["min_num"] <= big + 1 <= col["max_num"]
-    assert MetadataIndex._keep_local(idx1._local[0][0], [("x", ">", big)])
+    assert stats_verdict(idx1._local[0][0], normalize([("x", ">", big)])) is None
     assert [r["x"] for r in idx1.read(predicate=[("x", ">", big)]).collect()] == [big + 1]
 
     # hazard 2: the LITERAL big+3 rounds UP to big+4 == the true max ->
@@ -1134,7 +1134,7 @@ def test_stat_superset_rounding_above_2_53(spark, tmp_path):
     p2 = str(tmp_path / "b2.parquet")
     pq.write_table(pa.table({"x": pa.array([big + 4], pa.int64())}), p2)
     idx2 = build_index(spark, p2)
-    assert MetadataIndex._keep_local(idx2._local[0][0], [("x", ">", big + 3)])
+    assert stats_verdict(idx2._local[0][0], normalize([("x", ">", big + 3)])) is None
     assert [r["x"] for r in idx2.read(predicate=[("x", ">", big + 3)]).collect()] == [big + 4]
 
     # the distributed condition agrees with the local mirror

@@ -12,6 +12,7 @@ import random
 import pyarrow as pa
 import pyarrow.parquet as pq
 
+from palletjack_spark.index.predicate import canonical, normalize, stats_verdict
 from tests.conftest import SF_DIR  # noqa: F401  (session fixture import)
 
 
@@ -83,7 +84,6 @@ def test_pinned_skip_counts(tmp_path):
     the literal), the page tier keeps EXACTLY the owning one — for
     equality, IN, and pure ranges — and pins 1 of 4 surviving pages."""
     from palletjack_spark.index.builder import _extract_file_rows
-    from palletjack_spark.index.metadata_index import MetadataIndex
     from palletjack_spark.index.pageprune import PageProber, page_prune_rows
 
     path = _gap_fixture(tmp_path)
@@ -96,7 +96,7 @@ def test_pinned_skip_counts(tmp_path):
         [("k", ">=", 5600), ("k", "<=", 5700)],
         [("tag", "=", "t0005632")],
     ):
-        stats_kept = [r for r in rgs if MetadataIndex._keep_local(r, pred)]
+        stats_kept = [r for r in rgs if stats_verdict(r, normalize(pred)) is None]
         assert len(stats_kept) == 4, pred  # stats tier is blind here
         page_kept = page_prune_rows(stats_kept, pred)
         assert [r["row_group"] for r in page_kept] == [1], pred
@@ -890,7 +890,6 @@ def test_malformed_conjuncts_keep_not_crash():
 
     from palletjack_spark.errors import InvalidSelectionError
     from palletjack_spark.index import pageprune as P
-    from palletjack_spark.index.metadata_index import MetadataIndex
 
     ci = {"null_pages": [False], "mins": [1], "maxs": [9], "null_counts": None}
     assert P._conjunct_page_mask(ci, "between", (5,), "INT64") is None
@@ -905,10 +904,10 @@ def test_malformed_conjuncts_keep_not_crash():
         [("k", "=")],
     ]:
         with _pytest.raises(InvalidSelectionError):
-            MetadataIndex._normalize_predicate(pred)
+            canonical(pred)
     # well-formed ones still pass
-    assert MetadataIndex._normalize_predicate([("k", "between", 1, 2)])
-    assert MetadataIndex._normalize_predicate([("k", "in", [1, 2])])
+    assert canonical([("k", "between", 1, 2)])
+    assert canonical([("k", "in", [1, 2])])
 
 
 def test_page_walk_rejects_negative_page_size(tmp_path):

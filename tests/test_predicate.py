@@ -1,0 +1,192 @@
+"""The one stats rule (``palletjack_spark.index.predicate``): both index
+shapes answer alike, and the Column rendering of the rule agrees with
+its Python rendering on every stats row and predicate."""
+
+from __future__ import annotations
+
+import datetime
+import random
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+
+from palletjack_spark import build_index, prune_explain_counts
+from palletjack_spark.index.metadata_index import ROW_GROUPS_SCHEMA
+from palletjack_spark.index.predicate import (
+    OPS,
+    SPELLINGS,
+    normalize,
+    stats_condition,
+    stats_verdict,
+)
+from palletjack_spark.index.smart import smart_read
+
+# -- both index shapes over one layout -----------------------------------
+
+
+@pytest.fixture(scope="module")
+def layout(tmp_path_factory):
+    """``f1`` has columns ``a`` (int) and ``s`` (string) in 4 row groups;
+    ``f2`` has only ``s``, in 2 row groups."""
+    root = tmp_path_factory.mktemp("predicate")
+    f1, f2 = str(root / "f1.parquet"), str(root / "f2.parquet")
+    pq.write_table(pa.table({
+        "a": pa.array(range(4), pa.int64()),
+        "s": [f"k{i:03d}" for i in range(4)],
+    }), f1, row_group_size=1)
+    pq.write_table(pa.table({"s": ["k100", "k101"]}), f2, row_group_size=1)
+    return f1, f2
+
+
+@pytest.fixture(scope="module", params=["local", "catalog"])
+def shape(request, spark, layout):
+    catalog = request.param == "catalog"
+    idx = build_index(
+        spark, list(layout), use_cache=False, driver_fast_path=not catalog
+    )
+    assert (idx._local is None) == catalog
+    return idx, layout
+
+
+def test_empty_in_prunes_every_row_group(shape):
+    idx, _ = shape
+    assert prune_explain_counts(idx, [("a", "in", [])]) == {
+        "total": 6, "kept": 0,
+        "pruned": {"stats": 6, "partition": 0, "dictionary": 0,
+                   "bloom": 0, "page": 0},
+    }
+
+
+def test_bytes_literal_keeps(shape):
+    idx, (f1, _f2) = shape
+    pred = [("s", "=", b"k001")]
+    assert idx.read(files=[f1], predicate=pred).count() == 1
+    assert prune_explain_counts(idx, pred, files=[f1])["pruned"]["stats"] == 0
+
+
+def test_none_literal_keeps(spark, shape):
+    idx, (f1, _f2) = shape
+    pred = [("a", "=", None)]
+    assert idx.read(files=[f1], predicate=pred).count() == 0
+    counts = prune_explain_counts(idx, pred, files=[f1])
+    assert counts["total"] == 4 and counts["pruned"]["stats"] == 0
+    assert smart_read(spark, f1, predicate=pred, index=idx).count() == 0
+
+
+# -- Column vs Python: one rule, two renderings ---------------------------
+
+_STAT_FIELDS = ROW_GROUPS_SCHEMA["columns"].dataType.elementType.fieldNames()
+_NUMS = [-5.0, 0.0, 1.0, 2.5, 3.0, 7.0, 2.0**53, 2.0**53 + 2, 2.0**63, 1e300]
+_TEXTS = ["", "a", "k000", "k001", "m", "zz", "é", "\U0001f600"]
+
+
+def _stat(rng, name):
+    """One column's stats: numeric, text or missing, with or without
+    null counts, under every physical type."""
+    st = dict.fromkeys(_STAT_FIELDS)
+    st["name"] = name
+    kind = rng.choice(["num", "num", "text", "text", "missing"])
+    if kind == "num":
+        lo, hi = sorted(rng.choice(_NUMS) for _ in range(2))
+        if rng.random() < 0.4:
+            hi = lo  # single-valued chunk: the exclusion ops' case
+        st.update(min_num=lo, max_num=hi, min_repr=str(lo),
+                  max_repr=str(hi), stats_kind="num")
+        st["physical_type"] = rng.choice(["INT64", "DOUBLE", "FLOAT", None])
+    elif kind == "text":
+        lo, hi = sorted(rng.choice(_TEXTS) for _ in range(2))
+        if rng.random() < 0.4:
+            hi = lo
+        st.update(min_repr=lo, max_repr=hi,
+                  stats_kind=rng.choice(["text", "text", "hex", None]))
+        st["physical_type"] = rng.choice(["BYTE_ARRAY", None])
+    else:
+        st["physical_type"] = rng.choice(["INT64", "DOUBLE", None])
+    st["null_count"] = rng.choice([None, 0, 0, 1, 3, 100])
+    return st
+
+
+def _rows(seed, n):
+    rng = random.Random(seed)
+    rows = []
+    for i in range(n):
+        cols = [_stat(rng, "other")]
+        if rng.random() < 0.85:
+            cols.append(_stat(rng, "c"))
+        rows.append({
+            "file": "f", "row_group": i,
+            "num_rows": rng.choice([None, 0, 1, 3, 100]),
+            "total_byte_size": 1, "total_compressed_size": 1,
+            "columns": cols,
+        })
+    return rows
+
+
+_LITERALS = [
+    0, 1, 3, 7, -5, True, 2**53 + 1, 2**53 + 2, 2**63 - 1, 10**400,
+    2.5, 3.0, -0.0, 1e300, float("nan"), "", "a", "k001", "m", "zz",
+    "é", None, b"k001", datetime.date(1970, 1, 4),
+    datetime.datetime(1970, 1, 1, 0, 0, 3, tzinfo=datetime.timezone.utc),
+]
+
+
+def _predicates(seed):
+    """Every op and alias against every literal class, then random
+    between pairs, IN lists (empty and mixed included) and conjunctions
+    with a column the rows may lack."""
+    rng = random.Random(seed)
+    single = [op for op in OPS if op not in ("between", "in", "not_in",
+                                             "is_null", "not_null")]
+    preds = [[("c", op, v)] for op in single for v in _LITERALS]
+    preds += [[("c", op, v)] for op in SPELLINGS for v in (3, "k001", None)]
+    preds += [[("c", "is_null")], [("c", "not_null")]]
+    preds += [[("c", "between", rng.choice(_LITERALS), rng.choice(_LITERALS))]
+              for _ in range(30)]
+    for op in ("in", "not_in"):
+        preds.append([("c", op, [])])
+        preds += [[("c", op, rng.sample(_LITERALS, rng.randint(1, 3)))]
+                  for _ in range(20)]
+    preds += [[("c", "in", [1, 3.0, True])], [("c", "in", ["a", 1])]]
+    preds += [[rng.choice(preds)[0], rng.choice(preds)[0]] for _ in range(20)]
+    preds += [[("gone", "in", [])], [("gone", "=", 1), ("c", ">", 2)]]
+    return preds
+
+
+#: the three drifts between the two renderings the rule replaced
+_PINNED = [[("c", "in", [])], [("c", "=", b"k001")], [("c", "=", None)]]
+
+
+def _column_verdicts(spark, rows, preds, batch=128):
+    df = spark.createDataFrame(rows, ROW_GROUPS_SCHEMA)
+    out = [dict() for _ in rows]
+    for start in range(0, len(preds), batch):
+        chunk = preds[start:start + batch]
+        got = df.select(
+            "row_group",
+            *[stats_condition(normalize(p)).alias(f"p{start + i}")
+              for i, p in enumerate(chunk)],
+        ).collect()
+        for r in got:
+            out[r["row_group"]].update(r.asDict())
+    return [[o[f"p{i}"] for i in range(len(preds))] for o in out]
+
+
+def test_column_and_python_verdicts_agree(spark):
+    rows = _rows(1, 100)
+    preds = _PINNED + _predicates(1)
+    columns = _column_verdicts(spark, rows, preds)
+    for r, col_keep in zip(rows, columns):
+        for p, ck in zip(preds, col_keep):
+            py_keep = stats_verdict(r, normalize(p)) is None
+            assert ck is py_keep, (p, r["columns"], r["num_rows"])
+
+
+def test_python_verdict_names_the_deciding_conjunct():
+    row = {"num_rows": 3, "columns": [dict.fromkeys(_STAT_FIELDS) | {
+        "name": "c", "min_num": 1.0, "max_num": 2.0, "null_count": 0,
+        "physical_type": "INT64"}]}
+    conjs = normalize([("c", ">=", 0), ("c", "==", 5), ("c", "is_null")])
+    assert stats_verdict(row, conjs).source == ("c", "==", 5)
+    assert stats_verdict(row, conjs[:1]) is None
+
