@@ -25,8 +25,8 @@ from pyspark.sql import types as T
 
 from palletjack_spark.errors import IndexFormatError, InvalidSelectionError
 from palletjack_spark.index.predicate import (
+    apply_predicate,
     canonical,
-    canonical_op,
     normalize,
     stats_condition,
 )
@@ -100,39 +100,6 @@ FILES_SCHEMA = T.StructType(
         T.StructField("arrow_schema", T.BinaryType()),
     ]
 )
-
-
-def apply_predicate(df: DataFrame, predicate: Sequence[tuple]) -> DataFrame:
-    """The exact residual filter of a mini-language predicate: pruning
-    only narrows the rows scanned, this makes the result exact."""
-    for col_name, op, *vals in predicate:
-        c = F.col(col_name)
-        op = canonical_op(op)
-        if op == "=":
-            df = df.where(c == vals[0])
-        elif op == "<":
-            df = df.where(c < vals[0])
-        elif op == "<=":
-            df = df.where(c <= vals[0])
-        elif op == ">":
-            df = df.where(c > vals[0])
-        elif op == ">=":
-            df = df.where(c >= vals[0])
-        elif op == "between":
-            df = df.where(c.between(vals[0], vals[1]))
-        elif op == "in":
-            df = df.where(c.isin(list(vals[0]) if vals else []))
-        elif op == "!=":
-            df = df.where(c != vals[0])
-        elif op == "not_in":
-            df = df.where(~c.isin(list(vals[0]) if vals else []))
-        elif op == "is_null":
-            df = df.where(c.isNull())
-        elif op == "not_null":
-            df = df.where(c.isNotNull())
-        else:
-            raise ValueError(f"Unsupported predicate op: {op}")
-    return df
 
 
 class LocalIndex:
@@ -665,8 +632,13 @@ class MetadataIndex:
         Transport: a driver-local selection of at most Spark's
         ``spark.sql.execution.arrow.localRelationThreshold`` bytes (48 MB
         by default) is read eagerly inside this call (its read errors
-        raise here, not at the action) into a LocalRelation.  Larger
-        selections and catalog-scale indexes scan lazily via mapInArrow.
+        raise here, not at the action) into a LocalRelation.  When the
+        residual has an exact Arrow form (``predicate.arrow_residual``:
+        int and string conjuncts) it filters and projects the Arrow table
+        on the driver, and the result is a bare LocalRelation holding
+        only the answer; otherwise Spark filters it.  Larger selections
+        and catalog-scale indexes scan lazily via mapInArrow and filter
+        in Spark.
         """
         schema = self.arrow_schema(files)
         sel = resolve_columns(schema.names, columns, column_indices)
@@ -749,11 +721,13 @@ class MetadataIndex:
             )
             tasks = row_group_spans(sel_rows)
             sizes = [nbytes for _f, _rg, nbytes in sel_rows]
-            df = scan_tasks(
+            return scan_tasks(
                 self.spark, tasks, schema, sel, partition_keys=part_keys,
                 row_ranges=row_ranges or None,
                 # an unknown size never counts as small
                 nbytes=None if None in sizes else sum(sizes),
+                predicate=predicate if apply_residual else None,
+                drop=pred_extra,
             )
         else:
             # distributed catalog: the pruned plan DataFrame drives the scan

@@ -32,6 +32,22 @@ and ``&``/``|``, which work alike on Spark Columns and Python values.
 the deciding conjunct, and :func:`interval_keep` runs its interval tests
 on the page index's exact per-page bounds.
 
+The residual filter makes a pruned read exact.  :func:`apply_predicate`
+renders it as Spark ``where`` clauses with the caller's literals;
+:func:`arrow_residual` renders it as a ``pyarrow.compute`` expression, so
+a read finished on the driver filters its Arrow table before any row
+crosses into the JVM.  The Arrow rendering exists only where Arrow's
+semantics equal Spark's: every op on a signed-integer column with Python
+``int`` literals inside int64, or on a string column with ``str``
+literals (``not_in`` adds a null guard: Arrow's ``is_in`` is false on a
+null input, Spark's ``NOT IN`` is NULL).  Any other conjunct makes the
+whole predicate fall back to the Column rendering: float columns (NaN
+equals itself and sorts greatest in Spark), decimal, date and timestamp
+columns (session time zone), bool columns or literals, None and bytes
+literals, ``not_in []`` (Spark keeps NULL rows), a column outside the
+schema handed in (hive partition keys, columns Spark would resolve by
+case or as a nested field).
+
 Soundness rules; each errs towards keeping a row group:
 
 - **Superset rounding.**  The builder stores int64 stats as doubles
@@ -64,7 +80,9 @@ from decimal import Decimal
 from functools import reduce
 from typing import Sequence
 
-from pyspark.sql import Column
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from palletjack_spark.errors import InvalidSelectionError
@@ -333,3 +351,99 @@ def interval_keep(op: str, lo, hi, values: Sequence) -> bool:
     per-page min/max): False proves no value in ``[lo, hi]`` satisfies
     ``op`` against ``values``."""
     return bool(KEEP[op](lo, hi, [(v, v) for v in values]))
+
+
+def apply_predicate(df: DataFrame, predicate: Sequence[tuple]) -> DataFrame:
+    """The exact residual filter of a mini-language predicate: pruning
+    only narrows the rows scanned, this makes the result exact."""
+    for col_name, op, *vals in predicate:
+        c = F.col(col_name)
+        op = canonical_op(op)
+        if op == "=":
+            df = df.where(c == vals[0])
+        elif op == "<":
+            df = df.where(c < vals[0])
+        elif op == "<=":
+            df = df.where(c <= vals[0])
+        elif op == ">":
+            df = df.where(c > vals[0])
+        elif op == ">=":
+            df = df.where(c >= vals[0])
+        elif op == "between":
+            df = df.where(c.between(vals[0], vals[1]))
+        elif op == "in":
+            df = df.where(c.isin(list(vals[0]) if vals else []))
+        elif op == "!=":
+            df = df.where(c != vals[0])
+        elif op == "not_in":
+            df = df.where(~c.isin(list(vals[0]) if vals else []))
+        elif op == "is_null":
+            df = df.where(c.isNull())
+        elif op == "not_null":
+            df = df.where(c.isNotNull())
+        else:
+            raise ValueError(f"Unsupported predicate op: {op}")
+    return df
+
+
+#: The residual filter as an Arrow expression: op -> filter over a field
+#: and the literals (list ops: one typed array), for the column and
+#: literal classes :func:`arrow_residual` admits.
+ARROW_FILTER = {
+    "=": lambda f, v: f == v[0],
+    "<": lambda f, v: f < v[0],
+    "<=": lambda f, v: f <= v[0],
+    ">": lambda f, v: f > v[0],
+    ">=": lambda f, v: f >= v[0],
+    "between": lambda f, v: (f >= v[0]) & (f <= v[1]),
+    "in": lambda f, v: f.isin(v[0]),
+    "!=": lambda f, v: f != v[0],
+    "not_in": lambda f, v: ~f.isin(v[0]) & f.is_valid(),
+    "is_null": lambda f, v: f.is_null(),
+    "not_null": lambda f, v: f.is_valid(),
+}
+
+
+def _arrow_literals(c: Conjunct, t: pa.DataType) -> list | None:
+    """The literals of ``c`` as written, in :data:`ARROW_FILTER`'s form,
+    when Arrow compares them with a column of type ``t`` exactly as Spark
+    does; else None."""
+    vals = c.source[2:]
+    lits = list(vals[0]) if c.op in LIST_OPS else vals[:2]
+    if c.op == "not_in" and not lits:
+        return None
+    if pa.types.is_signed_integer(t):
+        ok = all(type(x) is int and -(2**63) <= x < 2**63 for x in lits)
+        vt = pa.int64()
+    elif pa.types.is_string(t) or pa.types.is_large_string(t):
+        ok = all(type(x) is str for x in lits)
+        vt = pa.string()
+    else:
+        return None
+    if not ok:
+        return None
+    return [pa.array(lits, vt)] if c.op in LIST_OPS else list(lits)
+
+
+def arrow_residual(
+    conjuncts: Sequence[Conjunct], schema: pa.Schema
+) -> pc.Expression | None:
+    """The residual filter of ``conjuncts`` as one Arrow expression over
+    a table of ``schema``, or None when any conjunct falls outside the
+    classes where Arrow's semantics equal Spark's (module docstring)."""
+    # Spark resolves names case-insensitively and reads dots and
+    # backticks as nested-field syntax: render only names that mean
+    # exactly one column there
+    if len({n.casefold() for n in schema.names}) < len(schema.names):
+        return None
+    expr = None
+    for c in conjuncts:
+        i = schema.get_field_index(c.col)
+        if i < 0 or "." in c.col or "`" in c.col:
+            return None
+        lits = _arrow_literals(c, schema.field(i).type)
+        if lits is None:
+            return None
+        term = ARROW_FILTER[c.op](pc.field(c.col), lits)
+        expr = term if expr is None else expr & term
+    return expr

@@ -19,7 +19,8 @@ rejects TIMESTAMP(NANOS) columns outright.  This source covers both gaps:
   ``spark.sql.execution.arrow.localRelationThreshold`` bytes (48 MB by
   default) skips both: ``scan_tasks`` reads it eagerly on the driver
   (read errors raise in the call, not at the action) into a
-  LocalRelation, with no Spark job and no Python worker;
+  LocalRelation, with no Spark job and no Python worker, applying a
+  residual filter with an exact Arrow form before the rows reach the JVM;
 - schema fidelity: timestamp[ns] is cast to Spark-representable
   timestamp[us] (documented truncation, like Spark itself would do if it
   accepted nanos), large_string/large_binary are narrowed, float16 upcast.
@@ -361,6 +362,7 @@ def _read_span_batches(
         pvals = [vals.get(k) for k in partition_keys]
 
     def _attach(rb: pa.RecordBatch) -> pa.RecordBatch | None:
+        # pyspark's createDataFrame(pa.Table) loses rows after an empty chunk
         if rb.num_rows == 0:
             return None
         if rb.schema != target:
@@ -453,19 +455,31 @@ def scan_tasks(
     partition_keys: list[str] | None = None,
     row_ranges: dict[tuple[str, int], list[tuple[int, int]]] | None = None,
     nbytes: int | None = None,
+    predicate: Sequence[tuple] | None = None,
+    drop: Sequence[str] = (),
 ) -> DataFrame:
-    """Run (path, row_groups) scan tasks via mapInArrow.
+    """Run (path, row_groups) scan tasks: on the driver into a
+    LocalRelation when the selection is small, else via mapInArrow.
 
     ``row_ranges`` maps (path, row_group) to surviving [start, end) row
     ranges from the page index (q03h tier, row granularity): those row
     groups are sliced to the ranges before rows enter Spark — a pure
     superset restriction, identical results with the residual filter.
 
+    ``predicate`` is the exact residual filter of the scanned rows, and
+    ``drop`` the scanned columns it alone needed; both apply to the
+    result.
+
     ``nbytes``: the selection's total row-group bytes, when known.  At
     most Spark's ``spark.sql.execution.arrow.localRelationThreshold``
     (48 MB by default), the spans are read eagerly on the driver inside
     this call (read errors raise here, not at the action) into a
-    LocalRelation: no Spark job, no Python worker."""
+    LocalRelation: no Spark job, no Python worker.  There, a predicate
+    ``arrow_residual`` can render filters the Arrow table and ``drop``
+    leaves it before ``createDataFrame``, so only answer rows and
+    columns cross into the JVM and the plan is a bare LocalRelation;
+    any other predicate, and every mapInArrow scan, filters in Spark
+    (``apply_predicate``)."""
     file_schema = schema
     if columns is not None:
         file_schema = pa.schema([schema.field(c) for c in columns])
@@ -496,10 +510,27 @@ def scan_tasks(
                 {rg: row_ranges[(p, rg)] for rg in rgs if (p, rg) in row_ranges},
             )
         ]
+        from palletjack_spark.index.predicate import arrow_residual, normalize
+
+        # partition keys are not in ``target``: they filter in Spark
+        expr = arrow_residual(normalize(predicate), target) if predicate else None
+        if expr is not None:
+            table = pa.Table.from_batches(batches, schema=out_schema)
+            table = table.filter(expr).drop_columns(list(drop))
+            # Table.filter keeps the chunks it empties; drop them (see _attach)
+            batches = [rb for rb in table.to_batches() if rb.num_rows]
+            out_schema = table.schema
+            spark_schema = T.StructType(
+                [f for f in spark_schema.fields if f.name not in drop]
+            )
+            predicate, drop = None, ()
         if not batches:  # pyspark cannot build a relation from zero chunks
             batches = [pa.RecordBatch.from_pylist([], schema=out_schema)]
-        return spark.createDataFrame(
-            pa.Table.from_batches(batches, schema=out_schema), spark_schema
+        return _residual(
+            spark.createDataFrame(
+                pa.Table.from_batches(batches, schema=out_schema), spark_schema
+            ),
+            predicate, drop,
         )
     task_rows = [
         (
@@ -536,7 +567,19 @@ def scan_tasks(
                     by_rg,
                 )
 
-    return tdf.mapInArrow(gen, spark_schema)
+    return _residual(tdf.mapInArrow(gen, spark_schema), predicate, drop)
+
+
+def _residual(
+    df: DataFrame, predicate: Sequence[tuple] | None, drop: Sequence[str]
+) -> DataFrame:
+    """``df`` filtered by ``predicate`` in Spark, less the ``drop``
+    columns."""
+    if predicate:
+        from palletjack_spark.index.predicate import apply_predicate
+
+        df = apply_predicate(df, predicate)
+    return df.drop(*drop) if drop else df
 
 
 def scan_plan(

@@ -5,17 +5,23 @@ its Python rendering on every stats row and predicate."""
 from __future__ import annotations
 
 import datetime
+import decimal
 import random
+from functools import reduce
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from palletjack_spark import build_index, prune_explain_counts
 from palletjack_spark.index.metadata_index import ROW_GROUPS_SCHEMA
 from palletjack_spark.index.predicate import (
     OPS,
     SPELLINGS,
+    apply_predicate,
+    arrow_residual,
     normalize,
     stats_condition,
     stats_verdict,
@@ -190,3 +196,102 @@ def test_python_verdict_names_the_deciding_conjunct():
     assert stats_verdict(row, conjs).source == ("c", "==", 5)
     assert stats_verdict(row, conjs[:1]) is None
 
+
+
+# -- Arrow residual vs Column residual -------------------------------------
+
+_UTC = datetime.timezone.utc
+#: one column per class; ``rid`` numbers the rows
+_TABLE = pa.table({
+    "rid": pa.array(range(10), pa.int64()),
+    "i64": pa.array([0, 1, 3, 7, -5, None, 2**53 + 1, 2**63 - 1, -(2**63), 3],
+                    pa.int64()),
+    "i32": pa.array([0, 1, 3, 7, -5, None, 2**31 - 1, -(2**31), 3, 2],
+                    pa.int32()),
+    "s": pa.array(["", "a", "k001", "m", "zz", None, "é", "\U0001f600",
+                   "k0010", "A"]),
+    "d": pa.array([0.0, 1.0, 3.0, float("nan"), -5.0, None, 2.5, -0.0,
+                   1e300, float("inf")]),
+    "b": pa.array([True, False, None, True, False, True, None, False,
+                   True, False]),
+    "dt": pa.array([datetime.date(1970, 1, d) for d in range(1, 10)] + [None]),
+    "ts": pa.array(
+        [datetime.datetime(1970, 1, 1, 0, 0, s, tzinfo=_UTC) for s in range(9)]
+        + [None], pa.timestamp("us", tz="UTC")),
+    "dec": pa.array([decimal.Decimal(v) for v in
+                     ("0", "1.5", "3", "7", "-5", "2.5", "3.00", "0.1",
+                      "99.9")] + [None], pa.decimal128(5, 2)),
+})
+
+
+def _on(col, pred):
+    """``pred`` with its ``c`` conjuncts moved onto column ``col``."""
+    return [(col if c == "c" else c, op, *v) for c, op, *v in pred]
+
+
+def _column_rows(spark, preds, batch=64):
+    """``apply_predicate`` over ``createDataFrame(_TABLE)``: the sorted
+    ``rid``s each predicate keeps, one collect per ``batch``."""
+    df = spark.createDataFrame(_TABLE)
+    out = [[] for _ in preds]
+    for start in range(0, len(preds), batch):
+        parts = [
+            apply_predicate(df, p).select(F.lit(start + i).alias("p"), "rid")
+            for i, p in enumerate(preds[start:start + batch])
+        ]
+        for r in reduce(DataFrame.unionAll, parts).collect():
+            out[r["p"]].append(r["rid"])
+    return [sorted(o) for o in out]
+
+
+def test_arrow_residual_matches_column_residual(spark):
+    preds = [
+        _on(col, p) for col in _TABLE.column_names[1:]
+        for p in _PINNED + _predicates(2)
+    ]
+    rendered = [(p, arrow_residual(normalize(p), _TABLE.schema)) for p in preds]
+    rendered = [(p, e) for p, e in rendered if e is not None]
+    # int64, int32 and string columns; every op on each
+    assert {p[0][0] for p, _e in rendered} == {"i64", "i32", "s"}
+    assert {normalize(p)[0].op for p, _e in rendered} == set(OPS)
+    columns = _column_rows(spark, [p for p, _e in rendered])
+    for (p, expr), col_rows in zip(rendered, columns):
+        arrow_rows = sorted(_TABLE.filter(expr)["rid"].to_pylist())
+        assert arrow_rows == col_rows, (p, str(expr))
+
+
+#: conjuncts whose Arrow semantics differ from Spark's, or may
+_ARROW_FALLBACK = {
+    "float column": [("d", "=", 1)],
+    "NaN literal": [("d", "=", float("nan"))],
+    "decimal column": [("dec", ">", 1)],
+    "decimal literal": [("i64", "=", decimal.Decimal(1))],
+    "date column": [("dt", "=", datetime.date(1970, 1, 2))],
+    "timestamp column": [("ts", "<", datetime.datetime(1970, 1, 2))],
+    "bool column": [("b", "=", True)],
+    "bool literal": [("i64", "=", True)],
+    "float literal": [("i64", "<", 2.5)],
+    "int beyond int64": [("i64", "<", 2**63)],
+    "None literal": [("i64", "=", None)],
+    "None in a list": [("s", "in", ["a", None])],
+    "bytes literal": [("s", "=", b"k001")],
+    "int on a string column": [("s", "=", 1)],
+    "str on an int column": [("i64", "=", "1")],
+    "empty not_in": [("i64", "not_in", [])],
+    "partition key": [("part", "=", "a")],
+    "absent column": [("gone", "is_null")],
+    "case-folded name": [("I64", "=", 1)],
+    "nested-field syntax": [("s.x", "=", "a")],
+    "one bad conjunct": [("i64", "=", 1), ("d", ">", 0.0)],
+}
+
+
+@pytest.mark.parametrize("case", sorted(_ARROW_FALLBACK))
+def test_arrow_residual_falls_back(case):
+    pred = _ARROW_FALLBACK[case]
+    assert arrow_residual(normalize(pred), _TABLE.schema) is None
+
+
+def test_arrow_residual_falls_back_on_names_spark_finds_ambiguous():
+    schema = pa.schema([("k", pa.int64()), ("K", pa.int64())])
+    assert arrow_residual(normalize([("k", "=", 1)]), schema) is None

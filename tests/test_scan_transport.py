@@ -14,6 +14,7 @@ import decimal
 import os
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 import pytest
 
@@ -159,3 +160,111 @@ def test_uint64_overflow_raises_typed_cast_error_on_the_driver(spark, tmp_path):
     idx = build_index(spark, p, use_cache=False)
     with pytest.raises(ScanCastError, match=r"'u64' from uint64 to int64"):
         idx.read()
+
+
+# -- the Arrow residual on the driver ---------------------------------------
+
+
+@pytest.fixture(scope="module")
+def three_files(spark, tmp_path_factory):
+    """Three one-row-group files, so a driver read holds three batches.
+    The middle file's ``id`` envelope [10, 30] covers 20 but holds no
+    20; no dictionaries and no page index, so only the stats tier
+    judges it and keeps it."""
+    root = tmp_path_factory.mktemp("three")
+    rows = [([1, 2], ["key001", "key002"]), ([10, 30], ["key000", "key009"]),
+            ([41, 42], ["key001", "key003"])]
+    paths = []
+    for i, (ids, ks) in enumerate(rows):
+        p = str(root / f"f{i}.parquet")
+        pq.write_table(pa.table({
+            "id": pa.array(ids, pa.int64()), "k": ks,
+            "x": pa.array([i + 0.5, i + 1.5]),
+        }), p, use_dictionary=False)
+        paths.append(p)
+    idx = build_index(spark, paths, use_cache=False)
+    assert idx._local is not None and len(idx._local[0]) == 3
+    return idx, paths
+
+
+class _EmptyAfterEachBatch:
+    """A ParquetFile whose ``iter_batches`` follows every batch with an
+    empty one (pyarrow's own reader never yields one, but may)."""
+
+    def __init__(self, pf):
+        self._pf = pf
+
+    def __getattr__(self, name):
+        return getattr(self._pf, name)
+
+    def iter_batches(self, **kw):
+        for rb in self._pf.iter_batches(**kw):
+            yield rb
+            yield rb.slice(0, 0)
+
+
+def _analyzed(df) -> str:
+    return df._jdf.queryExecution().analyzed().toString()
+
+
+# pyspark 4.1.2's createDataFrame(pa.Table) drops the rows that follow an
+# empty chunk; each case puts one in the middle of a driver read
+EMPTY_MIDDLE = {
+    # the Arrow filter empties the middle file's batch
+    "filtered": (dict(predicate=[("id", "in", [1, 20, 41])], columns=["k"]),
+                 False),
+    # the reader yields empty batches between the files' batches
+    "read": (dict(columns=["id", "k"]), True),
+}
+
+
+@pytest.mark.parametrize("case", sorted(EMPTY_MIDDLE))
+def test_empty_middle_batch_keeps_every_row(
+    spark, three_files, monkeypatch, case
+):
+    from palletjack_spark.sources import arrow_scan
+
+    idx, paths = three_files
+    kw, empties = EMPTY_MIDDLE[case]
+    if empties:
+        real = arrow_scan._open_parquet
+        monkeypatch.setattr(
+            arrow_scan, "_open_parquet",
+            lambda p: _EmptyAfterEachBatch(real(p)),
+        )
+    df = idx.read(**kw)
+    assert _analyzed(df).startswith("LocalRelation")
+    want = pa.concat_tables(pq.read_table(p) for p in paths)
+    if "predicate" in kw:
+        want = want.filter(pc.is_in(want["id"], pa.array([1, 20, 41])))
+    want = want.select(kw["columns"])
+    got = [tuple(r) for r in df.collect()]
+    assert sorted(got) == sorted(zip(*want.to_pydict().values()))
+    assert len(got) == (2 if "predicate" in kw else 6)
+
+
+def test_arrow_residual_plan_is_a_bare_local_relation(spark, three_files):
+    idx, _ = three_files
+    df = idx.read(predicate=[("k", "=", "key001")], columns=["id"])
+    plan = _analyzed(df)
+    assert plan.startswith("LocalRelation"), plan
+    assert "Filter" not in plan and "Project" not in plan, plan
+    assert df.columns == ["id"] and sorted(r.id for r in df.collect()) == [1, 41]
+
+    # a float conjunct has no exact Arrow form: Spark filters and projects
+    df = idx.read(predicate=[("x", ">", 1.0)], columns=["id"])
+    plan = _analyzed(df)
+    assert "Filter" in plan and "LocalRelation" in plan, plan
+    assert sorted(r.id for r in df.collect()) == [2, 10, 30, 41, 42]
+
+
+def test_map_in_arrow_read_still_filters_in_spark(spark, three_files):
+    idx, _ = three_files
+    spark.conf.set(THRESHOLD, "0")
+    try:
+        df = idx.read(predicate=[("k", "=", "key001")], columns=["id"])
+        plan = _analyzed(df)
+        assert "Filter" in plan and "MapInArrow" in plan, plan
+        assert sorted(r.id for r in df.collect()) == [1, 41]
+    finally:
+        spark.conf.unset(THRESHOLD)
