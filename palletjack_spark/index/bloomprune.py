@@ -75,7 +75,6 @@ __all__ = [
     "BloomProber",
     "add_bloom_filters",
     "add_bloom_filters_dataset",
-    "bloom_prune_rows",
     "value_prune_plan",
     "xxh64",
 ]
@@ -351,19 +350,6 @@ class BloomProber(FooterProber):
         if words is None:
             return None
         return _might_contain(words, xxh64(probe))
-
-
-def bloom_prune_rows(
-    rg_rows: list[dict], predicate, prober: BloomProber | None = None
-) -> list[dict]:
-    """Drop row-group rows whose bloom filters PROVE an equality/IN
-    conjunct can't match.  Exclusions can't use blooms (a filter can
-    never prove its column holds ONLY excluded values) — the dictionary
-    tier owns those.  Unknown verdicts keep the row; results are
-    identical either way."""
-    from palletjack_spark.index.tiers import tier_filter
-
-    return tier_filter("bloom", rg_rows, predicate, prober or BloomProber())
 
 
 def value_prune_plan(plan, predicate, explain: bool = False):

@@ -306,20 +306,6 @@ def _chunk_dictionary(path, footer, rg_idx, col_idx, physical_type):
     return frozenset(values) if values is not None else None
 
 
-def dict_prune_rows(
-    rg_rows: list[dict], predicate, prober: DictionaryProber | None = None
-) -> list[dict]:
-    """Drop row-group rows whose dictionaries PROVE an equality/IN
-    conjunct can't match, or an exclusion (!=/NOT IN) conjunct excludes
-    the whole dictionary.  Other conjuncts, unknown columns, and every
-    "unknown" verdict keep the row — identical results either way."""
-    from palletjack_spark.index.tiers import tier_filter
-
-    return tier_filter(
-        "dictionary", rg_rows, predicate, prober or DictionaryProber()
-    )
-
-
 #: column-chunk metadata the executor-side value probes need, with its
 #: plan-column short names (offsets and codecs come from the footer)
 _META_SHORT = {"physical_type": "ptype", "logical_type": "ltype"}

@@ -102,6 +102,32 @@ FILES_SCHEMA = T.StructType(
 )
 
 
+def sidecar_violation(r) -> str | None:
+    """The index invariant for one file, or None when it holds.  ``r``
+    holds the file's tallies: ``file_entries`` (its ``files/`` rows),
+    ``indexed_rgs``/``indexed_rows`` (its row-group rows) and
+    ``decl_rgs``/``decl_rows`` (the counts its ``files/`` row declares).
+    The message names the first rule broken: no ``files/`` row, more than
+    one, or counts that differ from the declared ones."""
+    head = f"Index inconsistent for {r['file']}: "
+    if not r["file_entries"]:
+        return head + (
+            "row-group rows present but no files/ entry (partial or torn write)"
+        )
+    if r["file_entries"] != 1:
+        return head + (
+            f"{r['file_entries']} duplicate files/ entries "
+            "(retried incremental append?)"
+        )
+    rgs, rows = r["indexed_rgs"] or 0, r["indexed_rows"] or 0
+    if (rgs, rows) != (r["decl_rgs"], r["decl_rows"]):
+        return head + (
+            f"{rgs} row groups indexed vs {r['decl_rgs']} declared, "
+            f"{rows} rows vs {r['decl_rows']}"
+        )
+    return None
+
+
 class LocalIndex:
     """Driver-local materialization of a (small) metadata index — the
     analogue of the reference's in-memory index buffer (palletjack.cc:656-678):
@@ -213,84 +239,52 @@ class MetadataIndex:
 
     def validate(self) -> None:
         """Cross-check row-group cardinalities against file headers —
-        the analogue of the reference's offset-array count validation."""
-        if self._local is not None:
-            rg_rows, file_rows = self._local
-            counts: dict[str, list[int]] = {}
-            for r in rg_rows:
-                acc = counts.setdefault(r["file"], [0, 0])
-                acc[0] += 1
-                acc[1] += r["num_rows"]
-            declared = set()
-            for fr in file_rows:
-                if fr["file"] in declared:
-                    raise IndexFormatError(
-                        f"Index inconsistent for {fr['file']}: duplicate "
-                        "files/ entries (retried incremental append?)"
+        the analogue of the reference's offset-array count validation.
+
+        A driver-local index tallies its rows in plain Python (no Spark
+        job); any other index checks the tagged union of its two frames
+        through ``builder._validate_combined``.  Both report the first
+        offending file by name through :func:`sidecar_violation`."""
+        if self._local is None:
+            from palletjack_spark.index.builder import _validate_combined
+
+            null = F.lit(None)
+            identity = [  # sidecar rows carry no observed file identity
+                null.cast("long").alias("file_size"),
+                null.cast("long").alias("mtime_ns"),
+            ]
+            _validate_combined(
+                self.row_groups.select(
+                    F.lit("rg").alias("kind"), "file", "num_rows",
+                    null.cast("int").alias("num_row_groups"), *identity,
+                ).unionByName(
+                    self.files.select(
+                        F.lit("file").alias("kind"), "file", "num_rows",
+                        "num_row_groups", *identity,
                     )
-                declared.add(fr["file"])
-                got = counts.get(fr["file"], [0, 0])
-                if got[0] != fr["num_row_groups"] or got[1] != fr["num_rows"]:
-                    raise IndexFormatError(
-                        f"Index inconsistent for {fr['file']}: "
-                        f"{got[0]} row groups indexed vs {fr['num_row_groups']} "
-                        f"declared, {got[1]} rows vs {fr['num_rows']}"
-                    )
-            orphans = set(counts) - declared
-            if orphans:
-                raise IndexFormatError(
-                    f"Index inconsistent for {sorted(orphans)[0]}: row-group "
-                    "rows present but no files/ entry (partial or torn write)"
                 )
+            )
             return
-        # Full outer join so a file present in only ONE of the two sidecar
-        # tables (orphaned row-group rows, or a file row whose row groups
-        # never landed — the two writes in build_index are not atomic) is a
-        # validation error, not silently invisible to an inner join.
-        rg_agg = self.row_groups.groupBy("file").agg(
-            F.count("*").alias("indexed_rgs"),
-            F.sum("num_rows").alias("indexed_rows"),
-        )
-        decl = self.files.groupBy("file").agg(
-            F.count("*").alias("file_entries"),
-            F.min("num_row_groups").alias("num_row_groups"),
-            F.min("num_rows").alias("num_rows"),
-        )
-        bad = (
-            rg_agg.join(decl, "file", "full_outer")
-            .where(
-                F.col("file_entries").isNull()
-                | (F.col("file_entries") != F.lit(1))
-                | (
-                    F.coalesce(F.col("indexed_rgs"), F.lit(0))
-                    != F.col("num_row_groups")
-                )
-                | (
-                    F.coalesce(F.col("indexed_rows"), F.lit(0))
-                    != F.col("num_rows")
-                )
-            )
-            .limit(1)
-            .collect()
-        )
-        if bad:
-            r = bad[0]
-            if r["file_entries"] is None:
-                raise IndexFormatError(
-                    f"Index inconsistent for {r['file']}: row-group rows "
-                    "present but no files/ entry (partial or torn write)"
-                )
-            if r["file_entries"] != 1:
-                raise IndexFormatError(
-                    f"Index inconsistent for {r['file']}: "
-                    f"{r['file_entries']} duplicate files/ entries "
-                    "(retried incremental append?)"
-                )
-            raise IndexFormatError(
-                f"Index inconsistent for {r['file']}: "
-                f"{r['indexed_rgs']} row groups indexed vs {r['num_row_groups']} "
-                f"declared, {r['indexed_rows']} rows vs {r['num_rows']}"
-            )
+        rg_rows, file_rows = self._local
+        counts: dict[str, list] = {}  # file -> [row groups, rows]
+        for r in rg_rows:
+            acc = counts.setdefault(r["file"], [0, 0])
+            acc[0] += 1
+            acc[1] += r["num_rows"]
+        declared: dict[str, list] = {}  # file -> [entries, row groups, rows]
+        for fr in file_rows:
+            declared.setdefault(
+                fr["file"], [0, fr["num_row_groups"], fr["num_rows"]]
+            )[0] += 1
+        for f in sorted(counts.keys() | declared.keys()):
+            rgs, rows = counts.get(f, (0, 0))
+            n, d_rgs, d_rows = declared.get(f, (0, None, None))
+            msg = sidecar_violation({
+                "file": f, "file_entries": n, "indexed_rgs": rgs,
+                "indexed_rows": rows, "decl_rgs": d_rgs, "decl_rows": d_rows,
+            })
+            if msg:
+                raise IndexFormatError(msg)
 
     def unpersist(self) -> None:
         """Release the cached index DataFrames (no-op for persisted indexes)."""
@@ -605,22 +599,29 @@ class MetadataIndex:
         full scan + filter — pruning is a pure optimization, as in Spark's
         native source.
 
-        ``dictionary_prune``: after stats pruning, EQUALITY conjuncts
-        additionally probe each surviving chunk's dictionary page — when
-        ``encoding_stats`` proves the chunk fully dictionary-encoded and
-        the literal is absent from the dictionary, the row group provably
-        holds no match and is skipped
-        (:mod:`palletjack_spark.index.dictprune`) — and, where the
-        dictionary OVERFLOWED to plain pages (the high-cardinality
-        point-lookup layout the dictionary gate correctly refuses), the
-        chunk's split-block BLOOM filter, when present
-        (:mod:`palletjack_spark.index.bloomprune`, q03g).  These are the
-        pruning tiers min/max can't reach: high-cardinality columns whose
-        values interleave across row groups.  Probe I/O is bounded by the
-        surviving chunks' dictionary-page/bitset bytes; every unknown
-        verdict keeps the row group, so results are identical either way.
-        Driver-local indexes probe on the driver; catalog-scale plans
-        probe executor-side in one combined pass (``value_prune_plan``).
+        ``dictionary_prune``: after the stats and partition tiers, the
+        value tiers of :mod:`palletjack_spark.index.tiers` run, in order,
+        over each surviving row group.  The DICTIONARY tier decides
+        equality and exclusion conjuncts (=, IN, !=, NOT IN): when
+        ``encoding_stats`` proves the chunk fully dictionary-encoded, an
+        equality whose literals are all absent from the dictionary, or a
+        dictionary wholly inside the excluded values, proves the row
+        group matchless (:mod:`palletjack_spark.index.dictprune`).  The
+        BLOOM tier decides equality conjuncts through the chunk's
+        split-block bloom filter, when present — the tier for chunks whose
+        dictionary OVERFLOWED to plain pages, the high-cardinality
+        point-lookup layout (:mod:`palletjack_spark.index.bloomprune`,
+        q03g).  The PAGE tier tests value and range conjuncts against the
+        page index's per-page min/max envelopes, and on a driver-local
+        read narrows a kept row group to its surviving row ranges
+        (:mod:`palletjack_spark.index.pageprune`).  These tiers reach what
+        min/max can't: high-cardinality columns whose values interleave
+        across row groups, and value gaps inside a row group.  Probe I/O
+        is bounded by the surviving chunks' dictionary-page, bitset and
+        page-index bytes; every unknown verdict keeps the row group, so
+        results are identical either way.  Driver-local indexes probe on
+        the driver; catalog-scale plans probe executor-side in one
+        combined pass (``value_prune_plan``).
 
         Hive-partitioned layouts: each row gains the file's ``key=value``
         partition values as string columns (Spark's type-inference-off

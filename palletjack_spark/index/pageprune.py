@@ -54,7 +54,7 @@ applies downstream):
 
 Granularities served:
 
-- :func:`page_prune_rows` / the page leg of
+- the page tier of ``tiers.prune_verdicts`` and of
   ``bloomprune.value_prune_plan``: drop a ROW GROUP when, for some
   conjunct column, every page fails — or, when every conjunct column
   also carries an OffsetIndex, when the per-column surviving row-range
@@ -106,7 +106,6 @@ __all__ = [
     "add_page_index",
     "add_page_index_dataset",
     "page_index_offsets",
-    "page_prune_rows",
     "read_column_index",
     "read_offset_index",
 ]
@@ -543,17 +542,6 @@ def _row_lookup(rg_row: dict):
         return None
 
     return look
-
-
-def page_prune_rows(
-    rg_rows: list[dict], predicate, prober: PageProber | None = None
-) -> list[dict]:
-    """Drop row-group rows whose page index PROVES the predicate can't
-    match — the envelope-gap tier.  Unknown verdicts keep the row;
-    results are identical either way (residual filter downstream)."""
-    from palletjack_spark.index.tiers import tier_filter
-
-    return tier_filter("page", rg_rows, predicate, prober or PageProber())
 
 
 # --------------------------------------------------------------------------

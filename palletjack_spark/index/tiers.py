@@ -196,9 +196,12 @@ def prune_verdicts(
 
 
 def tier_filter(tier: str, rows: list[dict], predicate, prober) -> list[dict]:
-    """``rows`` minus those ``tier`` alone proves matchless — the per-tier
-    unit behind ``dict_prune_rows``, ``bloom_prune_rows`` and
-    ``page_prune_rows``, which accept either op spelling."""
+    """``rows`` minus those ``tier`` alone proves matchless, probed with
+    ``prober`` (the tier's ``DictionaryProber``, ``BloomProber`` or
+    ``PageProber``).  ``predicate`` may use either op spelling.  One tier
+    in isolation, without the stats and partition tiers or the tier
+    order :func:`prune_verdicts` applies: the unit the per-tier tests
+    pin."""
     vpred = value_predicate(canonical(predicate))
     return [
         r

@@ -15,7 +15,9 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+from palletjack_spark.index.bloomprune import BloomProber
 from palletjack_spark.index.predicate import normalize, stats_verdict
+from palletjack_spark.index.tiers import tier_filter
 from tests.conftest import SF_DIR  # noqa: F401  (session fixture import)
 
 
@@ -63,10 +65,6 @@ def test_writer_roundtrip_and_pinned_skip_counts(tmp_path, monkeypatch):
     interleave), the bloom tier keeps EXACTLY the owning one; absent
     keys prune everything; pyarrow still reads the enriched file."""
     from palletjack_spark.index import bloomprune
-    from palletjack_spark.index.bloomprune import (
-        BloomProber,
-        bloom_prune_rows,
-    )
     from palletjack_spark.index.builder import _extract_file_rows
 
     path = _overflow_fixture(tmp_path)
@@ -81,18 +79,18 @@ def test_writer_roundtrip_and_pinned_skip_counts(tmp_path, monkeypatch):
     ]
     assert len(stats_kept) == 4
     # bloom keeps exactly rg 3 (123 % 4)
-    kept = bloom_prune_rows(stats_kept, [("k", "=", 123)])
+    kept = tier_filter("bloom", stats_kept, [("k", "=", 123)], BloomProber())
     assert [r["row_group"] for r in kept] == [3]
     # string key too — no numeric stats at all for the stats tier
-    kept = bloom_prune_rows(rgs, [("tag", "=", "u00000123")])
+    kept = tier_filter("bloom", rgs, [("tag", "=", "u00000123")], BloomProber())
     assert [r["row_group"] for r in kept] == [3]
     # IN whose members live in two different row groups
-    kept = bloom_prune_rows(rgs, [("k", "in", [123, 124])])
+    kept = tier_filter("bloom", rgs, [("k", "in", [123, 124])], BloomProber())
     assert [r["row_group"] for r in kept] == [0, 3]
     # a key in NO row group prunes everything
-    assert bloom_prune_rows(rgs, [("k", "=", 999_999)]) == []
+    assert tier_filter("bloom", rgs, [("k", "=", 999_999)], BloomProber()) == []
     # conjunct on an unknown column keeps everything
-    assert len(bloom_prune_rows(rgs, [("nope", "=", 1)])) == 4
+    assert len(tier_filter("bloom", rgs, [("nope", "=", 1)], BloomProber())) == 4
 
     # one filter parse per (footer, chunk), shared by later probers: a
     # second prober over the unchanged file parses nothing
@@ -144,7 +142,6 @@ def test_absent_filters_and_foreign_headers_keep(tmp_path):
     from palletjack_spark.index.bloomprune import (
         BloomProber,
         bloom_offsets,
-        bloom_prune_rows,
         read_bloom,
     )
     from palletjack_spark.index.builder import _extract_file_rows
@@ -159,7 +156,7 @@ def test_absent_filters_and_foreign_headers_keep(tmp_path):
     )
     assert bloom_offsets(read_footer_bytes(plain), 0, 0) is None
     _f, rgs = _extract_file_rows(plain)
-    assert len(bloom_prune_rows(rgs, [("k", "=", 5)])) == 1
+    assert len(tier_filter("bloom", rgs, [("k", "=", 5)], BloomProber())) == 1
 
     # corrupt bitset region: parse failures keep
     path = _overflow_fixture(tmp_path, name="corrupt.parquet")
@@ -326,10 +323,7 @@ def test_dataset_enrichment_distributed(spark, tmp_path):
     """add_bloom_filters_dataset enriches every file of a directory
     executor-side; a point lookup through smart_read then opens only
     the owning file's row group, and re-running is a no-op."""
-    from palletjack_spark.index.bloomprune import (
-        add_bloom_filters_dataset,
-        bloom_prune_rows,
-    )
+    from palletjack_spark.index.bloomprune import add_bloom_filters_dataset
     from palletjack_spark.index.builder import _extract_file_rows
     from palletjack_spark.index.smart import smart_read
 
@@ -348,7 +342,7 @@ def test_dataset_enrichment_distributed(spark, tmp_path):
     rgs = []
     for i in range(6):
         rgs.extend(_extract_file_rows(str(root / f"part-{i}.parquet"))[1])
-    kept = bloom_prune_rows(rgs, [("k", "=", 123)])
+    kept = tier_filter("bloom", rgs, [("k", "=", 123)], BloomProber())
     assert [os.path.basename(r["file"]) for r in kept] == ["part-3.parquet"]
     got = smart_read(spark, str(root), predicate=[("k", "=", 123)]).collect()
     assert [r["k"] for r in got] == [123]

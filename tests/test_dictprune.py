@@ -13,7 +13,9 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+from palletjack_spark.index.dictprune import DictionaryProber
 from palletjack_spark.index.predicate import normalize, stats_verdict
+from palletjack_spark.index.tiers import tier_filter
 from tests.conftest import SF_DIR  # noqa: F401  (session fixture import)
 
 
@@ -98,7 +100,6 @@ def test_dict_prune_skips_provably_absent_row_groups(spark, tmp_path):
     row group that holds the literal — and the scanned rows are
     identical with pruning disabled."""
     from palletjack_spark.index.builder import build_index
-    from palletjack_spark.index.dictprune import dict_prune_rows
 
     path = _interleaved(tmp_path)
     idx = build_index(spark, path)
@@ -106,7 +107,7 @@ def test_dict_prune_skips_provably_absent_row_groups(spark, tmp_path):
     rows = idx._local[0]
     stats_kept = [r for r in rows if stats_verdict(r, normalize(pred)) is None]
     assert len(stats_kept) == 4  # min/max can't prune interleaved values
-    dict_kept = dict_prune_rows(stats_kept, pred)
+    dict_kept = tier_filter("dictionary", stats_kept, pred, DictionaryProber())
     assert [r["row_group"] for r in dict_kept] == [1]
 
     got = sorted(
@@ -122,12 +123,15 @@ def test_dict_prune_skips_provably_absent_row_groups(spark, tmp_path):
     assert got == off == [("user_0005", 5)]
 
     # integer equality probes the INT64 dictionary the same way
-    int_kept = dict_prune_rows(stats_kept, [("n", "=", 7)])
+    int_kept = tier_filter(
+        "dictionary", stats_kept, [("n", "=", 7)], DictionaryProber()
+    )
     assert [r["row_group"] for r in int_kept] == [3]
 
     # a present value keeps its row group (and only pruning of OTHERS
     # happens); non-equality conjuncts are untouched
-    assert len(dict_prune_rows(stats_kept, [("tag", ">=", "user_0000")])) == 4
+    present = [("tag", ">=", "user_0000")]
+    assert len(tier_filter("dictionary", stats_kept, present, DictionaryProber())) == 4
 
 
 def test_dict_prune_conservative_on_unprobeable_chunks(spark, tmp_path):
@@ -137,7 +141,6 @@ def test_dict_prune_conservative_on_unprobeable_chunks(spark, tmp_path):
     from palletjack_spark.index.builder import build_index
     from palletjack_spark.index.dictprune import (
         DictionaryProber,
-        dict_prune_rows,
         read_dictionary,
     )
 
@@ -158,7 +161,7 @@ def test_dict_prune_conservative_on_unprobeable_chunks(spark, tmp_path):
     pred = [("tag", "=", "user_0199")]
     kept = [r for r in rows if stats_verdict(r, normalize(pred)) is None]
     # plain-encoded chunks: nothing prunable beyond stats, nothing lost
-    assert dict_prune_rows(kept, pred) == kept
+    assert tier_filter("dictionary", kept, pred, DictionaryProber()) == kept
     got = idx.read(columns=["tag"], predicate=pred).collect()
     assert [r["tag"] for r in got] == ["user_0199"]
 
@@ -308,7 +311,6 @@ def test_in_predicate_prunes_stats_and_dictionaries(spark, tmp_path):
     path agrees."""
     from palletjack_spark.index.bloomprune import value_prune_plan
     from palletjack_spark.index.builder import build_index
-    from palletjack_spark.index.dictprune import dict_prune_rows
 
     path = _interleaved(tmp_path)
     idx = build_index(spark, path)
@@ -316,7 +318,7 @@ def test_in_predicate_prunes_stats_and_dictionaries(spark, tmp_path):
     rows = idx._local[0]
     stats_kept = [r for r in rows if stats_verdict(r, normalize(pred)) is None]
     assert len(stats_kept) == 4  # interleaving defeats min/max
-    dict_kept = dict_prune_rows(stats_kept, pred)
+    dict_kept = tier_filter("dictionary", stats_kept, pred, DictionaryProber())
     assert sorted(r["row_group"] for r in dict_kept) == [1, 2]
 
     got = sorted(
@@ -396,7 +398,6 @@ def test_unsigned_column_not_wrongly_pruned(spark, tmp_path):
     logical-type gate the dictionary probe looked up the logical value,
     missed, and wrongly pruned the row group holding the match."""
     from palletjack_spark.index.builder import build_index
-    from palletjack_spark.index.dictprune import dict_prune_rows
 
     path = str(tmp_path / "u.parquet")
     pq.write_table(
@@ -410,7 +411,8 @@ def test_unsigned_column_not_wrongly_pruned(spark, tmp_path):
     pred = [("u", "=", 3_000_000_000)]
     assert stats_verdict(rg, normalize(pred)) is None  # stats keep (value in range)
     # the gate refuses the probe -> the row group SURVIVES
-    assert [r["row_group"] for r in dict_prune_rows([rg], pred)] == [0]
+    kept = tier_filter("dictionary", [rg], pred, DictionaryProber())
+    assert [r["row_group"] for r in kept] == [0]
 
 
 def test_spark_decimal_column_indexes_and_reads(spark, tmp_path):
@@ -448,7 +450,6 @@ def test_exclusion_ops_prune_stats_and_dictionaries(spark, tmp_path):
     pruning-off read."""
     from palletjack_spark.index.bloomprune import value_prune_plan
     from palletjack_spark.index.builder import build_index
-    from palletjack_spark.index.dictprune import dict_prune_rows
 
     path = str(tmp_path / "ex.parquet")
     ks = ["a", "b"] * 50 + ["b", "c"] * 50  # rg0 dict {a,b}, rg1 {b,c}
@@ -462,7 +463,7 @@ def test_exclusion_ops_prune_stats_and_dictionaries(spark, tmp_path):
     pred = [("k", "not_in", ["a", "b"])]
     stats_kept = [r for r in rows if stats_verdict(r, normalize(pred)) is None]
     assert len(stats_kept) == 2  # neither rg is single-valued
-    dict_kept = dict_prune_rows(stats_kept, pred)
+    dict_kept = tier_filter("dictionary", stats_kept, pred, DictionaryProber())
     assert [r["row_group"] for r in dict_kept] == [1]  # {a,b} excluded
     got = sorted(
         (r["k"], r["n"]) for r in idx.read(predicate=pred).collect()

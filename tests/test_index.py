@@ -371,14 +371,20 @@ def test_incremental_build_purges_deleted_file(spark, tmp_path):
     assert rg_files == {f"{data}/nation.parquet"}
 
 
-def test_incremental_listing_is_not_driver_materialized(spark, tmp_path):
+def test_incremental_listing_is_not_driver_materialized(
+    spark, tmp_path, monkeypatch
+):
     """Round-3 verdict item 5: the incremental build must not collect the
-    persisted file list to the driver.  The plan shape is a broadcast
-    semi-join with the CANDIDATES on the broadcast side, so driver memory
-    is bounded by the candidate list, never by the index catalog size."""
+    persisted file list to the driver.  The reconcile pass's one collect
+    runs a broadcast join with the CANDIDATES on the broadcast side, then
+    an executor-side stat that returns only candidate or churned rows, so
+    driver memory is bounded by the candidate list plus churn, never by
+    the index catalog size."""
     import shutil
 
-    from palletjack_spark.index.builder import _already_indexed, build_index
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from palletjack_spark.index.builder import _reconcile, build_index
 
     data = str(tmp_path / "data")
     os.makedirs(data)
@@ -387,21 +393,31 @@ def test_incremental_listing_is_not_driver_materialized(spark, tmp_path):
     build_index(spark, data, index_dir=idx_dir)
 
     cands = [f"{data}/nation.parquet", f"{data}/other.parquet"]
-    got = _already_indexed(spark, cands, idx_dir)
-    assert got == {f"{data}/nation.parquet"}
+    files_df = spark.read.parquet(os.path.join(idx_dir, "files"))
+    collected = []
+    real_collect = DataFrame.collect
 
-    # plan assertion: files/ is probed through a broadcast semi-join
-    existing = spark.read.parquet(os.path.join(idx_dir, "files")).select("file")
-    from pyspark.sql import functions as F
+    def spy(self):
+        collected.append(self)
+        return real_collect(self)
 
-    cand = spark.createDataFrame([(f,) for f in cands], "file string")
-    plan = (
-        existing.join(F.broadcast(cand), "file", "left_semi")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "BroadcastHashJoin" in plan and "LeftSemi" in plan, plan
+    monkeypatch.setattr(DataFrame, "collect", spy)
+    got = _reconcile(spark, cands, files_df)
+    monkeypatch.undo()
+    assert got == ({f"{data}/nation.parquet"}, set(), set())
+
+    # plan assertion on the reconcile pass's own collect: files/ is
+    # probed through a broadcast join whose broadcast side is the
+    # candidate list, and what comes back is the probe's output
+    assert len(collected) == 1
+    assert collected[0].columns == ["file", "status", "candidate"]
+    plan = collected[0]._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan and "LeftOuter" in plan, plan
+    assert "BuildRight" in plan and "MapInArrow" in plan, plan
+    final = plan.split("== Initial Plan ==")[0]
+    broadcast_side = final.split("BroadcastExchange")[1]
+    assert "LocalTableScan" in broadcast_side, plan
+    assert "FileScan" not in broadcast_side, plan
 
 
 def test_distributed_read_plan_not_driver_materialized(spark, monkeypatch):

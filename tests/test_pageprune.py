@@ -12,7 +12,9 @@ import random
 import pyarrow as pa
 import pyarrow.parquet as pq
 
+from palletjack_spark.index.pageprune import PageProber
 from palletjack_spark.index.predicate import canonical, normalize, stats_verdict
+from palletjack_spark.index.tiers import tier_filter
 from tests.conftest import SF_DIR  # noqa: F401  (session fixture import)
 
 
@@ -84,7 +86,6 @@ def test_pinned_skip_counts(tmp_path):
     the literal), the page tier keeps EXACTLY the owning one — for
     equality, IN, and pure ranges — and pins 1 of 4 surviving pages."""
     from palletjack_spark.index.builder import _extract_file_rows
-    from palletjack_spark.index.pageprune import PageProber, page_prune_rows
 
     path = _gap_fixture(tmp_path)
     _f, rgs = _extract_file_rows(path)
@@ -98,7 +99,7 @@ def test_pinned_skip_counts(tmp_path):
     ):
         stats_kept = [r for r in rgs if stats_verdict(r, normalize(pred)) is None]
         assert len(stats_kept) == 4, pred  # stats tier is blind here
-        page_kept = page_prune_rows(stats_kept, pred)
+        page_kept = tier_filter("page", stats_kept, pred, PageProber())
         assert [r["row_group"] for r in page_kept] == [1], pred
     # the row-granular selection: 1 of 4 pages in the surviving rg
     prober = PageProber()
@@ -109,11 +110,11 @@ def test_pinned_skip_counts(tmp_path):
     )
     assert ranges == [(1024, 2048)]
     # an absent-from-everywhere value prunes all four row groups
-    assert page_prune_rows(rgs, [("k", "=", 10**9)]) == []
+    assert tier_filter("page", rgs, [("k", "=", 10**9)], PageProber()) == []
     # multi-column intersection: k's page 1 of rg1 vs tag range in a
     # DIFFERENT band of rg1 -> provably disjoint rows, rg pruned
     both = [("k", "=", 5632), ("tag", "<", "t0001000")]
-    assert page_prune_rows(rgs, both) == []
+    assert tier_filter("page", rgs, both, PageProber()) == []
 
 
 def test_end_to_end_read_equals_pruning_off(spark, tmp_path):
@@ -163,7 +164,6 @@ def test_null_page_and_null_count_semantics(tmp_path):
     """An all-NULL page fails every value conjunct (and not_null) but
     passes is_null; zero-null pages fail is_null."""
     from palletjack_spark.index.builder import _extract_file_rows
-    from palletjack_spark.index.pageprune import page_prune_rows
 
     path = str(tmp_path / "nulls.parquet")
     # page 0: values, page 1: all NULL, page 2: values
@@ -183,21 +183,20 @@ def test_null_page_and_null_count_semantics(tmp_path):
     _f, rgs = _extract_file_rows(path)
     # 2000 sits between page 0's and page 2's bands; the NULL page can't
     # hold it either -> the whole row group is provably empty
-    assert page_prune_rows(rgs, [("k", "=", 2000)]) == []
+    assert tier_filter("page", rgs, [("k", "=", 2000)], PageProber()) == []
     # values present in real pages keep
-    assert len(page_prune_rows(rgs, [("k", "=", 100)])) == 1
+    assert len(tier_filter("page", rgs, [("k", "=", 100)], PageProber())) == 1
     # is_null keeps (the NULL page exists); not_null keeps (value pages)
-    assert len(page_prune_rows(rgs, [("k", "is_null")])) == 1
-    assert len(page_prune_rows(rgs, [("k", "not_null")])) == 1
+    assert len(tier_filter("page", rgs, [("k", "is_null")], PageProber())) == 1
+    assert len(tier_filter("page", rgs, [("k", "not_null")], PageProber())) == 1
 
 
 def test_no_nulls_fails_is_null(tmp_path):
     from palletjack_spark.index.builder import _extract_file_rows
-    from palletjack_spark.index.pageprune import page_prune_rows
 
     path = _gap_fixture(tmp_path, name="nonull.parquet")
     _f, rgs = _extract_file_rows(path)
-    assert page_prune_rows(rgs, [("k", "is_null")]) == []
+    assert tier_filter("page", rgs, [("k", "is_null")], PageProber()) == []
 
 
 def test_truncated_byte_array_bounds_stay_sound(tmp_path):
@@ -205,7 +204,6 @@ def test_truncated_byte_array_bounds_stay_sound(tmp_path):
     prefix-min / incremented-max remain valid envelope bounds — present
     values keep, far-outside values prune."""
     from palletjack_spark.index.builder import _extract_file_rows
-    from palletjack_spark.index.pageprune import page_prune_rows
 
     path = str(tmp_path / "trunc.parquet")
     prefix = "p" * 70  # > 64-byte truncation window
@@ -223,21 +221,20 @@ def test_truncated_byte_array_bounds_stay_sound(tmp_path):
     _f, rgs = _extract_file_rows(path)
     # every stored value must keep (truncation can't fake a miss)
     for probe in (vals[0], vals[1024], vals[2047]):
-        assert len(page_prune_rows(rgs, [("s", "=", probe)])) == 1
+        assert len(tier_filter("page", rgs, [("s", "=", probe)], PageProber())) == 1
     # a value before every prefix prunes; one after the incremented
     # max prunes too
-    assert page_prune_rows(rgs, [("s", "=", "a")]) == []
-    assert page_prune_rows(rgs, [("s", "=", "q")]) == []
+    assert tier_filter("page", rgs, [("s", "=", "a")], PageProber()) == []
+    assert tier_filter("page", rgs, [("s", "=", "q")], PageProber()) == []
     # exclusion on a truncated single-page bound must NOT fire a fake
     # single-valued proof (min != incremented max)
-    assert len(page_prune_rows(rgs, [("s", "!=", vals[0])])) == 1
+    assert len(tier_filter("page", rgs, [("s", "!=", vals[0])], PageProber())) == 1
 
 
 def test_identity_logical_gate_and_float_rules(tmp_path):
     """Non-identity logical re-encodings never probe; float pages never
     exclusion-prune; NaN literals keep."""
     from palletjack_spark.index.builder import _extract_file_rows
-    from palletjack_spark.index.pageprune import page_prune_rows
 
     path = str(tmp_path / "types.parquet")
     import decimal
@@ -273,13 +270,13 @@ def test_identity_logical_gate_and_float_rules(tmp_path):
     w.close()
     _f, rgs = _extract_file_rows(path)
     # decimal + unsigned: the gate refuses, absurd literals still keep
-    assert len(page_prune_rows(rgs, [("d", "=", 10**9)])) == 1
-    assert len(page_prune_rows(rgs, [("u", "=", -5)])) == 1
+    assert len(tier_filter("page", rgs, [("d", "=", 10**9)], PageProber())) == 1
+    assert len(tier_filter("page", rgs, [("u", "=", -5)], PageProber())) == 1
     # float ranges DO prune (engine-parity doctrine)...
-    assert page_prune_rows(rgs, [("f", ">", 1e9)]) == []
+    assert tier_filter("page", rgs, [("f", ">", 1e9)], PageProber()) == []
     # ...but exclusion and NaN literals never do
-    assert len(page_prune_rows(rgs, [("f", "!=", 0.0)])) == 1
-    assert len(page_prune_rows(rgs, [("f", "=", float("nan"))])) == 1
+    assert len(tier_filter("page", rgs, [("f", "!=", 0.0)], PageProber())) == 1
+    assert len(tier_filter("page", rgs, [("f", "=", float("nan"))], PageProber())) == 1
 
 
 def test_single_valued_page_exclusion(tmp_path):
@@ -287,7 +284,6 @@ def test_single_valued_page_exclusion(tmp_path):
     single-valued and excluded — the page-granular mirror of the stats
     tier's lo == hi proof."""
     from palletjack_spark.index.builder import _extract_file_rows
-    from palletjack_spark.index.pageprune import page_prune_rows
 
     path = str(tmp_path / "const.parquet")
     w = pq.ParquetWriter(
@@ -309,9 +305,9 @@ def test_single_valued_page_exclusion(tmp_path):
     )
     w.close()
     _f, rgs = _extract_file_rows(path)
-    kept = page_prune_rows(rgs, [("c", "not_in", [7, 9])])
+    kept = tier_filter("page", rgs, [("c", "not_in", [7, 9])], PageProber())
     assert [r["row_group"] for r in kept] == [1]
-    assert len(page_prune_rows(rgs, [("c", "!=", 11)])) == 1
+    assert len(tier_filter("page", rgs, [("c", "!=", 11)], PageProber())) == 1
 
 
 def test_absent_index_keeps(tmp_path):
@@ -321,7 +317,6 @@ def test_absent_index_keeps(tmp_path):
     from palletjack_spark.index.footer_splice import read_footer_bytes
     from palletjack_spark.index.pageprune import (
         page_index_offsets,
-        page_prune_rows,
     )
 
     path = str(tmp_path / "noidx.parquet")
@@ -333,7 +328,8 @@ def test_absent_index_keeps(tmp_path):
     )
     assert page_index_offsets(read_footer_bytes(path), 0, 0) is None
     _f, rgs = _extract_file_rows(path)
-    assert len(page_prune_rows(rgs, [("k", "=", 10**9)])) == len(rgs)
+    kept = tier_filter("page", rgs, [("k", "=", 10**9)], PageProber())
+    assert len(kept) == len(rgs)
 
 
 def test_corruption_fuzz_never_crashes(tmp_path):
@@ -532,7 +528,6 @@ def test_writer_truncates_long_byte_arrays_soundly(tmp_path):
     from palletjack_spark.index.pageprune import (
         add_page_index,
         page_index_offsets,
-        page_prune_rows,
         read_column_index,
     )
     from palletjack_spark.index.builder import _extract_file_rows
@@ -558,8 +553,8 @@ def test_writer_truncates_long_byte_arrays_soundly(tmp_path):
         assert ci["maxs"][i] >= max(vals).encode()[: len(ci["maxs"][i])]
     _f, rgs = _extract_file_rows(path)
     for probe in (vals[0], vals[1024], vals[2047]):
-        assert len(page_prune_rows(rgs, [("s", "=", probe)])) == 1
-    assert page_prune_rows(rgs, [("s", "=", "a")]) == []
+        assert len(tier_filter("page", rgs, [("s", "=", probe)], PageProber())) == 1
+    assert tier_filter("page", rgs, [("s", "=", "a")], PageProber()) == []
 
 
 def test_writer_handles_v2_pages_nulls_and_rejects(spark, tmp_path):
@@ -573,7 +568,6 @@ def test_writer_handles_v2_pages_nulls_and_rejects(spark, tmp_path):
     from palletjack_spark.index.pageprune import (
         add_page_index,
         page_index_offsets,
-        page_prune_rows,
         read_column_index,
     )
 
@@ -601,8 +595,8 @@ def test_writer_handles_v2_pages_nulls_and_rejects(spark, tmp_path):
     assert ci["null_counts"] == [0, 1024]
     assert ci["mins"] == [0, 4096] and ci["maxs"] == [1023, 5119]
     _f, rgs = _extract_file_rows(path)
-    assert page_prune_rows(rgs, [("k", "=", 2000)]) == []
-    assert len(page_prune_rows(rgs, [("k", "is_null")])) == 1
+    assert tier_filter("page", rgs, [("k", "=", 2000)], PageProber()) == []
+    assert len(tier_filter("page", rgs, [("k", "is_null")], PageProber())) == 1
 
     with pytest.raises(InvalidSelectionError):
         add_page_index(path, ["nope"])
