@@ -706,16 +706,14 @@ def bench_metadata(spark) -> dict[str, float]:
     # PJS1 sidecar: build (footer walk + span record), then the reference's
     # actual read_metadata workload — a pruned, genuine pyarrow FileMetaData
     # spliced from the in-memory index (palletjack_cython.pyx:27-46).
-    # Min-of-2 COLD builds: span/footer caches are cleared between passes so
+    # Min-of-2 COLD builds: the footer memo is cleared between passes so
     # each measures the true one-time walk, not a memo hit.
     pjs1_build = float("inf")
     for _ in range(2):
-        footer_splice._SPAN_CACHE.clear()
-        footer_splice._FOOTER_CACHE.clear()
+        footer_splice._FOOTER_MEMO.clear()
         t0 = time.perf_counter()
         pjs1 = generate_metadata_index(path)
         pjs1_build = min(pjs1_build, time.perf_counter() - t0)
-    footer_splice._deserialize_index(bytes(pjs1))  # warm the span cache
 
     def _spliced_block():
         md = footer_splice.read_metadata(

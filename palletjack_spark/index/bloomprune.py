@@ -362,7 +362,7 @@ def value_prune_plan(plan, predicate, explain: bool = False):
     conjuncts the first two tiers can't), in the order and with the
     verdicts of ``tiers.value_verdict``, which each row runs.  One pass
     keeps the catalog plan a single pipelined stage, and the probers
-    share the per-task footer reads through the footer cache.  Same
+    share one footer snapshot per task (``tiers.new_probers``).  Same
     contract as the driver-side tiers: unknown keeps, the selection
     never touches the driver, output columns are (file, row_group,
     total_byte_size, pj_ranges).

@@ -630,12 +630,12 @@ def build_index(
         return _load(spark, index_dir, like=sidecar)
 
     combined = combined.cache()
-    # ONE job both forces the cache and validates: the tagged union lets a
-    # single groupBy("file") compare indexed row-group counts/rows against
-    # the declared header counts without the load_index-shape groupBy+join
-    # (which would be two more shuffled jobs here).  The splits stay as
-    # filters OVER the cached union (one InMemoryRelation, not three); the
-    # cache is released via the index handle.
+    # ONE action (4 jobs under adaptive execution) forces the cache and
+    # validates: the tagged union lets a single groupBy("file") compare
+    # indexed row-group counts/rows against the declared header counts
+    # without the load_index-shape groupBy+join (two more shuffles here).
+    # The splits stay as filters OVER the cached union (one
+    # InMemoryRelation, not three); the cache is released via the index.
     _validate_combined(combined)
     rg_df = combined.where(F.col("kind") == "rg").select(rg_cols)
     files_df = combined.where(F.col("kind") == "file").select(f_cols)
@@ -897,9 +897,10 @@ def _validate_combined(combined) -> None:
     is_file = F.col("kind") == "file"
     # second aggregate (not limit(1).collect(): CollectLimit over an EMPTY
     # result — the valid-index common case — escalates through 1/4/20/...
-    # partition scan jobs; a global agg is always exactly one job) returns
-    # a count plus one deterministic example row, bounding driver data even
-    # when every file is inconsistent.
+    # partition scan jobs; a global agg runs 4 jobs over a fresh extraction
+    # and 3 over a sidecar union, under adaptive execution) returns a count
+    # plus one deterministic example row, bounding driver data even when
+    # every file is inconsistent.
     summary = (
         combined.groupBy("file")
         .agg(

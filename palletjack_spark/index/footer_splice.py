@@ -38,7 +38,9 @@ reference's semantics (``test_palletjack.py:87`` reads pruned metadata with
 
 from __future__ import annotations
 
+import os
 import struct
+import threading
 from typing import Iterable, Sequence
 
 import pyarrow as pa
@@ -169,7 +171,7 @@ def _skip_struct_fast(buf: bytes, pos: int) -> int:
     The footer walk is O(footer) by necessity (Thrift compact is a stream
     format with no random access — the exact problem the reference solves by
     recording offsets, palletjack.cc:33-80); this keeps the constant small,
-    and `_SPAN_CACHE` makes the walk once-per-footer rather than per-call."""
+    and the footer memo makes the walk once-per-footer rather than per-call."""
     # stack entries: -1 = struct; (etype, n) = list/set of structs/containers
     # with n elems left.  Scalar list elements (varint/string/double/bool)
     # are skipped inline below and never touch the stack — on a 400-col
@@ -357,38 +359,73 @@ def _list_elem_spans(
     return etype, spans, pos
 
 
-#: once-per-footer span memo (the in-memory analogue of the reference's
-#: persisted offset arrays): keyed by the footer OBJECT's identity — the
-#: cache keeps a strong reference to the bytes, so the id cannot be recycled
-#: while the entry lives.  Hashing the blob per call would cost more than
-#: the splice itself on wide footers.  Splices after the first per footer
-#: object are O(selected).
-_SPAN_CACHE: dict[int, tuple[bytes, list, list, dict]] = {}
-_SPAN_CACHE_MAX = 16
+# --------------------------------------------------------------------------
+# the footer memo
+# --------------------------------------------------------------------------
+#
+# One bounded FIFO memo, the in-memory analogue of the reference's per-file
+# index (palletjack.cc:656-678).  An entry is a `Footer`: one footer's
+# bytes, spans and facts.  A file's key is (loader, path, mtime_ns, size):
+# the loader keeps a path read as a sidecar apart from the same path read
+# as parquet, and a rewritten file gets a fresh entry.  An in-memory
+# sidecar's key is id(buffer) (hashing it per call would cost more than
+# the splice), and a hit is served only while the buffer still equals the
+# bytes the entry was built from (a bytearray can be overwritten in
+# place).  Raw bytes work wherever a `Footer` does, with an uncached walk.
+
+_FOOTER_MEMO: dict = {}
+_FOOTER_MEMO_MAX = 16
+_FOOTER_MEMO_LOCK = threading.Lock()
+
+
+class Footer(bytes):
+    """Footer bytes carrying their memo entry: ``spans`` (walked on first
+    use unless a sidecar stored them), ``facts`` (:func:`footer_memo`) and
+    ``blob`` (the in-memory sidecar read, else None)."""
+
+    def __new__(cls, data, spans=None):
+        self = super().__new__(cls, data)
+        self.spans = spans
+        self.facts = {}
+        self.blob = None
+        return self
+
+
+def _remember(key, footer: Footer) -> Footer:
+    """Store ``footer`` under ``key`` as the newest entry, evicting the
+    oldest when the memo is full."""
+    with _FOOTER_MEMO_LOCK:  # reader threads may miss at the same time
+        _FOOTER_MEMO.pop(key, None)
+        if len(_FOOTER_MEMO) >= _FOOTER_MEMO_MAX:
+            _FOOTER_MEMO.pop(next(iter(_FOOTER_MEMO)))
+        _FOOTER_MEMO[key] = footer
+    return footer
+
+
+def _file_footer(path: str, load) -> Footer:
+    """The memo entry for the file at ``path`` as ``load`` reads it."""
+    st = os.stat(path)
+    key = (load, path, st.st_mtime_ns, st.st_size)
+    hit = _FOOTER_MEMO.get(key)
+    return hit if hit is not None else _remember(key, load(path))
 
 
 def _footer_state(footer: bytes) -> tuple[list, list, dict]:
-    """(top-level field spans, per-row-group field spans, extras memo) for a
-    footer blob, memoized per blob object.  ``extras`` lazily accumulates
-    derived structures (decoded schema, leaf paths, per-rg chunk spans) so
-    repeated splices never redo identical decode work."""
-    hit = _SPAN_CACHE.get(id(footer))
-    if hit is not None and hit[0] is footer:
-        return hit[1], hit[2], hit[3]
-    fields, _ = _struct_field_spans(footer, 0)
-    rg_span = next(((s, e) for fid, ct, s, e in fields if fid == 4), None)
-    if rg_span is None:
-        raise InvalidSelectionError("footer has no row_groups field")
-    etype, n, pos = _read_list_header(footer, rg_span[0])
-    rg_elems = []
-    for _ in range(n):
-        rg_fields, pos = _struct_field_spans(footer, pos)
-        rg_elems.append(rg_fields)
-    if len(_SPAN_CACHE) >= _SPAN_CACHE_MAX:
-        _SPAN_CACHE.pop(next(iter(_SPAN_CACHE)))
-    extras: dict = {}
-    _SPAN_CACHE[id(footer)] = (footer, fields, rg_elems, extras)
-    return fields, rg_elems, extras
+    """(top-level field spans, per-row-group field spans, facts memo)."""
+    if not isinstance(footer, Footer):
+        footer = Footer(footer)
+    if footer.spans is None:
+        fields, _ = _struct_field_spans(footer, 0)
+        rg_span = _span_get(fields, 4)
+        if rg_span is None:
+            raise InvalidSelectionError("footer has no row_groups field")
+        etype, n, pos = _read_list_header(footer, rg_span[1])
+        rg_elems = []
+        for _ in range(n):
+            rg_fields, pos = _struct_field_spans(footer, pos)
+            rg_elems.append(rg_fields)
+        footer.spans = fields, rg_elems
+    return (*footer.spans, footer.facts)
 
 
 def footer_spans(footer: bytes) -> tuple[list, list]:
@@ -399,11 +436,11 @@ def footer_spans(footer: bytes) -> tuple[list, list]:
 
 
 def footer_memo(footer: bytes, name: str) -> dict:
-    """The dict called ``name`` in the footer's extras memo.  Entries must
+    """The dict called ``name`` in the footer's facts memo.  Entries must
     be pure functions of the footer and of the file bytes behind it: the
-    footer object is unique per (path, mtime, size) (``read_footer_bytes``),
-    so a rewritten file gets a fresh memo, and the entries are evicted
-    with the footer's span-memo entry."""
+    footer's memo entry is keyed by (path, mtime, size)
+    (``read_footer_bytes``), so a rewritten file gets a fresh memo, and
+    the facts are evicted with the entry."""
     return _footer_state(footer)[2].setdefault(name, {})
 
 
@@ -462,27 +499,32 @@ def int_field(buf: bytes, fields, fid: int) -> int | None:
         return None
 
 
+class FooterSnapshot(dict):
+    """One pruning pass's footers by path (None when unreadable): each
+    file is stat'ed and read at most once per pass."""
+
+    def __missing__(self, path: str) -> bytes | None:
+        try:
+            footer = read_footer_bytes(path)
+        except Exception:
+            footer = None
+        self[path] = footer
+        return footer
+
+
 class FooterProber:
-    """Base of the value-tier probers: a per-pass snapshot of each probed
-    file's footer, so one planning pass sees one footer per path.  The
-    probers' facts live in the footer's own memo (:func:`footer_memo`)
-    and so outlast the pass."""
+    """Base of the value-tier probers.  The probers of one pass share one
+    :class:`FooterSnapshot` (``tiers.new_probers``); a prober made alone
+    has its own.  The probers' facts live in the footer's own memo
+    (:func:`footer_memo`) and so outlast the pass."""
 
     def __init__(self) -> None:
-        self._footers: dict[str, bytes | None] = {}
-
-    def _footer(self, path: str) -> bytes | None:
-        if path not in self._footers:
-            try:
-                self._footers[path] = read_footer_bytes(path)
-            except Exception:
-                self._footers[path] = None
-        return self._footers[path]
+        self.footers = FooterSnapshot()
 
     def _memo(self, path: str, name: str):
         """(footer, its ``name`` memo), or (None, None) when the footer
         can't be read or parsed."""
-        footer = self._footer(path)
+        footer = self.footers[path]
         if footer is None:
             return None, None
         try:
@@ -695,37 +737,16 @@ def _set(fields: list[tuple[int, int, object]], fid: int, ctype: int, v) -> None
     fields.insert(at, (fid, ctype, v))
 
 
-def _drop(fields: list[tuple[int, int, object]], fid: int) -> None:
-    fields[:] = [f for f in fields if f[0] != fid]
-
-
 # --------------------------------------------------------------------------
 # footer I/O
 # --------------------------------------------------------------------------
 
-#: footer-bytes memo keyed by (path, mtime_ns, size) — returns the SAME
-#: bytes object for an unchanged file, which keeps `_SPAN_CACHE` warm
-#: across path-based `read_metadata` calls
-_FOOTER_CACHE: dict[tuple, bytes] = {}
-_FOOTER_CACHE_MAX = 16
-
-
 def read_footer_bytes(path: str) -> bytes:
     """The raw Thrift ``FileMetaData`` blob from a parquet file's tail —
     what the reference stores verbatim inside its PJ_2 index
-    (palletjack.cc:33-80)."""
-    import os
-
-    st = os.stat(path)
-    key = (path, st.st_mtime_ns, st.st_size)
-    hit = _FOOTER_CACHE.get(key)
-    if hit is not None:
-        return hit
-    blob = _read_footer_bytes_uncached(path)
-    if len(_FOOTER_CACHE) >= _FOOTER_CACHE_MAX:
-        _FOOTER_CACHE.pop(next(iter(_FOOTER_CACHE)))
-    _FOOTER_CACHE[key] = blob
-    return blob
+    (palletjack.cc:33-80) — served from the footer memo while the file is
+    unchanged."""
+    return _file_footer(path, _read_parquet_footer)
 
 
 def atomic_tail_rewrite(path: str, footer_start: int, tail: bytes) -> None:
@@ -743,7 +764,6 @@ def atomic_tail_rewrite(path: str, footer_start: int, tail: bytes) -> None:
     last rename wins atomically — surgery is a pure function of the
     source bytes, so any winner is a correct, fully-formed file, and an
     attempt that lost simply replaced an identical result."""
-    import os
     import shutil
     import uuid
 
@@ -773,7 +793,7 @@ def atomic_tail_rewrite(path: str, footer_start: int, tail: bytes) -> None:
         raise
 
 
-def _read_footer_bytes_uncached(path: str) -> bytes:
+def _read_parquet_footer(path: str) -> Footer:
     with open(path, "rb") as f:
         f.seek(0, 2)
         size = f.tell()
@@ -793,7 +813,7 @@ def _read_footer_bytes_uncached(path: str) -> bytes:
         if flen > size - 8:
             raise InvalidSelectionError(f"{path}: corrupt footer length")
         f.seek(size - 8 - flen)
-        return f.read(flen)
+        return Footer(f.read(flen))
 
 
 def metadata_from_footer(footer: bytes) -> pq.FileMetaData:
@@ -902,16 +922,21 @@ def _prune_schema(elems: list, keep_leaves: set[int]):
 
 def leaf_column_names(footer: bytes) -> list[str]:
     """Dotted leaf paths in leaf order (the reference's column_names keys)."""
-    fields, _ = footer_spans(footer)
-    return _leaf_paths(_decode_schema(footer, fields))
+    return list(_schema(footer)[1])
 
 
-def _decode_schema(footer: bytes, fields) -> list:
-    span = next(((s, e) for fid, ct, s, e in fields if fid == 2), None)
-    if span is None:
-        raise InvalidSelectionError("footer has no schema field")
-    (_, elems), _ = _decode_value(footer, span[0], CT_LIST)
-    return elems
+def _schema(footer: bytes) -> tuple[list, list[str]]:
+    """(decoded SchemaElement structs, dotted leaf paths), memoized in the
+    footer's facts."""
+    fields, _, facts = _footer_state(footer)
+    got = facts.get("schema")
+    if got is None:
+        span = next(((s, e) for fid, ct, s, e in fields if fid == 2), None)
+        if span is None:
+            raise InvalidSelectionError("footer has no schema field")
+        (_, elems), _ = _decode_value(footer, span[0], CT_LIST)
+        got = facts["schema"] = (elems, _leaf_paths(elems))
+    return got
 
 
 def _leaf_paths(elems: list) -> list[str]:
@@ -944,8 +969,7 @@ def _leaf_paths(elems: list) -> list[str]:
 
 def resolve_column_names(footer: bytes, column_names: Sequence[str]) -> list[int]:
     """Map dotted leaf paths (or top-level names) to leaf column indices."""
-    fields, _ = footer_spans(footer)
-    paths = _leaf_paths(_decode_schema(footer, fields))
+    paths = _schema(footer)[1]
     by_path = {p: i for i, p in enumerate(paths)}
     by_head: dict[str, list[int]] = {}
     for i, p in enumerate(paths):
@@ -983,6 +1007,8 @@ def splice_footer(
     supported by the reference's flat-only indexer) normalize the column
     selection to depth-first order, because the group tree fixes leaf order.
     """
+    if not isinstance(footer, Footer):
+        footer = Footer(footer)  # raw bytes: one walk for this call
     if column_names:
         if column_indices:
             raise InvalidSelectionError(
@@ -990,7 +1016,7 @@ def splice_footer(
             )
         column_indices = resolve_column_names(footer, column_names)
 
-    fields, rg_elems, extras = _footer_state(footer)
+    fields, rg_elems = footer_spans(footer)
     n_rg = len(rg_elems)
 
     if schema_only:
@@ -1009,14 +1035,7 @@ def splice_footer(
     keep_order: list[int] | None = None
     new_schema = None
     if column_indices is not None and len(column_indices) > 0:
-        schema_elems = extras.get("schema_elems")
-        if schema_elems is None:
-            schema_elems = _decode_schema(footer, fields)
-            extras["schema_elems"] = schema_elems
-        leaf_paths = extras.get("leaf_paths")
-        if leaf_paths is None:
-            leaf_paths = _leaf_paths(schema_elems)
-            extras["leaf_paths"] = leaf_paths
+        schema_elems, leaf_paths = _schema(footer)
         n_leaves = len(leaf_paths)
         keep_order = [int(c) for c in column_indices]
         bad = [c for c in keep_order if c < 0 or c >= n_leaves]
@@ -1312,7 +1331,7 @@ def generate_pj2_index(
     return None
 
 
-def _decode_pj2(blob: bytes) -> bytes:
+def _decode_pj2(blob: bytes) -> Footer:
     """Decode the reference's ``PJ_2`` sidecar into its embedded footer.
 
     Layout (palletjack.cc:33-80, write order cc:316-339): a 20-byte header
@@ -1364,7 +1383,7 @@ def _decode_pj2(blob: bytes) -> bytes:
             f"Corrupt PJ_2 index: {len(names)} column names for "
             f"{cols} declared columns"
         )
-    footer = bytes(blob[names_start + cnames_len :])
+    footer = Footer(memoryview(blob)[names_start + cnames_len :])
     # cross-check the embedded footer against the header the same way the
     # reference trusts its offset arrays only after count validation
     try:
@@ -1387,13 +1406,11 @@ def _decode_pj2(blob: bytes) -> bytes:
     return footer
 
 
-def _deserialize_index(blob: bytes) -> tuple[bytes, list, list]:
+def _deserialize_index(blob: bytes) -> Footer:
     if blob[:4] == _PJ2_MAGIC:
-        # reference-generated sidecar: extract the embedded footer; the
-        # span walk happened (and was cached) during validation
-        footer = _decode_pj2(blob)
-        fields, rg_elems = footer_spans(footer)
-        return footer, fields, rg_elems
+        # reference-generated sidecar: extract the embedded footer; its
+        # span walk happened during validation
+        return _decode_pj2(blob)
     if blob[:4] != _PJS_MAGIC:
         raise InvalidSelectionError(
             "Not a palletjack_spark footer index (bad magic; expected "
@@ -1424,7 +1441,7 @@ def _deserialize_index(blob: bytes) -> tuple[bytes, list, list]:
             f"Corrupt PJS1 index: declared footer length {flen} exceeds "
             f"the {len(blob) - pos} bytes remaining"
         )
-    footer = bytes(blob[pos : pos + flen])
+    footer = memoryview(blob)[pos : pos + flen]
     pos += flen
     (n_top,) = _take("<I", 4, "top-level field count")
     if n_top > (len(blob) - pos) // 32:
@@ -1476,11 +1493,8 @@ def _deserialize_index(blob: bytes) -> tuple[bytes, list, list]:
                     f"ctype={ctype}, start={start}, end={end}) does not "
                     f"denote a byte range of the {flen}-byte footer"
                 )
-    # seed the span cache so splices skip the walk entirely
-    if len(_SPAN_CACHE) >= _SPAN_CACHE_MAX:
-        _SPAN_CACHE.pop(next(iter(_SPAN_CACHE)))
-    _SPAN_CACHE[id(footer)] = (footer, fields, rg_elems, {})
-    return footer, fields, rg_elems
+    # the stored spans spare splices the walk entirely
+    return Footer(footer, (fields, rg_elems))
 
 
 def generate_metadata_index(
@@ -1500,11 +1514,9 @@ def generate_metadata_index(
     return None
 
 
-#: deserialized-index memo: id(blob) → (blob ref, footer).  The strong blob
-#: reference keeps the id stable; repeated reads from the same in-memory
-#: index then skip the per-call unpack (the dominant cost on wide footers).
-_INDEX_BLOB_CACHE: dict[int, tuple[object, bytes]] = {}
-_INDEX_BLOB_CACHE_MAX = 16
+def _read_sidecar(path: str) -> Footer:
+    with open(path, "rb") as f:
+        return _deserialize_index(f.read())
 
 
 def _footer_from_source(
@@ -1529,32 +1541,14 @@ def _footer_from_source(
     if parquet_path is not None:
         return read_footer_bytes(parquet_path)
     if index_file_path is not None:
-        import os
-
-        st = os.stat(index_file_path)
-        # "pjs1" tag: this cache is shared with read_footer_bytes, whose
-        # keys are (path, mtime, size) of PARQUET files.  Without the
-        # tag, reading the same path first as an index then as parquet
-        # (or vice versa) served the WRONG byte blob from cache instead
-        # of the uncached path's typed error (round-13 review).
-        fkey = ("pjs1", index_file_path, st.st_mtime_ns, st.st_size)
-        fhit = _FOOTER_CACHE.get(fkey)
-        if fhit is not None:
-            return fhit
-        with open(index_file_path, "rb") as f:
-            footer, _, _ = _deserialize_index(f.read())
-        if len(_FOOTER_CACHE) >= _FOOTER_CACHE_MAX:
-            _FOOTER_CACHE.pop(next(iter(_FOOTER_CACHE)))
-        _FOOTER_CACHE[fkey] = footer
-        return footer
-    hit = _INDEX_BLOB_CACHE.get(id(index_data))
-    if hit is not None and hit[0] is index_data:
-        return hit[1]
-    footer, _, _ = _deserialize_index(bytes(index_data))
-    if len(_INDEX_BLOB_CACHE) >= _INDEX_BLOB_CACHE_MAX:
-        _INDEX_BLOB_CACHE.pop(next(iter(_INDEX_BLOB_CACHE)))
-    _INDEX_BLOB_CACHE[id(index_data)] = (index_data, footer)
-    return footer
+        return _file_footer(index_file_path, _read_sidecar)
+    hit = _FOOTER_MEMO.get(id(index_data))
+    if hit is not None and hit.blob == index_data:
+        return hit
+    blob = bytes(index_data)
+    footer = _deserialize_index(blob)
+    footer.blob = blob
+    return _remember(id(index_data), footer)
 
 
 # --------------------------------------------------------------------------

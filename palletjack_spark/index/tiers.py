@@ -102,8 +102,11 @@ def value_predicate(predicate: Sequence[tuple]) -> tuple:
 
 
 def new_probers() -> tuple:
-    """One pass's (dictionary, bloom, page) probers, in tier order."""
-    return DictionaryProber(), BloomProber(), PageProber()
+    """One pass's (dictionary, bloom, page) probers, in tier order, sharing
+    one footer snapshot: each file is stat'ed and read once per pass."""
+    probers = DictionaryProber(), BloomProber(), PageProber()
+    probers[1].footers = probers[2].footers = probers[0].footers
+    return probers
 
 
 def _tier_prunes(tier, prober, file, rg, num_rows, vpred, look) -> tuple:

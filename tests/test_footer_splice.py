@@ -265,6 +265,22 @@ def test_index_file_and_data_roundtrip(pq_file, tmp_path, full_table):
         assert got.equals(want), kwargs
 
 
+def test_index_data_overwritten_in_place_reads_new_footer(tmp_path):
+    """An in-memory index overwritten in place with another file's index
+    reads the new file: the footer memo never serves a buffer whose bytes
+    changed since the entry was built."""
+    a, b = str(tmp_path / "a.parquet"), str(tmp_path / "b.parquet")
+    pq.write_table(pa.table({"a": list(range(6))}), a, row_group_size=2)
+    pq.write_table(pa.table({"b": ["x", "y"]}), b)
+    blob = generate_metadata_index(a)
+    md = read_metadata(index_data=blob)
+    assert (md.num_row_groups, md.schema.names) == (3, ["a"])
+    blob[:] = generate_metadata_index(b)
+    md = read_metadata(index_data=blob)
+    assert (md.num_row_groups, md.schema.names) == (1, ["b"])
+    assert read_schema(index_data=blob).names == ["b"]
+
+
 def test_read_schema(pq_file):
     orig = pq.ParquetFile(pq_file).schema_arrow
     sch = read_schema(parquet_path=pq_file)

@@ -180,12 +180,12 @@ def test_indexed_read_plans_without_jobs(spark):
         spark, table_path(SF_DIR, "lineitem"), use_cache=False
     )
     tracker = spark.sparkContext.statusTracker()
-    before = tracker.getJobIdsForGroup(None)
+    before = set(tracker.getJobIdsForGroup(None))
     df = idx.read(
         columns=["l_orderkey"], predicate=[("l_orderkey", ">", 1000)]
     )
-    after = tracker.getJobIdsForGroup(None)
-    assert len(after) == len(before), "read() planning launched Spark jobs"
+    after = set(tracker.getJobIdsForGroup(None))
+    assert not after - before, "read() planning launched Spark jobs"
     assert df.count() >= 0
 
 
@@ -307,18 +307,20 @@ def test_distributed_index_build_is_one_job(spark):
     prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        before = tracker.getJobIdsForGroup(None)
+        before = set(tracker.getJobIdsForGroup(None))
         idx = build_index(
             spark,
             table_path(SF_DIR, "lineitem"),
             use_cache=False,
             driver_fast_path=False,
         )
-        after = tracker.getJobIdsForGroup(None)
+        after = set(tracker.getJobIdsForGroup(None))
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", prev)
-    assert len(after) - len(before) == 1, (
-        f"distributed build launched {len(after) - len(before)} jobs, want 1"
+    # a set difference: the status store drops its oldest jobs past
+    # spark.ui.retainedJobs, which can make a length difference negative
+    assert len(after - before) == 1, (
+        f"distributed build launched {len(after - before)} jobs, want 1"
     )
     assert idx.row_groups.count() >= 1
     idx.unpersist()

@@ -79,9 +79,9 @@ def _rows(idx, pred) -> list:
     )
 
 
-def _count_probe_io(monkeypatch) -> dict:
+def _count_probe_io(monkeypatch, footers: bool = False) -> dict:
     """Count the column-chunk list walks and the dictionary, bloom and
-    column-index reads."""
+    column-index reads, and with ``footers`` the footer reads."""
     from palletjack_spark.index import bloomprune, dictprune, footer_splice
     from palletjack_spark.index import pageprune
 
@@ -101,6 +101,8 @@ def _count_probe_io(monkeypatch) -> dict:
     counted(dictprune, "read_dictionary")
     counted(bloomprune, "read_bloom")
     counted(pageprune, "read_column_index")
+    if footers:
+        counted(footer_splice, "read_footer_bytes")
     return calls
 
 
@@ -121,6 +123,28 @@ def test_warm_read_walks_and_reads_nothing(spark, tmp_path, monkeypatch):
             warm = _rows(idx, preds[tier])
         assert calls == {}, (tier, calls)
         assert warm == cold == _truth(path, preds[tier]), tier
+
+
+def test_warm_pass_reads_each_footer_once(spark, tmp_path, monkeypatch):
+    """The dictionary, bloom and page probers of one pass share one
+    footer snapshot: a warm read and a warm ``prune_verdicts`` pass read
+    each probed file's footer at most once."""
+    from palletjack_spark.index.builder import build_index
+    from palletjack_spark.index.tiers import prune_verdicts
+
+    paths = [str(tmp_path / f"once{i}.parquet") for i in range(2)]
+    for i, path in enumerate(paths):
+        _write(path, seed=4 + i, key_base=0)
+    idx = build_index(spark, paths, use_cache=False)
+    rows = idx._local[0]
+    # rg 1 of each file survives the dictionary, so all three tiers probe
+    pred = _predicates(paths[0], 0)["dictionary"]
+    _rows(idx, pred)
+    for run in (lambda: _rows(idx, pred), lambda: prune_verdicts(rows, pred)):
+        with monkeypatch.context() as m:
+            calls = _count_probe_io(m, footers=True)
+            run()
+        assert calls.get("read_footer_bytes", 0) <= len(paths), calls
 
 
 def test_rewritten_file_gets_fresh_verdicts(spark, tmp_path):
@@ -157,8 +181,7 @@ def test_cold_and_warm_reads_agree(spark, tmp_path):
     _write(path, seed=3, key_base=0)
     idx = build_index(spark, path, use_cache=False)
     for tier, pred in _predicates(path, 0).items():
-        footer_splice._FOOTER_CACHE.clear()
-        footer_splice._SPAN_CACHE.clear()
+        footer_splice._FOOTER_MEMO.clear()
         cold = (_rows(idx, pred), prune_explain_counts(idx, pred))
         warm = (_rows(idx, pred), prune_explain_counts(idx, pred))
         assert cold == warm, tier
