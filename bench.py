@@ -703,7 +703,8 @@ def bench_metadata(spark) -> dict[str, float]:
 
     indexed_pool2 = _best_pool(_indexed_read)
 
-    # PJS1 sidecar: build (footer walk + span record), then the reference's
+    # PJS2 sidecar: build (one footer walk recording the spans and the
+    # chunk / column-order / schema offset tables), then the reference's
     # actual read_metadata workload — a pruned, genuine pyarrow FileMetaData
     # spliced from the in-memory index (palletjack_cython.pyx:27-46).
     # Min-of-2 COLD builds: the footer memo is cleared between passes so

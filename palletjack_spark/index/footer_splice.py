@@ -19,13 +19,18 @@ This module is the Spark-engine analogue, pure Python, built ONLY on the
 public Parquet Thrift layout (format/src/main/thrift/parquet.thrift) and the
 Thrift compact-protocol wire spec:
 
-- a generic compact-protocol *span walker* records where each top-level
-  ``FileMetaData`` field and each ``row_groups`` list element lives in the
-  blob (the analogue of the reference's offset arrays);
+- a generic compact-protocol *span walker* records, in one walk, where
+  each top-level ``FileMetaData`` field and each ``row_groups`` list
+  element lives in the blob, plus three ``array("I")`` offset tables: the
+  column-chunk starts of every row group, the start of every column-order
+  element and of every schema element (the analogue of the reference's
+  offset arrays); a PJS2 sidecar stores them all;
 - ``splice_footer`` rebuilds a footer containing only the selected row
-  groups × columns: unselected bytes are copied or skipped wholesale, and
-  only the *kept* row groups are decoded/re-encoded (to renumber ordinals
-  and prune their column-chunk lists) — O(selected), like the reference;
+  groups × columns: unselected bytes are copied or skipped wholesale, the
+  kept chunks and column orders are copied from their table ranges, and
+  only the kept row groups' ordinals and sizes, and the root and selected
+  elements of a flat schema, are decoded/re-encoded — O(selected), like
+  the reference;
 - the result is round-tripped through ``pq.read_metadata`` on an in-memory
   "PAR1 + footer + len + PAR1" buffer, yielding a real
   ``pyarrow.parquet.FileMetaData`` that ``pq.ParquetReader().open(path,
@@ -40,9 +45,13 @@ from __future__ import annotations
 
 import os
 import struct
+import sys
 import threading
+from array import array
+from functools import partial
 from typing import Iterable, Sequence
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
@@ -317,10 +326,12 @@ def _read_list_header(buf: bytes, pos: int) -> tuple[int, int, int]:
 
 
 def _struct_field_spans(
-    buf: bytes, pos: int
+    buf: bytes, pos: int, lists: dict | None = None
 ) -> tuple[list[tuple[int, int, int, int]], int]:
     """Spans of a struct's fields: [(fid, ctype, value_start, value_end)].
-    For bool fields value_start == value_end (the value is in the header)."""
+    For bool fields value_start == value_end (the value is in the header).
+    ``lists`` maps a field id to ``walk(buf, pos) -> end``, which walks
+    the first list-typed field with that id in place of the skip."""
     fields = []
     fid = 0
     while True:
@@ -336,9 +347,23 @@ def _struct_field_spans(
         else:
             fid += delta
         start = pos
-        if ctype not in (CT_TRUE, CT_FALSE):
+        if lists and ctype == CT_LIST and fid in lists:
+            pos = lists.pop(fid)(buf, pos)
+        elif ctype not in (CT_TRUE, CT_FALSE):
             pos = _skip_value(buf, pos, ctype)
         fields.append((fid, ctype, start, pos))
+
+
+def _list_starts(buf: bytes, pos: int, out: array, elem=None) -> int:
+    """Walk the list at ``pos``, appending each element's start and then
+    the list's end to ``out``; return the end.  ``elem(buf, pos) -> end``
+    walks one element (default: skip it)."""
+    etype, n, pos = _read_list_header(buf, pos)
+    for _ in range(n):
+        out.append(pos)
+        pos = elem(buf, pos) if elem else _skip_value(buf, pos, etype)
+    out.append(pos)
+    return pos
 
 
 def _list_elem_spans(
@@ -379,13 +404,23 @@ _FOOTER_MEMO_LOCK = threading.Lock()
 
 
 class Footer(bytes):
-    """Footer bytes carrying their memo entry: ``spans`` (walked on first
-    use unless a sidecar stored them), ``facts`` (:func:`footer_memo`) and
-    ``blob`` (the in-memory sidecar read, else None)."""
+    """Footer bytes carrying their memo entry: ``spans`` (top-level and
+    per-row-group field spans), the offset tables ``chunks`` (per row
+    group, its column-chunk starts then the end of its ``columns`` list),
+    ``orders`` and ``elems`` (the column-order and schema element starts,
+    then the list's end; empty when the field is absent), all u32 arrays,
+    ``facts`` (:func:`footer_memo`) and ``blob`` (the in-memory sidecar
+    read, else None).  The walk fills every table (:func:`_walked`); a
+    PJS1 sidecar stores only the spans, so its ``chunks`` entries are None
+    until a row group is first used and its ``orders`` and ``elems`` are
+    None."""
 
-    def __new__(cls, data, spans=None):
+    def __new__(cls, data, spans=None, chunks=None, orders=None, elems=None):
         self = super().__new__(cls, data)
         self.spans = spans
+        self.chunks = chunks
+        self.orders = orders
+        self.elems = elems
         self.facts = {}
         self.blob = None
         return self
@@ -410,29 +445,48 @@ def _file_footer(path: str, load) -> Footer:
     return hit if hit is not None else _remember(key, load(path))
 
 
-def _footer_state(footer: bytes) -> tuple[list, list, dict]:
-    """(top-level field spans, per-row-group field spans, facts memo)."""
+def _walked(footer: bytes) -> Footer:
+    """``footer`` as a `Footer` with its spans, walking it once (and
+    filling every offset table on the way) when nothing stored them."""
     if not isinstance(footer, Footer):
         footer = Footer(footer)
     if footer.spans is None:
-        fields, _ = _struct_field_spans(footer, 0)
-        rg_span = _span_get(fields, 4)
-        if rg_span is None:
-            raise InvalidSelectionError("footer has no row_groups field")
-        etype, n, pos = _read_list_header(footer, rg_span[1])
-        rg_elems = []
-        for _ in range(n):
-            rg_fields, pos = _struct_field_spans(footer, pos)
+        elems, orders, chunks = array("I"), array("I"), array("I")
+        rg_elems, at = [], []
+
+        def row_group(buf, pos):
+            at.append(len(chunks))
+            rg_fields, pos = _struct_field_spans(
+                buf, pos, {1: lambda b, p: _list_starts(b, p, chunks)}
+            )
             rg_elems.append(rg_fields)
+            return pos
+
+        fields, _ = _struct_field_spans(footer, 0, {
+            2: lambda b, p: _list_starts(b, p, elems),
+            4: lambda b, p: _list_starts(b, p, array("I"), row_group),
+            7: lambda b, p: _list_starts(b, p, orders),
+        })
+        if _span_get(fields, 4) is None:
+            raise InvalidSelectionError("footer has no row_groups field")
+        at.append(len(chunks))
+        footer.chunks = _blocks(chunks, at)
+        footer.orders, footer.elems = orders, elems
         footer.spans = fields, rg_elems
-    return (*footer.spans, footer.facts)
+    return footer
+
+
+def _blocks(chunks: array, at) -> list:
+    """Per-row-group views of one chunk table (one buffer per footer),
+    block ``r`` running from ``at[r]`` to ``at[r + 1]``."""
+    view = memoryview(chunks)
+    return [view[a:b] for a, b in zip(at, at[1:])]
 
 
 def footer_spans(footer: bytes) -> tuple[list, list]:
     """Top-level ``FileMetaData`` field spans + per-row-group field spans —
     the reference's offset arrays (palletjack.cc:33-80) as Python lists."""
-    fields, rg_elems, _ = _footer_state(footer)
-    return fields, rg_elems
+    return _walked(footer).spans
 
 
 def footer_memo(footer: bytes, name: str) -> dict:
@@ -441,20 +495,53 @@ def footer_memo(footer: bytes, name: str) -> dict:
     footer's memo entry is keyed by (path, mtime, size)
     (``read_footer_bytes``), so a rewritten file gets a fresh memo, and
     the facts are evicted with the entry."""
-    return _footer_state(footer)[2].setdefault(name, {})
+    return _walked(footer).facts.setdefault(name, {})
 
 
-def _chunk_spans(footer: bytes, rg_idx: int):
-    """[(start, end)] of every ColumnChunk struct in one row group's
-    ``columns`` list, memoized per footer."""
-    _fields, rg_elems, extras = _footer_state(footer)
-    memo = extras.setdefault("chunk_spans", {})
-    spans = memo.get(rg_idx)
-    if spans is None:
+def _from_table(walk, buf: bytes, start: int, end: int, what: str):
+    """``walk(buf, start)``'s value, its walk checked to stop exactly at
+    ``end``, the next stored offset: a corrupt table entry raises instead
+    of splicing the wrong bytes."""
+    try:
+        value, stop = walk(buf, start)
+    except (IndexError, IndexFormatError):
+        stop = None
+    if stop != end:
+        raise InvalidSelectionError(
+            f"Corrupt index: {what} at {start} does not end at its table "
+            f"entry {end}"
+        )
+    return value
+
+
+def chunk_span(footer: bytes, rg_idx: int, col_idx: int):
+    """(start, end, field spans) of one ColumnChunk struct, its range from
+    the footer's chunk table and its fields walked from there.  A footer
+    that stored no table walks the row group's ``columns`` list on its
+    first use."""
+    footer = _walked(footer)
+    rg_elems = footer.spans[1]
+    if not 0 <= rg_idx < len(rg_elems):
+        raise InvalidSelectionError(
+            f"Row group {rg_idx} out of range (file has {len(rg_elems)})"
+        )
+    block = footer.chunks[rg_idx]
+    if block is None:
         cols_span = _span_get(rg_elems[rg_idx], 1)  # RowGroup.columns
-        _, spans, _ = _list_elem_spans(footer, cols_span[1])
-        memo[rg_idx] = spans
-    return spans
+        if cols_span is None:
+            raise InvalidSelectionError(f"row group {rg_idx} has no columns")
+        block = array("I")
+        _list_starts(footer, cols_span[1], block)
+        footer.chunks[rg_idx] = block
+    if not 0 <= col_idx < len(block) - 1:
+        raise InvalidSelectionError(
+            f"Column index {col_idx} out of range for row group {rg_idx} "
+            f"({len(block) - 1} chunks)"
+        )
+    start, end = block[col_idx], block[col_idx + 1]
+    what = f"column chunk {col_idx} of row group {rg_idx}"
+    fields = _from_table(_struct_field_spans, footer, start, end, what)
+    return start, end, fields
 
 
 def chunk_fields(footer: bytes, rg_idx: int, col_idx: int):
@@ -464,6 +551,7 @@ def chunk_fields(footer: bytes, rg_idx: int, col_idx: int):
     or the layout surprises.  Memoized per footer: the value tiers probe
     the same chunks on every read."""
     try:
+        footer = _walked(footer)
         memo = footer_memo(footer, "chunk_fields")
     except Exception:
         return None
@@ -471,15 +559,12 @@ def chunk_fields(footer: bytes, rg_idx: int, col_idx: int):
     if key not in memo:
         got = None
         try:
-            if rg_idx >= 0 and col_idx >= 0:
-                cc, _ = _struct_field_spans(
-                    footer, _chunk_spans(footer, rg_idx)[col_idx][0]
-                )
-                md = _span_get(cc, 3)  # ColumnChunk.meta_data
-                got = (cc, None, None, None)
-                if md is not None:
-                    md_fields, end = _struct_field_spans(footer, md[1])
-                    got = (cc, md_fields, md[1], end)
+            cc = chunk_span(footer, rg_idx, col_idx)[2]
+            md = _span_get(cc, 3)  # ColumnChunk.meta_data
+            got = (cc, None, None, None)
+            if md is not None:
+                md_fields, end = _struct_field_spans(footer, md[1])
+                got = (cc, md_fields, md[1], end)
         except Exception:  # ordinals out of range, or a layout surprise
             got = None
         memo[key] = got
@@ -816,11 +901,16 @@ def _read_parquet_footer(path: str) -> Footer:
         return Footer(f.read(flen))
 
 
+def _footer_file(footer: bytes) -> pa.BufferReader:
+    """A Thrift footer blob as an in-memory ``_metadata``-style file."""
+    size = struct.pack("<I", len(footer))
+    return pa.BufferReader(_MAGIC + footer + size + _MAGIC)
+
+
 def metadata_from_footer(footer: bytes) -> pq.FileMetaData:
-    """Wrap a Thrift footer blob as an in-memory ``_metadata``-style file and
-    parse it with pyarrow — yields a genuine ``FileMetaData`` object."""
-    buf = _MAGIC + footer + struct.pack("<I", len(footer)) + _MAGIC
-    return pq.read_metadata(pa.BufferReader(buf))
+    """Parse a Thrift footer blob with pyarrow — yields a genuine
+    ``FileMetaData`` object."""
+    return pq.read_metadata(_footer_file(footer))
 
 
 # --------------------------------------------------------------------------
@@ -864,15 +954,46 @@ def _schema_tree(elems: list):
     return root, children, leaves
 
 
-def _flat_schema_in_order(elems: list, leaves: list[int], order: list[int]):
+def _flat_schema_in_order(root: list, leaves: list):
     """Pruned SchemaElement structs for a FLAT schema (root + leaf elements
-    only), emitting the selected leaves in the CALLER'S order — the
-    reference's contract (palletjack.cc:483-490 iterates the requested
-    ``columns`` vector verbatim when copying schema elements)."""
-    root = list(elems[0])
-    if _get(elems[0], 5) is not None:
-        _set(root, 5, CT_I32, len(order))
-    return [root] + [elems[leaves[c]] for c in order]
+    only): the root with ``num_children`` recounted, then ``leaves``, the
+    selected leaf elements in the CALLER'S order — the reference's
+    contract (palletjack.cc:483-490 iterates the requested ``columns``
+    vector verbatim when copying schema elements)."""
+    root = list(root)
+    if _get(root, 5) is not None:
+        _set(root, 5, CT_I32, len(leaves))
+    return [root, *leaves]
+
+
+def _flat_schema_from_table(footer: Footer, order: list[int]):
+    """The pruned flat schema decoded from the schema-element table: only
+    the root and the selected elements, each checked to end at the next
+    table entry.  None when the footer has no table or its root does not
+    hold every other element (nested schemas take the full decode)."""
+    elems = footer.elems
+    if not elems:
+        return None
+
+    def element(i: int) -> list:
+        return _from_table(
+            partial(_decode_value, ctype=CT_STRUCT), footer, elems[i],
+            elems[i + 1], f"schema element {i}",
+        )
+
+    root = element(0)
+    n_leaves = len(elems) - 2
+    if _get(root, 5) != n_leaves:
+        return None
+    bad = [c for c in order if c < 0 or c >= n_leaves]
+    if bad:
+        raise InvalidSelectionError(
+            f"Column index {bad[0]} out of range (file has {n_leaves})"
+        )
+    leaves = [element(c + 1) for c in order]
+    if any(_get(el, 5) for el in leaves):
+        raise IndexFormatError("a leaf of a flat schema claims children")
+    return _flat_schema_in_order(root, leaves)
 
 
 def _prune_schema(elems: list, keep_leaves: set[int]):
@@ -928,14 +1049,14 @@ def leaf_column_names(footer: bytes) -> list[str]:
 def _schema(footer: bytes) -> tuple[list, list[str]]:
     """(decoded SchemaElement structs, dotted leaf paths), memoized in the
     footer's facts."""
-    fields, _, facts = _footer_state(footer)
-    got = facts.get("schema")
+    footer = _walked(footer)
+    got = footer.facts.get("schema")
     if got is None:
-        span = next(((s, e) for fid, ct, s, e in fields if fid == 2), None)
+        span = _span_get(footer.spans[0], 2)
         if span is None:
             raise InvalidSelectionError("footer has no schema field")
-        (_, elems), _ = _decode_value(footer, span[0], CT_LIST)
-        got = facts["schema"] = (elems, _leaf_paths(elems))
+        (_, elems), _ = _decode_value(footer, span[1], CT_LIST)
+        got = footer.facts["schema"] = (elems, _leaf_paths(elems))
     return got
 
 
@@ -1007,8 +1128,7 @@ def splice_footer(
     supported by the reference's flat-only indexer) normalize the column
     selection to depth-first order, because the group tree fixes leaf order.
     """
-    if not isinstance(footer, Footer):
-        footer = Footer(footer)  # raw bytes: one walk for this call
+    footer = _walked(footer)  # raw bytes: one walk for this call
     if column_names:
         if column_indices:
             raise InvalidSelectionError(
@@ -1016,7 +1136,7 @@ def splice_footer(
             )
         column_indices = resolve_column_names(footer, column_names)
 
-    fields, rg_elems = footer_spans(footer)
+    fields, rg_elems = footer.spans
     n_rg = len(rg_elems)
 
     if schema_only:
@@ -1031,19 +1151,9 @@ def splice_footer(
                 f"Row group {bad[0]} out of range (file has {n_rg})"
             )
 
-    keep_cols: set[int] | None = None
     keep_order: list[int] | None = None
     new_schema = None
     if column_indices is not None and len(column_indices) > 0:
-        schema_elems, leaf_paths = _schema(footer)
-        n_leaves = len(leaf_paths)
-        keep_order = [int(c) for c in column_indices]
-        bad = [c for c in keep_order if c < 0 or c >= n_leaves]
-        if bad:
-            raise InvalidSelectionError(
-                f"Column index {bad[0]} out of range (file has {n_leaves})"
-            )
-        keep_cols = set(keep_order)
         # Flat schema (root + leaves, the only shape the reference's indexer
         # supports): emit schema / chunks / column_orders in the CALLER'S
         # requested order, duplicates included — palletjack.cc:459-490 and
@@ -1051,15 +1161,26 @@ def splice_footer(
         # schemas are an extension over the reference; their leaf order is
         # dictated by the group tree, so the selection is normalized to
         # depth-first (= ascending leaf-index) order there.
+        keep_order = [int(c) for c in column_indices]
+        new_schema = _flat_schema_from_table(footer, keep_order)
+    if new_schema is None and keep_order is not None:
+        schema_elems, leaf_paths = _schema(footer)
+        n_leaves = len(leaf_paths)
+        bad = [c for c in keep_order if c < 0 or c >= n_leaves]
+        if bad:
+            raise InvalidSelectionError(
+                f"Column index {bad[0]} out of range (file has {n_leaves})"
+            )
         if len(schema_elems) == n_leaves + 1:
-            _, _, leaves = _schema_tree(schema_elems)
-            new_schema = _flat_schema_in_order(schema_elems, leaves, keep_order)
+            new_schema = _flat_schema_in_order(
+                schema_elems[0], [schema_elems[c + 1] for c in keep_order]
+            )
         else:
-            keep_order = sorted(keep_cols)
-            new_schema = _prune_schema(schema_elems, keep_cols)
+            keep_order = sorted(set(keep_order))
+            new_schema = _prune_schema(schema_elems, set(keep_order))
 
     # touch ONLY the kept row groups, and even those mostly by byte copy:
-    # the columns list of a kept group is spliced from chunk spans, the
+    # the columns list of a kept group is spliced from the chunk table, the
     # ordinal / num_rows / size fields are the only re-encoded values
     new_rgs: list[tuple[list, dict]] = []
     total_rows = 0
@@ -1071,20 +1192,13 @@ def splice_footer(
             total_rows += _unzigzag(zz)
         overrides: dict[int, tuple[int, object]] = {}
         if keep_order is not None:
-            chunk_spans = _chunk_spans(footer, r)
-            if max(keep_order) >= len(chunk_spans):
-                raise InvalidSelectionError(
-                    f"Column index {max(keep_order)} out of range for "
-                    f"row group {r} ({len(chunk_spans)} chunks)"
-                )
             payload = bytearray()
             _encode_list_header(payload, CT_STRUCT, len(keep_order))
             tbs = tcs = 0
             have_sizes = True
             for ci in keep_order:
-                cs, ce = chunk_spans[ci]
+                cs, ce, cc_fields = chunk_span(footer, r, ci)
                 payload += footer[cs:ce]
-                cc_fields, _ = _struct_field_spans(footer, cs)
                 md_span = _span_get(cc_fields, 3)
                 if md_span is None:
                     have_sizes = False
@@ -1127,18 +1241,26 @@ def splice_footer(
         elif fid == 7 and keep_order is not None:
             # requested order, mirroring the chunk/schema splice
             # (palletjack.cc:580-601); absent section (foreign writers,
-            # cc:288-299) never reaches here — the span list has no fid 7
-            (etype, orders), _ = _decode_value(footer, s, CT_LIST)
-            if max(keep_order) >= len(orders):
+            # cc:288-299) never reaches here — the span list has no fid 7.
+            # Kept elements are copied from their table ranges.
+            orders = footer.orders
+            if orders is None:  # a PJS1 sidecar: walk the list once
+                orders = array("I")
+                _list_starts(footer, s, orders)
+                footer.orders = orders
+            if max(keep_order) >= len(orders) - 1:
                 raise InvalidSelectionError(
                     f"Column index {max(keep_order)} out of range for "
-                    f"column_orders ({len(orders)} entries)"
+                    f"column_orders ({len(orders) - 1} entries)"
                 )
-            kept = [orders[i] for i in keep_order]
+            etype = footer[s] & 0xF
             _encode_field_header(out, fid, CT_LIST, prev)
-            _encode_list_header(out, etype, len(kept))
-            for o in kept:
-                _encode_value(out, etype, o)
+            _encode_list_header(out, etype, len(keep_order))
+            for i in keep_order:
+                start, end = orders[i], orders[i + 1]
+                _from_table(partial(_decode_value, ctype=etype), footer,
+                            start, end, f"column order {i}")
+                out += footer[start:end]
         elif ctype in (CT_TRUE, CT_FALSE):
             _encode_field_header(out, fid, ctype, prev)
         else:
@@ -1150,19 +1272,45 @@ def splice_footer(
 
 
 # --------------------------------------------------------------------------
-# PJS1 sidecar index: footer blob + span offset arrays
+# PJS2 sidecar index: footer blob + span offset arrays + offset tables
 # --------------------------------------------------------------------------
 #
 # The serialized analogue of the reference's PJ_2 buffer (palletjack.cc:33-80:
 # header + offset arrays + original Thrift blob).  Layout (little-endian):
-#   "PJS1" | u32 footer_len | footer | u32 n_top | n_top×(4×i64)
+#   "PJS2" | u32 footer_len | footer | u32 n_top | n_top×(4×i64)
 #        | u32 n_rg | per-rg: u32 n_fields | n_fields×(4×i64)
+#        | u32 n | n×u32 chunk table: per row group, its column-chunk
+#                  starts then the end of its columns list (n_rg equal
+#                  blocks; n = 0 when row groups differ in chunk count)
+#        | u32 n | n×u32 column-order element starts, then the list's end
+#        | u32 n | n×u32 schema element starts, then the list's end
+# Every offset is a byte position in the footer; a table of an absent
+# field is empty.  The older "PJS1" layout is the same without the three
+# tables and still reads: its chunk entries are filled per row group on
+# first use, its column orders on the first column-pruned splice, and its
+# schema takes the full decode.
 
-_PJS_MAGIC = b"PJS1"
+_PJS1_MAGIC = b"PJS1"
+_PJS2_MAGIC = b"PJS2"
+_CORRUPT = "Corrupt PJS1/PJS2 index"
 
 
-def _serialize_index(footer: bytes, fields: list, rg_elems: list) -> bytearray:
-    out = bytearray(_PJS_MAGIC)
+def _u32_table(out: bytearray, parts) -> None:
+    """Append ``u32 count | count×u32`` (little-endian) holding the
+    ``array("I")`` ``parts`` end to end."""
+    table = array("I")
+    for part in parts:
+        table.extend(part)
+    if sys.byteorder == "big":
+        table.byteswap()
+    out += struct.pack("<I", len(table))
+    out += table.tobytes()
+
+
+def _serialize_index(footer: bytes) -> bytearray:
+    footer = _walked(footer)
+    fields, rg_elems = footer.spans
+    out = bytearray(_PJS2_MAGIC)
     out += struct.pack("<I", len(footer))
     out += footer
     out += struct.pack("<I", len(fields))
@@ -1173,6 +1321,10 @@ def _serialize_index(footer: bytes, fields: list, rg_elems: list) -> bytearray:
         out += struct.pack("<I", len(rgf))
         for f in rgf:
             out += struct.pack("<4q", *f)
+    even = len({len(block) for block in footer.chunks}) == 1
+    _u32_table(out, footer.chunks if even else ())
+    _u32_table(out, [footer.orders])
+    _u32_table(out, [footer.elems])
     return out
 
 
@@ -1340,7 +1492,7 @@ def _decode_pj2(blob: bytes) -> Footer:
     arrays, the nul-separated leaf column names, and the ORIGINAL Thrift
     compact footer blob.  The blob is self-contained, so a
     reference-generated ``.index`` reads through the same span machinery
-    as our PJS1 format: extract the footer, walk it once, and every
+    as our PJS2 format: extract the footer, walk it once, and every
     ``read_metadata``/``read_schema`` selection works unchanged.
 
     Validation mirrors the reference's own header/count discipline
@@ -1407,70 +1559,79 @@ def _decode_pj2(blob: bytes) -> Footer:
 
 
 def _deserialize_index(blob: bytes) -> Footer:
-    if blob[:4] == _PJ2_MAGIC:
+    magic = blob[:4]
+    if magic == _PJ2_MAGIC:
         # reference-generated sidecar: extract the embedded footer; its
         # span walk happened during validation
         return _decode_pj2(blob)
-    if blob[:4] != _PJS_MAGIC:
+    if magic not in (_PJS1_MAGIC, _PJS2_MAGIC):
         raise InvalidSelectionError(
             "Not a palletjack_spark footer index (bad magic; expected "
-            "PJS1 or PJ_2)"
+            "PJS2, PJS1 or PJ_2)"
         )
-    # PJS1 container: decode-cap discipline (the reference's rule,
-    # palletjack.cc:82-83, already applied to the PJ_2 path; round-9
-    # deep fuzz found truncated/corrupted PJS1 blobs surfacing as raw
-    # struct.error instead of the typed rejection) — every unpack is
-    # bounds-checked, every count is capped by the bytes that could
+    # decode-cap discipline (the reference's rule, palletjack.cc:82-83,
+    # already applied to the PJ_2 path; round-9 deep fuzz found truncated
+    # or corrupted blobs surfacing as raw struct.error instead of the
+    # typed rejection): every count is capped by the bytes that could
     # hold it, and the parse must consume the blob exactly.
     pos = 4
+    view = memoryview(blob)
 
-    def _take(fmt: str, size: int, what: str):
+    def count(size: int, what: str) -> int:
+        """The u32 count at ``pos`` (which moves past it), capped by the
+        bytes left at ``size`` bytes an item."""
         nonlocal pos
-        if pos + size > len(blob):
+        if len(blob) - pos < 4:
             raise InvalidSelectionError(
-                f"Corrupt PJS1 index: truncated {what} at offset {pos} "
-                f"(need {size} bytes, have {len(blob) - pos})"
+                f"{_CORRUPT}: truncated {what} count at offset {pos}"
             )
-        out = struct.unpack_from(fmt, blob, pos)
-        pos += size
-        return out
+        (n,) = struct.unpack_from("<I", blob, pos)
+        pos += 4
+        if n * size > len(blob) - pos:
+            raise InvalidSelectionError(
+                f"{_CORRUPT}: {n} {what} declared, only "
+                f"{(len(blob) - pos) // size} could fit"
+            )
+        return n
 
-    (flen,) = _take("<I", 4, "footer length")
-    if flen > len(blob) - pos:
-        raise InvalidSelectionError(
-            f"Corrupt PJS1 index: declared footer length {flen} exceeds "
-            f"the {len(blob) - pos} bytes remaining"
-        )
-    footer = memoryview(blob)[pos : pos + flen]
-    pos += flen
-    (n_top,) = _take("<I", 4, "top-level field count")
-    if n_top > (len(blob) - pos) // 32:
-        raise InvalidSelectionError(
-            f"Corrupt PJS1 index: {n_top} top-level fields declared, "
-            f"only {(len(blob) - pos) // 32} could fit"
-        )
-    fields = [_take("<4q", 32, "top-level field span") for _ in range(n_top)]
-    (n_rg,) = _take("<I", 4, "row-group count")
-    if n_rg > (len(blob) - pos) // 4:
-        raise InvalidSelectionError(
-            f"Corrupt PJS1 index: {n_rg} row groups declared, "
-            f"only {(len(blob) - pos) // 4} could fit"
-        )
-    rg_elems = []
-    for _ in range(n_rg):
-        (nf,) = _take("<I", 4, "row-group span count")
-        if nf > (len(blob) - pos) // 32:
-            raise InvalidSelectionError(
-                f"Corrupt PJS1 index: {nf} row-group spans declared, "
-                f"only {(len(blob) - pos) // 32} could fit"
-            )
-        rg_elems.append(
-            [_take("<4q", 32, "row-group span") for _ in range(nf)]
+    def take(size: int, what: str) -> memoryview:
+        """A u32-counted run of ``size``-byte items."""
+        nonlocal pos
+        n = count(size, what)
+        pos += n * size
+        return view[pos - n * size : pos]
+
+    flat: list = []  # every stored span's (fid, ctype, start, end)
+
+    def spans(what: str) -> list:
+        run = take(32, what)
+        got = struct.unpack(f"<{len(run) // 8}q", run)
+        flat.extend(got)
+        return list(zip(*[iter(got)] * 4))
+
+    def table(what: str) -> array:
+        got = array("I")
+        got.frombytes(take(4, what))
+        if sys.byteorder == "big":
+            got.byteswap()
+        return got
+
+    footer = take(1, "footer bytes")
+    flen = len(footer)
+    fields = spans("top-level spans")
+    rg_elems = [
+        spans("row-group spans") for _ in range(count(4, "row groups"))
+    ]
+    n_rg = len(rg_elems)
+    if magic == _PJS2_MAGIC:
+        chunks, orders, elems = (
+            table("chunk offsets"),
+            table("column-order offsets"),
+            table("schema-element offsets"),
         )
     if pos != len(blob):
         raise InvalidSelectionError(
-            f"Corrupt PJS1 index: {len(blob) - pos} trailing bytes after "
-            "the span table"
+            f"{_CORRUPT}: {len(blob) - pos} trailing bytes after the tables"
         )
     # validate the span VALUES, not just the container (round-13 review:
     # a corrupt span previously flowed straight into the splice — a
@@ -1478,35 +1639,53 @@ def _deserialize_index(blob: bytes) -> Footer:
     # can assemble a parseable-but-WRONG footer the corrupt-index
     # wrapper never catches).  Every span must denote a real byte range
     # of the embedded footer with a sane field id and compact type.
-    for where, span_list in (
-        ("top-level", fields),
-        *(( "row-group", rgf) for rgf in rg_elems),
-    ):
-        for fid, ctype, start, end in span_list:
-            if not (
-                0 < fid < 1 << 31
-                and 0 <= ctype <= 15
-                and 0 <= start <= end <= flen
-            ):
-                raise InvalidSelectionError(
-                    f"Corrupt PJS1 index: {where} span (fid={fid}, "
-                    f"ctype={ctype}, start={start}, end={end}) does not "
-                    f"denote a byte range of the {flen}-byte footer"
-                )
-    # the stored spans spare splices the walk entirely
-    return Footer(footer, (fields, rg_elems))
+    v = np.array(flat, dtype=np.int64).reshape(-1, 4)
+    bad = np.flatnonzero(
+        (v[:, 0] <= 0) | (v[:, 0] >= 1 << 31) | (v[:, 1] < 0) | (v[:, 1] > 15)
+        | (v[:, 2] < 0) | (v[:, 2] > v[:, 3]) | (v[:, 3] > flen)
+    )
+    if len(bad):
+        fid, ctype, start, end = v[bad[0]].tolist()
+        where = "top-level" if bad[0] < len(fields) else "row-group"
+        raise InvalidSelectionError(
+            f"{_CORRUPT}: {where} span (fid={fid}, ctype={ctype}, "
+            f"start={start}, end={end}) does not denote a byte range of "
+            f"the {flen}-byte footer"
+        )
+    if magic == _PJS1_MAGIC:
+        # the stored spans spare splices the walk entirely
+        return Footer(footer, (fields, rg_elems), [None] * n_rg)
+    # the tables are checked whole here (strictly increasing, inside the
+    # footer); each entry a splice uses is checked again by its walk
+    for what, t in (("chunk", chunks), ("column-order", orders),
+                    ("schema-element", elems)):
+        a = np.frombuffer(t, dtype=np.uint32)
+        if len(a) and (a[-1] > flen or not (a[1:] > a[:-1]).all()):
+            raise InvalidSelectionError(
+                f"{_CORRUPT}: {what} table is not strictly increasing "
+                f"inside the {flen}-byte footer"
+            )
+    if not chunks:
+        blocks = [None] * n_rg  # ragged row groups: filled on first use
+    elif n_rg and len(chunks) % n_rg == 0:
+        k = len(chunks) // n_rg
+        blocks = _blocks(chunks, range(0, len(chunks) + 1, k))
+    else:
+        raise InvalidSelectionError(
+            f"{_CORRUPT}: {len(chunks)} chunk offsets for {n_rg} row groups"
+        )
+    return Footer(footer, (fields, rg_elems), blocks, orders, elems)
 
 
 def generate_metadata_index(
     parquet_path: str, index_file_path: str | None = None
 ) -> bytearray | None:
     """Reference-parity ``generate_metadata_index``
-    (palletjack_cython.pyx:13-25): walk the footer once, record every span,
-    and emit a self-contained index — returned as a ``bytearray`` when no
-    path is given, else written to ``index_file_path``."""
-    footer = read_footer_bytes(parquet_path)
-    fields, rg_elems = footer_spans(footer)
-    blob = _serialize_index(footer, fields, rg_elems)
+    (palletjack_cython.pyx:13-25): walk the footer once, record every span
+    and offset table, and emit a self-contained ``PJS2`` index — returned
+    as a ``bytearray`` when no path is given, else written to
+    ``index_file_path``."""
+    blob = _serialize_index(read_footer_bytes(parquet_path))
     if index_file_path is None:
         return blob
     with open(index_file_path, "wb") as f:
@@ -1569,9 +1748,9 @@ def read_metadata(
     the returned object plugs into ``pq.ParquetReader().open(path,
     metadata=...)`` / ``pq.ParquetFile(path, metadata=...)`` and the reader
     touches only the selected row groups × columns, renumbered 0..k-1.
-    Empty selections mean "everything".  Sources: a PJS1 index file
-    (``index_file_path``), an in-memory PJS1 blob (``index_data``) — both
-    from :func:`generate_metadata_index` — or, as an extension over the
+    Empty selections mean "everything".  Sources: a PJS2 (or older PJS1)
+    index file (``index_file_path``), an in-memory one (``index_data``) —
+    both from :func:`generate_metadata_index` — or, as an extension over the
     reference, the parquet file itself (``parquet_path``)."""
     footer = _footer_from_source(index_file_path, index_data, parquet_path)
     # None and () both mean "no pruning on this axis".  Accepting None is
@@ -1589,7 +1768,7 @@ def read_metadata(
     except (InvalidSelectionError, IndexFormatError):
         raise
     except Exception as e:
-        # Decode-cap discipline, splice layer (round-9 deep fuzz): a PJS1
+        # Decode-cap discipline, splice layer (round-9 deep fuzz): a sidecar
         # container can be structurally valid while its EMBEDDED footer
         # bytes are corrupt — the stored spans then point at garbage and
         # the varint walk / pyarrow thrift parse fails with an untyped
@@ -1616,4 +1795,12 @@ def read_schema(
         column_names=list(column_names or ()) or None,
         schema_only=True,
     )
-    return metadata_from_footer(pruned).schema.to_arrow_schema()
+    # the reader's schema, not FileMetaData.schema: that one leaves a
+    # FileMetaData <-> ParquetSchema reference cycle per call, holding the
+    # file's key-value metadata until a cyclic garbage collection runs
+    reader = pq.ParquetReader()
+    try:
+        reader.open(_footer_file(pruned))
+        return reader.schema_arrow
+    finally:
+        reader.close()

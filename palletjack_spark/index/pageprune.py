@@ -84,12 +84,12 @@ import struct
 from palletjack_spark.index.dictprune import _IDENTITY_LOGICAL
 from palletjack_spark.index.footer_splice import (
     FooterProber,
-    _chunk_spans,
     _decode_value,
     _list_elem_spans,
     _span_get,
     _struct_field_spans,
     chunk_fields,
+    chunk_span,
     int_field,
     read_footer_bytes,
 )
@@ -823,8 +823,7 @@ def add_page_index(path: str, columns: list[str] | None = None) -> int:
     # splice offsets into each enriched ColumnChunk (fields 4-7)
     edits = []
     for (rg_idx, col_idx), (ci_rel, ci_len, oi_rel, oi_len) in placed.items():
-        cc_start, cc_end = _chunk_spans(footer, rg_idx)[col_idx]
-        cc_fields = chunk_fields(footer, rg_idx, col_idx)[0]
+        cc_start, cc_end, cc_fields = chunk_span(footer, rg_idx, col_idx)
         new = bytearray()
         prev = 0
         emitted = False

@@ -459,7 +459,7 @@ def q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spliced-FileMetaData read (Q15) — the reference's literal downstream
     contract, driver-checked end-to-end: stage a deterministic multi-row-
     group copy of `documents` (sorted by doc_id, 100 rows per group),
-    `generate_metadata_index` → PJS1 sidecar, `read_metadata(row_groups=[1],
+    `generate_metadata_index` → PJS2 sidecar, `read_metadata(row_groups=[1],
     column_indices=...)` → genuine pruned pyarrow FileMetaData →
     `pq.ParquetReader().open(path, metadata=...)` reads ONLY row group 1
     (rows 101-200 in doc_id order).  Any splice bug — wrong spans, wrong

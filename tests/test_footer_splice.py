@@ -579,19 +579,48 @@ def test_pj2_decode_fuzz_corruption_never_crashes():
 
 
 def test_pjs1_and_pj2_read_identically(pq_file):
-    """Cross-format invariant: the same file's PJS1 and PJ_2 sidecars
+    """Cross-format invariant: the same file's PJS2 and PJ_2 sidecars
     must answer every selection with byte-identical spliced metadata —
-    the two formats are interchangeable containers for the same footer."""
-    pjs1 = bytes(generate_metadata_index(pq_file))
+    the formats are interchangeable containers for the same footer.  On
+    the committed golden file the old-format PJS1 sidecar (no offset
+    tables) joins them: every row-group permutation × ordered column
+    selection, and every schema-only read, splices the same bytes."""
+    pjs2 = bytes(generate_metadata_index(pq_file))
     pj2 = bytes(fs.generate_pj2_index(pq_file))
-    assert pjs1[:4] == b"PJS1" and pj2[:4] == b"PJ_2"
+    assert pjs2[:4] == b"PJS2" and pj2[:4] == b"PJ_2"
     for rgs, cols in [([], []), ([2, 0], [1, 3]), ([1], []), ([], [2])]:
-        a = read_metadata(index_data=pjs1, row_groups=rgs, column_indices=cols)
+        a = read_metadata(index_data=pjs2, row_groups=rgs, column_indices=cols)
         b = read_metadata(index_data=pj2, row_groups=rgs, column_indices=cols)
         assert a.num_rows == b.num_rows
         assert a.num_columns == b.num_columns
         assert a.schema.to_arrow_schema() == b.schema.to_arrow_schema()
         assert a.equals(b), (rgs, cols)
+
+    golden = os.path.join(os.path.dirname(__file__), "data", "golden.parquet")
+    with open(golden + ".index", "rb") as f:
+        pjs1 = f.read()
+    assert pjs1[:4] == b"PJS1"
+    footers = [
+        fs._deserialize_index(blob)
+        for blob in (pjs1, bytes(generate_metadata_index(golden)),
+                     bytes(fs.generate_pj2_index(golden)))
+    ]
+    md = pq.read_metadata(golden)
+    n_rg, n_cols = md.num_row_groups, md.num_columns
+    col_sels = [
+        list(c) for k in range(n_cols + 1)
+        for c in it.permutations(range(n_cols), k)
+    ]
+    for cols in col_sels:
+        got = {fs.splice_footer(f, column_indices=cols, schema_only=True)
+               for f in footers}
+        assert len(got) == 1, cols
+        for k in range(n_rg + 1):
+            for rgs in it.permutations(range(n_rg), k):
+                got = {fs.splice_footer(f, row_groups=list(rgs),
+                                        column_indices=cols)
+                       for f in footers}
+                assert len(got) == 1, (rgs, cols)
 
 
 def test_read_metadata_accepts_blob_positionally(pq_file):
@@ -700,6 +729,119 @@ def test_corrupt_span_values_rejected_typed(pq_file):
     ):
         with pytest.raises(InvalidSelectionError, match="Corrupt PJS1"):
             fs.read_metadata(index_data=patched(bad), row_groups=[0])
+
+
+def _wide_sidecar(tmp_path, n_cols: int) -> str:
+    path = str(tmp_path / f"wide{n_cols}.parquet")
+    m = np.random.default_rng(n_cols).random((8 * 5, n_cols), dtype=np.float32)
+    pq.write_table(pa.table({f"c{j}": m[:, j] for j in range(n_cols)}), path,
+                   row_group_size=5)
+    generate_metadata_index(path, path + ".pjs2")
+    return path + ".pjs2"
+
+
+def test_cold_row_group_read_is_o_selected(tmp_path, monkeypatch):
+    """The sidecar's offset tables make a read walk only what it emits: a
+    row group read for the first time, 3 columns of it, costs the same
+    walk and decode calls on a 128-column file as on a 16-column one, and
+    never walks a whole chunk list."""
+    idx = {n: _wide_sidecar(tmp_path, n) for n in (16, 128)}
+    cols = [1, 7, 12]
+    for path in idx.values():  # first read: the sidecar enters the memo
+        read_metadata(path, row_groups=[0], column_indices=cols)
+    counts = {}
+    for n, path in idx.items():
+        calls = dict.fromkeys(
+            ("_skip_struct_fast", "_list_elem_spans", "_decode_value"), 0
+        )
+        for name in calls:
+            real = getattr(fs, name)
+
+            def counted(*a, _name=name, _real=real, **kw):
+                calls[_name] += 1
+                return _real(*a, **kw)
+
+            monkeypatch.setattr(fs, name, counted)
+        md = read_metadata(path, row_groups=[5], column_indices=cols)
+        monkeypatch.undo()
+        assert md.num_rows == 5 and md.num_columns == 3
+        counts[n] = calls
+    assert counts[16] == counts[128], counts
+    assert counts[128]["_list_elem_spans"] == 0
+
+
+def _table_offsets(blob: bytes) -> dict:
+    """Byte offset of each PJS2 offset table's u32 count."""
+    import struct as _s
+
+    (flen,) = _s.unpack_from("<I", blob, 4)
+    pos = 8 + flen
+    (n_top,) = _s.unpack_from("<I", blob, pos)
+    pos += 4 + 32 * n_top
+    (n_rg,) = _s.unpack_from("<I", blob, pos)
+    pos += 4
+    for _ in range(n_rg):
+        (nf,) = _s.unpack_from("<I", blob, pos)
+        pos += 4 + 32 * nf
+    out = {}
+    for name in ("chunks", "orders", "elems"):
+        out[name] = pos
+        pos += 4 + 4 * _s.unpack_from("<I", blob, pos)[0]
+    assert pos == len(blob)
+    return out
+
+
+def test_corrupt_offset_tables_rejected_typed(pq_file):
+    """A corrupt chunk, column-order or schema-element offset raises the
+    typed error; it never yields metadata, least of all a footer that
+    parses but is wrong."""
+    import struct as _s
+
+    blob = bytes(generate_metadata_index(pq_file))
+    at = _table_offsets(blob)
+    (flen,) = _s.unpack_from("<I", blob, 4)
+    k = N_COLS + 1  # chunk entries per row group
+    rg, col = 2, 1  # the damaged chunk
+    chunk = at["chunks"] + 4 + 4 * (rg * k + col)
+    elem = at["elems"] + 4 + 4 * (col + 1)
+
+    def u32(b, off):
+        return _s.unpack_from("<I", b, off)[0]
+
+    def patched(*edits):
+        b = bytearray(blob)
+        for off, value in edits:
+            _s.pack_into("<I", b, off, value)
+        return bytes(b)
+
+    cases = {
+        "chunk start onto its neighbour's": patched(
+            (chunk, u32(blob, chunk + 4))
+        ),
+        "two entries swapped": patched((chunk, u32(blob, chunk + 4)),
+                                       (chunk + 4, u32(blob, chunk))),
+        "schema element onto the next": patched((elem, u32(blob, elem + 4))),
+        "offset past the footer": patched((chunk, flen + 9)),
+        "truncated inside a table": blob[: at["orders"] + 6],
+    }
+    for case, bad in cases.items():  # rejected when the sidecar loads
+        for rgs, cols in (([rg], [col]), ([], [col]), ([rg], [])):
+            with pytest.raises(InvalidSelectionError):
+                read_metadata(index_data=bad, row_groups=rgs,
+                              column_indices=cols)
+                pytest.fail(f"{case}: {rgs} x {cols} returned metadata")
+    # a start still in order but off by one byte passes the load checks;
+    # the splice's walk of the chunk catches it, and a read that copies
+    # the row group whole never uses the entry
+    late = patched((chunk, u32(blob, chunk) + 1))
+    for rgs in ([rg], []):
+        with pytest.raises(InvalidSelectionError):
+            read_metadata(index_data=late, row_groups=rgs,
+                          column_indices=[col])
+            pytest.fail(f"one byte late: {rgs} x [{col}] returned metadata")
+    assert read_metadata(index_data=late, row_groups=[rg]).equals(
+        read_metadata(index_data=blob, row_groups=[rg])
+    )
 
 
 def test_index_file_read_does_not_poison_parquet_footer_cache(pq_file, tmp_path):

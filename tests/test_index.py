@@ -671,19 +671,19 @@ _GOLDEN_DIR = os.path.join(os.path.dirname(__file__), "data")
 
 
 def test_golden_sidecar_bytes_stable():
-    """Reference golden master (test_palletjack.py:210-248): the PJS1 index
+    """Reference golden master (test_palletjack.py:210-248): the PJS2 index
     generated for the committed fixture must be byte-identical to the
     committed artifact — pins the sidecar format across refactors."""
     from palletjack_spark.index.footer_splice import generate_metadata_index
 
     golden_pq = os.path.join(_GOLDEN_DIR, "golden.parquet")
-    golden_idx = os.path.join(_GOLDEN_DIR, "golden.parquet.index")
+    golden_idx = os.path.join(_GOLDEN_DIR, "golden.parquet.pjs2")
     with open(golden_idx, "rb") as f:
         committed = f.read()
     regenerated = generate_metadata_index(golden_pq)
     assert bytes(regenerated) == committed, (
-        "PJS1 sidecar bytes changed — if intentional, regenerate "
-        "tests/data/golden.parquet.index and document the format bump"
+        "PJS2 sidecar bytes changed — if intentional, regenerate "
+        "tests/data/golden.parquet.pjs2 and document the format bump"
     )
 
 
