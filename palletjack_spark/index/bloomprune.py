@@ -53,20 +53,25 @@ bitset.
 
 from __future__ import annotations
 
+import os
 import struct
 import sys
 from array import array
 
+from palletjack_spark.errors import InvalidSelectionError
 from palletjack_spark.index.dictprune import _IDENTITY_LOGICAL, _need
 from palletjack_spark.index.footer_splice import (
+    CT_I32,
+    CT_I64,
+    CT_STRUCT,
     FooterProber,
     _decode_value,
-    _encode_field_header,
+    _encode_struct,
+    _enrich_dataset,
+    _footer_surgery,
     _span_get,
     _struct_field_spans,
-    _write_zigzag,
     chunk_fields,
-    footer_spans,
     int_field,
     read_footer_bytes,
 )
@@ -474,33 +479,25 @@ def _bitset_bytes(ndv: int, fpp: float) -> int:
 
 
 def _bloom_blob(values_hashes, nbytes: int) -> bytes:
-    """Header + bitset for one chunk's value-hash iterable."""
+    """BloomFilterHeader + bitset for one chunk's value-hash iterable."""
     words = [0] * (nbytes >> 2)
     for h in values_hashes:
         _insert(words, h)
     header = bytearray()
-    # BloomFilterHeader {1: numBytes, 2: {1: BLOCK}, 3: {1: XXHASH},
-    #                    4: {1: UNCOMPRESSED}} — all compact thrift
-    _encode_field_header(header, 1, 5, 0)  # CT_I32
-    _write_zigzag(header, nbytes)
-    for fid in (2, 3, 4):
-        _encode_field_header(header, fid, 12, fid - 1)  # CT_STRUCT
-        _encode_field_header(header, 1, 12, 0)
-        header.append(0)  # empty member struct STOP
-        header.append(0)  # union STOP
-    # trailing struct STOP emitted by caller? no — header IS the struct
-    header.append(0)
+    # {1: numBytes, 2: {1: BLOCK}, 3: {1: XXHASH}, 4: {1: UNCOMPRESSED}}
+    union = [(1, CT_STRUCT, [])]
+    _encode_struct(header, [(1, CT_I32, nbytes)] + [
+        (fid, CT_STRUCT, union) for fid in (2, 3, 4)
+    ])
     return bytes(header) + struct.pack(f"<{nbytes >> 2}I", *words)
 
 
-def _chunk_hashes(path: str, rg_idx: int, col_name: str, physical_type: str):
-    """xxh64 of every distinct value in one (row group, column), via
-    pyarrow — build-time enrichment reads the column once, like any
-    index build."""
-    import pyarrow.parquet as pq
-
+def _chunk_hashes(pf, rg_idx: int, col_name: str, physical_type: str):
+    """xxh64 of every distinct value in one (row group, column) of the
+    open ``pq.ParquetFile`` ``pf`` — build-time enrichment reads the
+    column once, like any index build."""
     t = (physical_type or "").upper()
-    tbl = pq.ParquetFile(path).read_row_group(rg_idx, columns=[col_name])
+    tbl = pf.read_row_group(rg_idx, columns=[col_name])
     col = tbl.column(0)
     out = set()
     for v in col.to_pylist():
@@ -528,157 +525,98 @@ def add_bloom_filters(
 ) -> int:
     """Enrich an existing parquet file with standard split-block bloom
     filters for ``columns``, in place: bitsets append after the data
-    (where writers put them), and the footer is rebuilt with
-    ``bloom_filter_offset``/``length`` spliced into each enriched
-    ColumnMetaData — the same compact-thrift memcpy splice as the PJ_2
-    footer surgery.  Files stay fully standard; parquet-mr/Spark read
-    (and bloom-filter) them natively.  Columns that already carry a
-    filter are skipped.  Returns the number of (row group, column)
-    chunks enriched.
+    (where writers put them), and ``bloom_filter_offset``/``length``
+    (ColumnMetaData fields 14/15) are set in each enriched chunk by
+    ``footer_splice._footer_surgery``, the compact-thrift memcpy splice
+    :func:`pageprune.add_page_index` shares.  Files stay fully standard;
+    parquet-mr/Spark read (and bloom-filter) them natively.  Columns
+    that already carry a filter are skipped.  Returns the number of
+    (row group, column) chunks enriched.
 
     Exists because no in-container writer can produce bloom filters
     (pyarrow 16 / DuckDB 1.0 predate write support) — and as the
     production answer for data ALREADY at rest: a 100 TB catalog gets
     point-lookup pruning without rewriting a single data page."""
-    import os
-
-    from palletjack_spark.errors import InvalidSelectionError as _ISE
-
-    footer = read_footer_bytes(path)
-    file_size = os.path.getsize(path)
-    footer_start = file_size - 8 - len(footer)
-    _fields, rg_elems = footer_spans(footer)
-
-    # column name -> leaf ordinal, physical type (from pyarrow: names in
-    # footer schema order == chunk order)
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
-    md = pq.ParquetFile(path).metadata
-    if md.num_row_groups == 0:
-        return 0  # an empty part file has nothing to enrich
-    names = [
-        md.row_group(0).column(j).path_in_schema
-        for j in range(md.num_columns)
-    ]
-    ptypes = [
-        md.row_group(0).column(j).physical_type
-        for j in range(md.num_columns)
-    ]
-    import pyarrow as pa
+    footer = read_footer_bytes(path)
+    footer_start = os.path.getsize(path) - 8 - len(footer)
+    # closed before the surgery replaces the file (os.replace refuses an
+    # open file on Windows)
+    with pq.ParquetFile(path) as pf:
+        md = pf.metadata
+        if md.num_row_groups == 0:
+            return 0  # an empty part file has nothing to enrich
+        # leaf names and physical types in footer schema order == chunk
+        # order
+        chunks = [md.row_group(0).column(j) for j in range(md.num_columns)]
+        names = [c.path_in_schema for c in chunks]
+        schema = pf.schema_arrow
+        #: arrow types whose plain encoding IS the raw value space the
+        #: probe hashes (the writer-side mirror of the probe's
+        #: _IDENTITY_LOGICAL gate — round-13 review: DATE/TIMESTAMP/
+        #: DECIMAL/unsigned columns previously crashed mid-enrichment
+        #: with a raw struct.error instead of a typed rejection)
+        writer_ok = (
+            pa.types.is_int32,
+            pa.types.is_int64,
+            pa.types.is_float32,
+            pa.types.is_float64,
+            pa.types.is_string,
+            pa.types.is_large_string,
+            pa.types.is_binary,
+            pa.types.is_large_binary,
+        )
+        targets = []
+        for c in columns:
+            if c not in names:
+                raise InvalidSelectionError(
+                    f"Unknown column for bloom filter: {c!r}"
+                )
+            try:
+                ftype = schema.field(c).type
+            except KeyError:
+                # a NESTED leaf ("s.x"): present in the chunk path names
+                # but not an arrow top-level field — typed rejection, not
+                # a raw KeyError mid-enrichment (round-16 sweep)
+                raise InvalidSelectionError(
+                    f"bloom filters unsupported for nested column {c!r}"
+                ) from None
+            if not any(ok(ftype) for ok in writer_ok):
+                raise InvalidSelectionError(
+                    f"bloom filters unsupported for column {c!r} of type "
+                    f"{ftype} (non-identity logical types — date/timestamp/"
+                    "decimal/unsigned — have no raw-value bloom encoding)"
+                )
+            targets.append((names.index(c), c))
 
-    pf_schema = pq.ParquetFile(path).schema_arrow
-    #: arrow types whose plain encoding IS the raw value space the
-    #: probe hashes (the writer-side mirror of the probe's
-    #: _IDENTITY_LOGICAL gate — round-13 review: DATE/TIMESTAMP/DECIMAL/
-    #: unsigned columns previously crashed mid-enrichment with a raw
-    #: struct.error instead of a typed rejection)
-    _writer_ok = (
-        pa.types.is_int32,
-        pa.types.is_int64,
-        pa.types.is_float32,
-        pa.types.is_float64,
-        pa.types.is_string,
-        pa.types.is_large_string,
-        pa.types.is_binary,
-        pa.types.is_large_binary,
-    )
-    targets = []
-    for c in columns:
-        if c not in names:
-            raise _ISE(f"Unknown column for bloom filter: {c!r}")
-        try:
-            ftype = pf_schema.field(c).type
-        except KeyError:
-            # a NESTED leaf ("s.x"): present in the chunk path names but
-            # not an arrow top-level field — typed rejection, not a raw
-            # KeyError mid-enrichment (round-16 sweep)
-            raise _ISE(
-                f"bloom filters unsupported for nested column {c!r}"
-            ) from None
-        if not any(ok(ftype) for ok in _writer_ok):
-            raise _ISE(
-                f"bloom filters unsupported for column {c!r} of type "
-                f"{ftype} (non-identity logical types — date/timestamp/"
-                "decimal/unsigned — have no raw-value bloom encoding)"
-            )
-        targets.append((names.index(c), c))
-
-    # build blobs; record (rg, col) -> (offset-in-appendix, length)
-    appendix = bytearray()
-    placed: dict[tuple[int, int], tuple[int, int]] = {}
-    for rg_idx in range(md.num_row_groups):
-        for col_idx, col_name in targets:
-            if bloom_offsets(footer, rg_idx, col_idx) is not None:
-                continue  # already enriched
-            hashes = _chunk_hashes(path, rg_idx, col_name, ptypes[col_idx])
-            blob = _bloom_blob(hashes, _bitset_bytes(len(hashes), fpp))
-            placed[(rg_idx, col_idx)] = (len(appendix), len(blob))
-            appendix += blob
-    if not placed:
-        return 0
-
-    # splice offsets into each enriched ColumnMetaData: re-emit the
-    # struct's fields in order with 14/15 inserted (raw byte copy for
-    # everything else — compact-thrift values are position-independent)
-    edits = []  # (start, end, replacement) over the footer bytes
-    for (rg_idx, col_idx), (rel, ln) in placed.items():
-        got = chunk_fields(footer, rg_idx, col_idx)
-        if got is None or got[1] is None:
-            raise _ISE("unparseable ColumnMetaData during bloom splice")
-        _cc, md_fields, start, end = got
-        new = bytearray()
-        prev = 0
-        emitted = False
-
-        def _emit_bloom(out, prev_fid):
-            _encode_field_header(out, 14, 6, prev_fid)  # CT_I64
-            _write_zigzag(out, footer_start + rel)
-            _encode_field_header(out, 15, 5, 14)  # CT_I32
-            _write_zigzag(out, ln)
-            return 15
-
-        for fid, ctype, s, e in md_fields:
-            if fid in (14, 15):
-                continue  # replaced below (shouldn't exist: skipped above)
-            if fid > 15 and not emitted:
-                prev = _emit_bloom(new, prev)
-                emitted = True
-            _encode_field_header(new, fid, ctype, prev)
-            if ctype not in (1, 2):  # bool fields carry value in header
-                new += footer[s:e]
-            prev = fid
-        if not emitted:
-            prev = _emit_bloom(new, prev)
-        new.append(0)  # struct STOP
-        edits.append((start, end, bytes(new)))
-
-    edits.sort()
-    out_footer = bytearray()
-    pos = 0
-    for s, e, rep in edits:
-        out_footer += footer[pos:s]
-        out_footer += rep
-        pos = e
-    out_footer += footer[pos:]
-
-    # rewrite tail: data stays untouched; appendix lands where the old
-    # footer began (exactly where bloom offsets point), then the new
-    # footer + length + magic — via the crash-atomic temp-copy + rename
-    # (safe under task retries / speculative re-runs, round-12 ADVICE)
-    from palletjack_spark.index.footer_splice import atomic_tail_rewrite
-
-    atomic_tail_rewrite(
-        path,
-        footer_start,
-        bytes(appendix)
-        + bytes(out_footer)
-        + struct.pack("<I", len(out_footer))
-        + b"PAR1",
-    )
-    return len(placed)
-
-
-from palletjack_spark.errors import InvalidSelectionError  # noqa: E402
+        # one blob per chunk lacking a filter, appended in (rg, col)
+        # order; its ColumnMetaData gets fields 14/15 pointing at it
+        appendix = bytearray()
+        edits = []
+        for rg_idx in range(md.num_row_groups):
+            for col_idx, col_name in targets:
+                if bloom_offsets(footer, rg_idx, col_idx) is not None:
+                    continue  # already enriched
+                got = chunk_fields(footer, rg_idx, col_idx)
+                if got is None or got[1] is None:
+                    raise InvalidSelectionError(
+                        "unparseable ColumnMetaData during bloom splice"
+                    )
+                hashes = _chunk_hashes(
+                    pf, rg_idx, col_name, chunks[col_idx].physical_type
+                )
+                blob = _bloom_blob(hashes, _bitset_bytes(len(hashes), fpp))
+                _cc, md_fields, start, end = got
+                edits.append((start, end, md_fields, {
+                    14: (CT_I64, footer_start + len(appendix)),
+                    15: (CT_I32, len(blob)),
+                }))
+                appendix += blob
+    if edits:
+        _footer_surgery(path, footer_start, footer, appendix, edits)
+    return len(edits)
 
 
 def add_bloom_filters_dataset(
@@ -688,18 +626,9 @@ def add_bloom_filters_dataset(
     the file list to executors and let each enrich its files in place —
     the 100 TB story for data at rest: every file gains point-lookup
     pruning without a single data page moving over the network or being
-    rewritten.  (A rare legitimate RDD use: per-file imperative footer
-    surgery, no dataframe semantics to express.)  Returns the total
-    number of (row group, column) chunks enriched."""
-    from palletjack_spark.sources.arrow_scan import expand_paths
-
-    files = expand_paths(paths)
-    if not files:
-        return 0
-    sc = spark.sparkContext
+    rewritten.  Returns the total number of (row group, column) chunks
+    enriched."""
     cols = list(columns)
-    return (
-        sc.parallelize(files, min(len(files), sc.defaultParallelism))
-        .map(lambda p: add_bloom_filters(p, cols, fpp))
-        .sum()
+    return _enrich_dataset(
+        spark, paths, lambda p: add_bloom_filters(p, cols, fpp)
     )

@@ -34,7 +34,13 @@ Thrift compact-protocol wire spec:
 - the result is round-tripped through ``pq.read_metadata`` on an in-memory
   "PAR1 + footer + len + PAR1" buffer, yielding a real
   ``pyarrow.parquet.FileMetaData`` that ``pq.ParquetReader().open(path,
-  metadata=...)`` accepts.
+  metadata=...)`` accepts;
+- the enrichment writers (``bloomprune.add_bloom_filters``,
+  ``pageprune.add_page_index``) rewrite a file's footer through one
+  function, ``_footer_surgery``: their blobs append where the footer
+  began, the structs they edit are re-emitted by the same ``_copy_struct``
+  the splice uses, with the named fields set or inserted, and the tail is
+  replaced crash-atomically (``atomic_tail_rewrite``).
 
 Row groups are renumbered 0..k-1 in the pruned footer, matching the
 reference's semantics (``test_palletjack.py:87`` reads pruned metadata with
@@ -326,12 +332,13 @@ def _read_list_header(buf: bytes, pos: int) -> tuple[int, int, int]:
 
 
 def _struct_field_spans(
-    buf: bytes, pos: int, lists: dict | None = None
+    buf: bytes, pos: int, walks: dict | None = None
 ) -> tuple[list[tuple[int, int, int, int]], int]:
     """Spans of a struct's fields: [(fid, ctype, value_start, value_end)].
     For bool fields value_start == value_end (the value is in the header).
-    ``lists`` maps a field id to ``walk(buf, pos) -> end``, which walks
-    the first list-typed field with that id in place of the skip."""
+    ``walks`` maps a (field id, compact type) pair to ``walk(buf, pos) ->
+    end``, which walks the first field of that id and type in place of
+    the skip."""
     fields = []
     fid = 0
     while True:
@@ -347,8 +354,8 @@ def _struct_field_spans(
         else:
             fid += delta
         start = pos
-        if lists and ctype == CT_LIST and fid in lists:
-            pos = lists.pop(fid)(buf, pos)
+        if walks and (fid, ctype) in walks:
+            pos = walks.pop((fid, ctype))(buf, pos)
         elif ctype not in (CT_TRUE, CT_FALSE):
             pos = _skip_value(buf, pos, ctype)
         fields.append((fid, ctype, start, pos))
@@ -457,15 +464,15 @@ def _walked(footer: bytes) -> Footer:
         def row_group(buf, pos):
             at.append(len(chunks))
             rg_fields, pos = _struct_field_spans(
-                buf, pos, {1: lambda b, p: _list_starts(b, p, chunks)}
+                buf, pos, {(1, CT_LIST): lambda b, p: _list_starts(b, p, chunks)}
             )
             rg_elems.append(rg_fields)
             return pos
 
         fields, _ = _struct_field_spans(footer, 0, {
-            2: lambda b, p: _list_starts(b, p, elems),
-            4: lambda b, p: _list_starts(b, p, array("I"), row_group),
-            7: lambda b, p: _list_starts(b, p, orders),
+            (2, CT_LIST): lambda b, p: _list_starts(b, p, elems),
+            (4, CT_LIST): lambda b, p: _list_starts(b, p, array("I"), row_group),
+            (7, CT_LIST): lambda b, p: _list_starts(b, p, orders),
         })
         if _span_get(fields, 4) is None:
             raise InvalidSelectionError("footer has no row_groups field")
@@ -515,10 +522,12 @@ def _from_table(walk, buf: bytes, start: int, end: int, what: str):
 
 
 def chunk_span(footer: bytes, rg_idx: int, col_idx: int):
-    """(start, end, field spans) of one ColumnChunk struct, its range from
-    the footer's chunk table and its fields walked from there.  A footer
-    that stored no table walks the row group's ``columns`` list on its
-    first use."""
+    """(start, end, field spans, meta) of one ColumnChunk struct, its range
+    from the footer's chunk table and its fields walked from there, with
+    its ``meta_data`` (field 3) walked in place: ``meta`` is that
+    ColumnMetaData's (field spans, start, end), or None when the chunk
+    carries none.  A footer that stored no table walks the row group's
+    ``columns`` list on its first use."""
     footer = _walked(footer)
     rg_elems = footer.spans[1]
     if not 0 <= rg_idx < len(rg_elems):
@@ -539,9 +548,17 @@ def chunk_span(footer: bytes, rg_idx: int, col_idx: int):
             f"({len(block) - 1} chunks)"
         )
     start, end = block[col_idx], block[col_idx + 1]
+    meta = []
+
+    def meta_data(buf, pos):
+        md_fields, md_end = _struct_field_spans(buf, pos)
+        meta.append((md_fields, pos, md_end))
+        return md_end
+
+    walk = partial(_struct_field_spans, walks={(3, CT_STRUCT): meta_data})
     what = f"column chunk {col_idx} of row group {rg_idx}"
-    fields = _from_table(_struct_field_spans, footer, start, end, what)
-    return start, end, fields
+    fields = _from_table(walk, footer, start, end, what)
+    return start, end, fields, meta[0] if meta else None
 
 
 def chunk_fields(footer: bytes, rg_idx: int, col_idx: int):
@@ -557,14 +574,9 @@ def chunk_fields(footer: bytes, rg_idx: int, col_idx: int):
         return None
     key = (rg_idx, col_idx)
     if key not in memo:
-        got = None
         try:
-            cc = chunk_span(footer, rg_idx, col_idx)[2]
-            md = _span_get(cc, 3)  # ColumnChunk.meta_data
-            got = (cc, None, None, None)
-            if md is not None:
-                md_fields, end = _struct_field_spans(footer, md[1])
-                got = (cc, md_fields, md[1], end)
+            _start, _end, cc, meta = chunk_span(footer, rg_idx, col_idx)
+            got = (cc, *(meta or (None, None, None)))
         except Exception:  # ordinals out of range, or a layout surprise
             got = None
         memo[key] = got
@@ -743,15 +755,24 @@ def _encode_list_header(out: bytearray, etype: int, n: int) -> None:
         _write_varint(out, n)
 
 
+def _encode_field(out: bytearray, fid: int, ctype: int, v, prev: int) -> None:
+    """One struct field: its header, then its value (a `_Raw` payload is
+    copied as is)."""
+    if ctype in (CT_TRUE, CT_FALSE):
+        # bool FIELD: the value lives in the header's type nibble
+        _encode_field_header(out, fid, CT_TRUE if v else CT_FALSE, prev)
+        return
+    _encode_field_header(out, fid, ctype, prev)
+    if isinstance(v, _Raw):
+        out += v.data
+    else:
+        _encode_value(out, ctype, v)
+
+
 def _encode_struct(out: bytearray, fields: list[tuple[int, int, object]]) -> None:
     prev = 0
     for fid, ctype, v in fields:
-        if ctype in (CT_TRUE, CT_FALSE):
-            # bool FIELD: the value lives in the header's type nibble
-            _encode_field_header(out, fid, CT_TRUE if v else CT_FALSE, prev)
-        else:
-            _encode_field_header(out, fid, ctype, prev)
-            _encode_value(out, ctype, v)
+        _encode_field(out, fid, ctype, v, prev)
         prev = fid
     out.append(CT_STOP)
 
@@ -784,23 +805,25 @@ def _copy_struct(
     overrides: dict[int, tuple[int, object]],
 ) -> None:
     """Re-emit a struct from its field spans: raw byte copy for untouched
-    fields, re-encode only the overridden ones.  This is the memcpy splice
-    at the heart of the reference (palletjack.cc:369-616)."""
+    fields, re-encode only the overridden ones in place, and insert an
+    override the struct lacks before its first field of a larger id.
+    This is the memcpy splice at the heart of the reference
+    (palletjack.cc:369-616)."""
+    absent = sorted(set(overrides).difference(f[0] for f in fields))
     prev = 0
     for fid, ctype, s, e in fields:
-        ov = overrides.get(fid)
-        if ov is not None:
-            octype, oval = ov
-            _encode_field_header(out, fid, octype, prev)
-            if isinstance(oval, _Raw):
-                out += oval.data
-            else:
-                _encode_value(out, octype, oval)
-        elif ctype in (CT_TRUE, CT_FALSE):
-            _encode_field_header(out, fid, ctype, prev)
+        while absent and absent[0] < fid:
+            _encode_field(out, absent[0], *overrides[absent[0]], prev)
+            prev = absent.pop(0)
+        if fid in overrides:
+            _encode_field(out, fid, *overrides[fid], prev)
         else:
             _encode_field_header(out, fid, ctype, prev)
-            out += buf[s:e]
+            if ctype not in (CT_TRUE, CT_FALSE):  # a bool is its header
+                out += buf[s:e]
+        prev = fid
+    for fid in absent:
+        _encode_field(out, fid, *overrides[fid], prev)
         prev = fid
     out.append(CT_STOP)
 
@@ -876,6 +899,46 @@ def atomic_tail_rewrite(path: str, footer_start: int, tail: bytes) -> None:
         except OSError:
             pass
         raise
+
+
+def _footer_surgery(
+    path: str, footer_start: int, footer: bytes, appendix: bytes, edits
+) -> None:
+    """The footer surgery of :func:`bloomprune.add_bloom_filters` and
+    :func:`pageprune.add_page_index`: replace the tail of the parquet
+    file at ``path`` from ``footer_start`` (where ``footer`` begins, so a
+    blob's offset is ``footer_start`` plus its place in ``appendix``)
+    with ``appendix``, then ``footer`` with each edit ``(start, end,
+    field spans, overrides)`` applied by :func:`_copy_struct` to the
+    struct at ``footer[start:end]``, then the footer's length and magic,
+    crash-atomically (:func:`atomic_tail_rewrite`)."""
+    tail = bytearray(appendix)
+    pos = 0
+    for start, end, fields, overrides in sorted(edits, key=lambda e: e[0]):
+        tail += footer[pos:start]
+        _copy_struct(tail, footer, fields, overrides)
+        pos = end
+    tail += footer[pos:]
+    tail += struct.pack("<I", len(tail) - len(appendix))
+    tail += _MAGIC
+    atomic_tail_rewrite(path, footer_start, bytes(tail))
+
+
+def _enrich_dataset(spark, paths, enrich) -> int:
+    """The sum of ``enrich(file)`` over every file under ``paths``, each
+    file's surgery run on an executor: a rare legitimate RDD use, per-file
+    imperative work with no dataframe semantics to express."""
+    from palletjack_spark.sources.arrow_scan import expand_paths
+
+    files = expand_paths(paths)
+    if not files:
+        return 0
+    sc = spark.sparkContext
+    return (
+        sc.parallelize(files, min(len(files), sc.defaultParallelism))
+        .map(enrich)
+        .sum()
+    )
 
 
 def _read_parquet_footer(path: str) -> Footer:
@@ -1194,30 +1257,23 @@ def splice_footer(
         if keep_order is not None:
             payload = bytearray()
             _encode_list_header(payload, CT_STRUCT, len(keep_order))
-            tbs = tcs = 0
+            sizes = [0, 0]  # total_byte_size, total_compressed_size
             have_sizes = True
             for ci in keep_order:
-                cs, ce, cc_fields = chunk_span(footer, r, ci)
+                cs, ce, _cc, meta = chunk_span(footer, r, ci)
                 payload += footer[cs:ce]
-                md_span = _span_get(cc_fields, 3)
-                if md_span is None:
+                if meta is None:
                     have_sizes = False
                     continue
-                md_fields, _ = _struct_field_spans(footer, md_span[1])
-                for mfid, acc in ((6, "tbs"), (7, "tcs")):
-                    sp = _span_get(md_fields, mfid)
-                    if sp is None:
-                        continue
-                    zz, _ = _read_varint(footer, sp[1])
-                    if mfid == 6:
-                        tbs += _unzigzag(zz)
-                    else:
-                        tcs += _unzigzag(zz)
+                for i, mfid in enumerate((6, 7)):  # ColumnMetaData sizes
+                    sp = _span_get(meta[0], mfid)
+                    if sp is not None:
+                        sizes[i] += _unzigzag(_read_varint(footer, sp[1])[0])
             overrides[1] = (CT_LIST, _Raw(bytes(payload)))
             if have_sizes:
-                overrides[2] = (CT_I64, tbs)
+                overrides[2] = (CT_I64, sizes[0])
                 if _span_get(rgf, 6) is not None:
-                    overrides[6] = (CT_I64, tcs)
+                    overrides[6] = (CT_I64, sizes[1])
         if _span_get(rgf, 7) is not None:
             overrides[7] = (CT_I16, new_ord)
         new_rgs.append((rgf, overrides))

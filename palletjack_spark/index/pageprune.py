@@ -79,12 +79,23 @@ page index.
 from __future__ import annotations
 
 import math
+import os
 import struct
 
+from palletjack_spark.errors import InvalidSelectionError
 from palletjack_spark.index.dictprune import _IDENTITY_LOGICAL
 from palletjack_spark.index.footer_splice import (
+    CT_BINARY,
+    CT_I32,
+    CT_I64,
+    CT_LIST,
+    CT_STRUCT,
+    CT_TRUE,
     FooterProber,
     _decode_value,
+    _encode_struct,
+    _enrich_dataset,
+    _footer_surgery,
     _list_elem_spans,
     _span_get,
     _struct_field_spans,
@@ -552,6 +563,12 @@ def _row_lookup(rg_row: dict):
 _TRUNCATE = 64
 
 
+#: PageHeader.type -> (its data page header's PageHeader field, that
+#: struct's name, its row-count field): DATA_PAGE's num_values, then
+#: DATA_PAGE_V2's num_rows
+_DATA_PAGES = {0: (5, "DataPageHeader", 1), 3: (8, "DataPageHeaderV2", 3)}
+
+
 def _walk_data_pages(path: str, col_meta: dict):
     """[(absolute page offset, total page size incl. header, row count)]
     for every DATA page of one column chunk, from the page headers alone
@@ -559,8 +576,6 @@ def _walk_data_pages(path: str, col_meta: dict):
     non-nested columns v1 ``num_values`` IS the row count; v2 carries
     ``num_rows`` explicitly.  Raises on any surprise — enrichment is
     explicit (unlike the probe paths, a failed WRITE must be loud)."""
-    from palletjack_spark.errors import InvalidSelectionError as _ISE
-
     start = col_meta.get("dictionary_page_offset")
     if start is None:
         start = col_meta["data_page_offset"]
@@ -569,45 +584,36 @@ def _walk_data_pages(path: str, col_meta: dict):
         fh.seek(start)
         raw = fh.read(total)
     if len(raw) != total:
-        raise _ISE("column chunk truncated during page walk")
+        raise InvalidSelectionError("column chunk truncated during page walk")
     pages = []
     pos = 0
     while pos < len(raw):
         header, payload = _struct_field_spans(raw, pos)
-        ptype_span = _span_get(header, 1)
-        size_span = _span_get(header, 3)
-        if ptype_span is None or size_span is None:
-            raise _ISE("unparseable page header during page walk")
-        page_type = _decode_value(raw, ptype_span[1], ptype_span[0])[0]
-        compressed = _decode_value(raw, size_span[1], size_span[0])[0]
-        if not isinstance(compressed, int) or compressed < 0:
+        if _span_get(header, 1) is None or _span_get(header, 3) is None:
+            raise InvalidSelectionError(
+                "unparseable page header during page walk"
+            )
+        page_type = int_field(raw, header, 1)
+        compressed = int_field(raw, header, 3)
+        if compressed is None:
             # a negative compressed_page_size would walk pos BACKWARD —
             # an unterminating loop on corrupt input (round-16 sweep)
-            raise _ISE("negative page size during page walk")
-        total_size = (payload - pos) + compressed
-        if page_type == 0:  # DATA_PAGE v1
-            dph_span = _span_get(header, 5)
+            raise InvalidSelectionError("negative page size during page walk")
+        if page_type in _DATA_PAGES:
+            dph_fid, dph_name, rows_fid = _DATA_PAGES[page_type]
+            dph_span = _span_get(header, dph_fid)
             if dph_span is None:
-                raise _ISE("v1 data page without DataPageHeader")
+                raise InvalidSelectionError(f"data page without {dph_name}")
             dph, _ = _struct_field_spans(raw, dph_span[1])
-            nv = _span_get(dph, 1)
-            rows = _decode_value(raw, nv[1], nv[0])[0]
-            pages.append((start + pos, total_size, rows))
-        elif page_type == 3:  # DATA_PAGE_V2
-            dph_span = _span_get(header, 8)
-            if dph_span is None:
-                raise _ISE("v2 data page without DataPageHeaderV2")
-            dph, _ = _struct_field_spans(raw, dph_span[1])
-            nr = _span_get(dph, 3)
-            rows = _decode_value(raw, nr[1], nr[0])[0]
-            pages.append((start + pos, total_size, rows))
-        if pages and not (
-            isinstance(pages[-1][2], int) and pages[-1][2] >= 0
-        ):
-            raise _ISE("negative row count during page walk")
+            rows = int_field(raw, dph, rows_fid)
+            if rows is None:  # absent, negative or not an integer
+                raise InvalidSelectionError(
+                    f"{dph_name} without a row count during page walk"
+                )
+            pages.append((start + pos, (payload - pos) + compressed, rows))
         pos = payload + compressed
     if pos != len(raw):
-        raise _ISE("page walk overran the column chunk")
+        raise InvalidSelectionError("page walk overran the column chunk")
     return pages
 
 
@@ -682,13 +688,13 @@ def add_page_index(path: str, columns: list[str] | None = None) -> int:
     (ColumnIndex + OffsetIndex) for ``columns`` (default: every leaf
     column), in place: the structs append after the data and
     ``ColumnChunk.column_index_offset/length`` /
-    ``offset_index_offset/length`` splice into the footer — the same
-    memcpy footer surgery as :func:`bloomprune.add_bloom_filters`.
-    Files stay fully standard: parquet-mr (Spark) applies its OWN
-    page-level filtering over the enriched file, and every
-    :mod:`pageprune` tier probes it.  Chunks that already carry a
-    ColumnIndex are skipped.  Returns the number of (row group, column)
-    chunks enriched.
+    ``offset_index_offset/length`` (fields 4-7) are set in each enriched
+    chunk by ``footer_splice._footer_surgery``, the memcpy footer surgery
+    :func:`bloomprune.add_bloom_filters` shares.  Files stay fully
+    standard: parquet-mr (Spark) applies its OWN page-level filtering
+    over the enriched file, and every :mod:`pageprune` tier probes it.
+    Chunks that already carry a ColumnIndex are skipped.  Returns the
+    number of (row group, column) chunks enriched.
 
     Exists for data ALREADY at rest: pyarrow only writes page indexes
     at write time (``write_page_index=True``), so a 100 TB catalog
@@ -696,187 +702,115 @@ def add_page_index(path: str, columns: list[str] | None = None) -> int:
     Per-page stats come from one in-memory decode of each enriched
     column (the same read any index build performs); page boundaries
     and sizes come from the page headers alone."""
-    import os
-
     import pyarrow.parquet as pq
 
-    from palletjack_spark.errors import InvalidSelectionError as _ISE
-    from palletjack_spark.index.footer_splice import (
-        _encode_field_header,
-        _encode_value,
-        _write_zigzag,
-    )
-
     footer = read_footer_bytes(path)
-    file_size = os.path.getsize(path)
-    footer_start = file_size - 8 - len(footer)
-    pf = pq.ParquetFile(path)
-    md = pf.metadata
-    if md.num_row_groups == 0:
-        return 0  # an empty part file has nothing to enrich
-    names = [
-        md.row_group(0).column(j).path_in_schema
-        for j in range(md.num_columns)
-    ]
-    if columns is None:
-        columns = [
-            n
-            for j, n in enumerate(names)
-            if pf.schema.column(j).max_repetition_level == 0
-            and md.row_group(0).column(j).physical_type in (
-                "INT32", "INT64", "FLOAT", "DOUBLE", "BYTE_ARRAY",
-            )
+    footer_start = os.path.getsize(path) - 8 - len(footer)
+    # closed before the surgery replaces the file (os.replace refuses an
+    # open file on Windows)
+    with pq.ParquetFile(path) as pf:
+        md = pf.metadata
+        if md.num_row_groups == 0:
+            return 0  # an empty part file has nothing to enrich
+        names = [
+            md.row_group(0).column(j).path_in_schema
+            for j in range(md.num_columns)
         ]
-    targets = []
-    for c in columns:
-        if c not in names:
-            raise _ISE(f"Unknown column for page index: {c!r}")
-        j = names.index(c)
-        if pf.schema.column(j).max_repetition_level != 0:
-            raise _ISE(f"page index unsupported for nested column {c!r}")
-        pt = md.row_group(0).column(j).physical_type
-        if pt not in ("INT32", "INT64", "FLOAT", "DOUBLE", "BYTE_ARRAY"):
-            raise _ISE(f"page index unsupported for physical type {pt}")
-        targets.append((j, c, pt))
+        if columns is None:
+            columns = [
+                n
+                for j, n in enumerate(names)
+                if pf.schema.column(j).max_repetition_level == 0
+                and md.row_group(0).column(j).physical_type in (
+                    "INT32", "INT64", "FLOAT", "DOUBLE", "BYTE_ARRAY",
+                )
+            ]
+        targets = []
+        for c in columns:
+            if c not in names:
+                raise InvalidSelectionError(
+                    f"Unknown column for page index: {c!r}"
+                )
+            j = names.index(c)
+            if pf.schema.column(j).max_repetition_level != 0:
+                raise InvalidSelectionError(
+                    f"page index unsupported for nested column {c!r}"
+                )
+            pt = md.row_group(0).column(j).physical_type
+            if pt not in ("INT32", "INT64", "FLOAT", "DOUBLE", "BYTE_ARRAY"):
+                raise InvalidSelectionError(
+                    f"page index unsupported for physical type {pt}"
+                )
+            targets.append((j, c, pt))
 
-    # build ColumnIndex/OffsetIndex blobs per enriched chunk
-    appendix = bytearray()
-    #: (rg, col) -> [ci_rel, ci_len, oi_rel, oi_len]
-    placed: dict[tuple[int, int], list[int]] = {}
-    blobs: dict[tuple[int, int], tuple[bytes, bytes]] = {}
-    for rg_idx in range(md.num_row_groups):
-        for col_idx, col_name, pt in targets:
-            if page_index_offsets(footer, rg_idx, col_idx) is not None:
-                continue  # already enriched
-            cmeta = {
-                "dictionary_page_offset": (
-                    md.row_group(rg_idx).column(col_idx).dictionary_page_offset
-                ),
-                "data_page_offset": (
-                    md.row_group(rg_idx).column(col_idx).data_page_offset
-                ),
-                "total_compressed_size": (
-                    md.row_group(rg_idx).column(col_idx).total_compressed_size
-                ),
-            }
-            pages = _walk_data_pages(path, cmeta)
-            if sum(p[2] for p in pages) != md.row_group(rg_idx).num_rows:
-                raise _ISE("page row counts disagree with the row group")
-            vals = pf.read_row_group(rg_idx, columns=[col_name]).column(
-                0
-            ).to_pylist()
-            null_pages, mins, maxs, null_counts = [], [], [], []
-            at = 0
-            unrepresentable = False
-            for _off, _sz, rows in pages:
-                st = _page_stats(vals[at : at + rows], pt)
-                if st is None:
+        # (rg, col) -> (ColumnIndex, OffsetIndex) of each enriched chunk
+        blobs: dict[tuple[int, int], tuple[bytes, bytes]] = {}
+        for rg_idx in range(md.num_row_groups):
+            for col_idx, col_name, pt in targets:
+                if page_index_offsets(footer, rg_idx, col_idx) is not None:
+                    continue  # already enriched
+                chunk = md.row_group(rg_idx).column(col_idx)
+                pages = _walk_data_pages(path, {
+                    "dictionary_page_offset": chunk.dictionary_page_offset,
+                    "data_page_offset": chunk.data_page_offset,
+                    "total_compressed_size": chunk.total_compressed_size,
+                })
+                if sum(p[2] for p in pages) != md.row_group(rg_idx).num_rows:
+                    raise InvalidSelectionError(
+                        "page row counts disagree with the row group"
+                    )
+                vals = pf.read_row_group(rg_idx, columns=[col_name]).column(
+                    0
+                ).to_pylist()
+                stats, at = [], 0
+                for _off, _sz, rows in pages:
+                    stats.append(_page_stats(vals[at : at + rows], pt))
+                    at += rows
+                if None in stats:
                     # an all-NaN page has no honest ColumnIndex entry —
                     # skip the chunk (no evidence: every probe keeps)
-                    unrepresentable = True
-                    break
-                np_, nc, lo, hi = st
-                null_pages.append(np_)
-                null_counts.append(nc)
-                mins.append(lo)
-                maxs.append(hi)
-                at += rows
-            if unrepresentable:
-                continue
-            ci = bytearray()
-            _encode_field_header(ci, 1, 9, 0)  # null_pages list<bool>
-            _encode_value(ci, 9, (1, null_pages))
-            _encode_field_header(ci, 2, 9, 1)  # min_values list<binary>
-            _encode_value(ci, 9, (8, mins))
-            _encode_field_header(ci, 3, 9, 2)  # max_values list<binary>
-            _encode_value(ci, 9, (8, maxs))
-            _encode_field_header(ci, 4, 5, 3)  # boundary_order i32
-            _write_zigzag(ci, 0)  # UNORDERED (safe; probes don't use it)
-            _encode_field_header(ci, 5, 9, 4)  # null_counts list<i64>
-            _encode_value(ci, 9, (6, null_counts))
-            ci.append(0)  # struct STOP
-            oi = bytearray()
-            _encode_field_header(oi, 1, 9, 0)  # page_locations list<struct>
-            locs = []
-            first = 0
-            for off, sz, rows in pages:
-                locs.append(
-                    [(1, 6, off), (2, 5, sz), (3, 6, first)]
+                    continue
+                null_pages, null_counts, mins, maxs = (
+                    list(zip(*stats)) or [()] * 4
                 )
-                first += rows
-            _encode_value(oi, 9, (12, locs))
-            oi.append(0)
-            blobs[(rg_idx, col_idx)] = (bytes(ci), bytes(oi))
-    if not blobs:
-        return 0
-    # spec file ordering: all ColumnIndexes, then all OffsetIndexes
-    for key in sorted(blobs):
-        ci, _oi = blobs[key]
-        placed[key] = [len(appendix), len(ci), 0, 0]
-        appendix += ci
-    for key in sorted(blobs):
-        _ci, oi = blobs[key]
-        placed[key][2] = len(appendix)
-        placed[key][3] = len(oi)
-        appendix += oi
+                ci, oi = bytearray(), bytearray()
+                _encode_struct(ci, [
+                    (1, CT_LIST, (CT_TRUE, null_pages)),  # list<bool>
+                    (2, CT_LIST, (CT_BINARY, mins)),
+                    (3, CT_LIST, (CT_BINARY, maxs)),
+                    # boundary_order UNORDERED (safe; probes don't use it)
+                    (4, CT_I32, 0),
+                    (5, CT_LIST, (CT_I64, null_counts)),
+                ])
+                locs, first = [], 0  # PageLocation structs
+                for off, sz, rows in pages:
+                    locs.append([(1, CT_I64, off), (2, CT_I32, sz),
+                                 (3, CT_I64, first)])
+                    first += rows
+                _encode_struct(oi, [(1, CT_LIST, (CT_STRUCT, locs))])
+                blobs[(rg_idx, col_idx)] = (bytes(ci), bytes(oi))
 
-    # splice offsets into each enriched ColumnChunk (fields 4-7)
+    # spec file ordering: all ColumnIndexes, then all OffsetIndexes; each
+    # enriched ColumnChunk's fields 4-7 point at its pair
+    appendix = bytearray()
+    ci_offsets = {}
+    for key in sorted(blobs):
+        ci_offsets[key] = footer_start + len(appendix)
+        appendix += blobs[key][0]
     edits = []
-    for (rg_idx, col_idx), (ci_rel, ci_len, oi_rel, oi_len) in placed.items():
-        cc_start, cc_end, cc_fields = chunk_span(footer, rg_idx, col_idx)
-        new = bytearray()
-        prev = 0
-        emitted = False
-
-        def _emit(out, prev_fid):
-            _encode_field_header(out, 4, 6, prev_fid)  # offset_index_offset
-            _write_zigzag(out, footer_start + oi_rel)
-            _encode_field_header(out, 5, 5, 4)  # offset_index_length
-            _write_zigzag(out, oi_len)
-            _encode_field_header(out, 6, 6, 5)  # column_index_offset
-            _write_zigzag(out, footer_start + ci_rel)
-            _encode_field_header(out, 7, 5, 6)  # column_index_length
-            _write_zigzag(out, ci_len)
-            return 7
-
-        for fid, ctype, s, e in cc_fields:
-            if fid in (4, 5, 6, 7):
-                continue  # replaced (shouldn't exist: skipped above)
-            if fid > 7 and not emitted:
-                prev = _emit(new, prev)
-                emitted = True
-            _encode_field_header(new, fid, ctype, prev)
-            if ctype not in (1, 2):
-                new += footer[s:e]
-            prev = fid
-        if not emitted:
-            prev = _emit(new, prev)
-        new.append(0)  # struct STOP
-        edits.append((cc_start, cc_end, bytes(new)))
-
-    edits.sort()
-    out_footer = bytearray()
-    pos = 0
-    for s, e, rep in edits:
-        out_footer += footer[pos:s]
-        out_footer += rep
-        pos = e
-    out_footer += footer[pos:]
-
-    # crash-atomic tail replacement (temp copy + rename): safe under
-    # Spark task retries / speculative re-runs of the same file's
-    # surgery (round-12 ADVICE)
-    from palletjack_spark.index.footer_splice import atomic_tail_rewrite
-
-    atomic_tail_rewrite(
-        path,
-        footer_start,
-        bytes(appendix)
-        + bytes(out_footer)
-        + struct.pack("<I", len(out_footer))
-        + b"PAR1",
-    )
-    return len(placed)
+    for key in sorted(blobs):
+        ci, oi = blobs[key]
+        start, end, cc_fields, _meta = chunk_span(footer, *key)
+        edits.append((start, end, cc_fields, {
+            4: (CT_I64, footer_start + len(appendix)),  # offset_index_offset
+            5: (CT_I32, len(oi)),  # offset_index_length
+            6: (CT_I64, ci_offsets[key]),  # column_index_offset
+            7: (CT_I32, len(ci)),  # column_index_length
+        }))
+        appendix += oi
+    if edits:
+        _footer_surgery(path, footer_start, footer, appendix, edits)
+    return len(edits)
 
 
 def add_page_index_dataset(
@@ -886,18 +820,7 @@ def add_page_index_dataset(
     100 TB story for data at rest: every file gains envelope-gap
     pruning (ours AND parquet-mr's own page filtering) without a data
     page moving or being rewritten.  Same shape as
-    ``bloomprune.add_bloom_filters_dataset``: per-file imperative
-    footer surgery, a rare legitimate RDD use.  Returns the total
-    number of (row group, column) chunks enriched."""
-    from palletjack_spark.sources.arrow_scan import expand_paths
-
-    files = expand_paths(paths)
-    if not files:
-        return 0
-    sc = spark.sparkContext
+    ``bloomprune.add_bloom_filters_dataset``.  Returns the total number
+    of (row group, column) chunks enriched."""
     cols = list(columns) if columns is not None else None
-    return (
-        sc.parallelize(files, min(len(files), sc.defaultParallelism))
-        .map(lambda p: add_page_index(p, cols))
-        .sum()
-    )
+    return _enrich_dataset(spark, paths, lambda p: add_page_index(p, cols))

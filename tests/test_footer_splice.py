@@ -768,6 +768,55 @@ def test_cold_row_group_read_is_o_selected(tmp_path, monkeypatch):
         counts[n] = calls
     assert counts[16] == counts[128], counts
     assert counts[128]["_list_elem_spans"] == 0
+    # one skip per struct inside each kept chunk's ColumnMetaData (its
+    # statistics and two encoding_stats entries): the ColumnMetaData is
+    # walked once, in the chunk's walk, never skipped whole and walked
+    # again for the row group's sizes
+    assert counts[128]["_skip_struct_fast"] == 3 * 3, counts
+
+
+def test_copy_struct_overrides_in_place_and_inserts_in_field_order():
+    """The splice the reader and both enrichment writers share: an
+    override of a present field stays in place, an absent one is inserted
+    in field-id order, and bool fields keep their header-only form."""
+    src = bytearray()
+    fs._encode_struct(src, [
+        (1, fs.CT_I32, 7), (2, fs.CT_TRUE, True), (5, fs.CT_BINARY, b"x"),
+        (9, fs.CT_FALSE, False), (20, fs.CT_I64, -3),
+    ])
+    src = bytes(src)
+    fields, end = fs._struct_field_spans(src, 0)
+    assert end == len(src)
+    # a bool field's value is its header: an empty value span
+    assert [f for f, ct, s, e in fields if s == e] == [2, 9]
+
+    def copy(overrides) -> bytes:
+        out = bytearray()
+        fs._copy_struct(out, src, fields, overrides)
+        return bytes(out)
+
+    def encoded(struct_fields) -> bytes:
+        out = bytearray()
+        fs._encode_struct(out, struct_fields)
+        return bytes(out)
+
+    assert copy({}) == src
+    got = copy({
+        5: (fs.CT_BINARY, b"yy"),  # present: replaced in place
+        3: (fs.CT_I32, 4),  # absent: between 2 and 5
+        15: (fs.CT_I32, 8),  # absent, given out of order
+        14: (fs.CT_I64, 99),
+        9: (fs.CT_TRUE, True),  # a bool override is header-only too
+        40: (fs.CT_I16, 1),  # absent, after the last field (long form)
+        1: (fs.CT_I32, fs._Raw(bytes([22]))),  # a pre-encoded payload
+    })
+    assert got == encoded([
+        (1, fs.CT_I32, 11), (2, fs.CT_TRUE, True), (3, fs.CT_I32, 4),
+        (5, fs.CT_BINARY, b"yy"), (9, fs.CT_TRUE, True),
+        (14, fs.CT_I64, 99), (15, fs.CT_I32, 8), (20, fs.CT_I64, -3),
+        (40, fs.CT_I16, 1),
+    ])
+    assert fs._decode_value(got, 0, fs.CT_STRUCT)[1] == len(got)
 
 
 def _table_offsets(blob: bytes) -> dict:

@@ -520,6 +520,45 @@ def test_writer_spark_interop_and_bloom_composition(spark, tmp_path):
     assert df2.where(F.col("k") == 5632).count() == 1
 
 
+def test_writer_bloom_then_page_index_composition(tmp_path):
+    """The reverse composition: blooms first, then the page index, each a
+    footer surgery over the other's output.  Both probes answer, pyarrow
+    reads every row, and a second call of each writer enriches nothing."""
+    from palletjack_spark.index.bloomprune import BloomProber, add_bloom_filters
+    from palletjack_spark.index.bloomprune import bloom_offsets
+    from palletjack_spark.index.footer_splice import read_footer_bytes
+    from palletjack_spark.index.pageprune import (
+        PageProber,
+        add_page_index,
+        page_index_offsets,
+    )
+
+    path = _plain_banded(tmp_path, name="reverse.parquet")
+    assert add_bloom_filters(path, ["k", "tag"]) == 8
+    assert add_page_index(path) == 8
+    fb = read_footer_bytes(path)
+    for rg in range(4):
+        for col in range(2):  # each chunk carries both indexes
+            assert bloom_offsets(fb, rg, col) is not None
+            assert page_index_offsets(fb, rg, col) is not None
+    meta = {"physical_type": "INT64", "logical_type": "NONE"}
+    bp = BloomProber()
+    assert bp.can_match(path, 1, 0, meta, 5632) is True
+    assert bp.can_match(path, 1, 0, meta, 10**9) is False
+    pp = PageProber()
+    look = lambda n: (0, meta) if n == "k" else None  # noqa: E731
+    verdicts = [
+        pp.rg_can_match(path, rg, 4096, [("k", "=", 5632)], look)
+        for rg in range(4)
+    ]
+    assert verdicts == [False, True, False, False]
+    t = pq.read_table(path)
+    assert t.num_rows == 16 * 1024
+    assert sorted(t["k"].to_pylist()) == list(range(16 * 1024))
+    assert add_bloom_filters(path, ["k", "tag"]) == 0
+    assert add_page_index(path) == 0
+
+
 def test_writer_truncates_long_byte_arrays_soundly(tmp_path):
     """Bounds past the 64-byte window: written min is a prefix (<= true
     min), written max >= true max — stored values keep, outsiders
@@ -935,6 +974,42 @@ def test_page_walk_rejects_negative_page_size(tmp_path):
     }
     with _pytest.raises(InvalidSelectionError, match="negative page size"):
         P._walk_data_pages(path, meta)
+
+
+def test_page_walk_rejects_data_page_without_row_count(tmp_path):
+    """A data page header missing num_values (v1) or num_rows (v2) is a
+    typed error from the page walk, not a bare TypeError."""
+    import pytest as _pytest
+
+    from palletjack_spark.errors import InvalidSelectionError
+    from palletjack_spark.index import pageprune as P
+    from palletjack_spark.index.footer_splice import (
+        CT_I32,
+        CT_STRUCT,
+        _encode_struct,
+    )
+
+    payload = b"\x00" * 16
+    for page_type, dph_fid in ((0, 5), (3, 8)):  # DATA_PAGE, DATA_PAGE_V2
+        hdr = bytearray()
+        # PageHeader {type, uncompressed/compressed size, data page
+        # header holding only its encoding (field 2 in v1, 4 in v2)}
+        _encode_struct(hdr, [
+            (1, CT_I32, page_type),
+            (2, CT_I32, len(payload)),
+            (3, CT_I32, len(payload)),
+            (dph_fid, CT_STRUCT, [(2 if page_type == 0 else 4, CT_I32, 0)]),
+        ])
+        path = str(tmp_path / f"chunk{page_type}.bin")
+        with open(path, "wb") as f:
+            f.write(bytes(hdr) + payload)
+        meta = {
+            "dictionary_page_offset": None,
+            "data_page_offset": 0,
+            "total_compressed_size": len(hdr) + len(payload),
+        }
+        with _pytest.raises(InvalidSelectionError, match="row count"):
+            P._walk_data_pages(path, meta)
 
 
 def test_null_keep_expression_keeps_not_prunes(spark, tmp_path):
